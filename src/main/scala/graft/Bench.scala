@@ -479,7 +479,7 @@ object Bench {
       fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
       val cfg = streaming.CdcPipeline.Config(
         keyCols = Seq("key"), orderCols = Seq("ts_us", "event_id"),
-        opCol = "op", numBuckets = 8)
+        opCol = "op", numBuckets = Some(8))
       val tb = System.nanoTime()
       streaming.CdcPipeline.mergeBatch(
         ops.CdcQueries.flatFeedWindow(spark, sfDir, None, Some(cut)),

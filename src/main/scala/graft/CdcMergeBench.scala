@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions.{col, max, min}
   * [[graft.streaming.CdcPipeline.mergeBatch]] and report events/s plus
   * a PER-PHASE attribution of each commit's cost (via the pipeline's
   * phaseRecorder hook) — where the fixed per-commit overhead actually
-  * goes: batch materialization, the touched-bucket collect, the
-  * read-merge-write job, pointer flips, manifest append, GC.
+  * goes: manifest resolve, batch materialization, the touched-bucket
+  * collect, the read-merge-write job, schema and manifest writes, GC.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.CdcMergeBench
   *

@@ -53,16 +53,20 @@ object Materialize {
     * non-null even when its fields are null, so no row is skipped and
     * null order values rank lowest — exactly desc NULLS LAST
     * (MaterializeSpec pins the equivalence, null edges included).
+    * The aggregate's column name is chosen to differ from every input
+    * column (compared case-insensitively, as Spark resolves names), so
+    * any input schema passes through whole.
     */
   def latest(changes: DataFrame,
              keyCols: Seq[String],
              orderCols: Seq[Column]): DataFrame = {
     val cols = changes.columns.toSeq
+    val taken = cols.map(_.toLowerCase).toSet
+    val tmp = Iterator.iterate("__latest")(_ + "_").find(n => !taken(n)).get
     changes
       .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(cols.map(col): _*), struct(orderCols: _*))
-        .as("__latest"))
-      .select(cols.map(c => col("__latest").getField(c).as(c)): _*)
+      .agg(max_by(struct(cols.map(col): _*), struct(orderCols: _*)).as(tmp))
+      .select(cols.map(c => col(tmp).getField(c).as(c)): _*)
   }
 
   /** A2 — drop keys whose latest event is a delete. Must run AFTER A1. */

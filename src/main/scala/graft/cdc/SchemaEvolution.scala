@@ -1,7 +1,8 @@
 package graft.cdc
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType,
+  FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Schema-evolution validation — the registry gate the reference deploys
   * (`/root/reference/bin/mskc-connector.sh:443-445`: auto-registration
@@ -82,6 +83,25 @@ object SchemaEvolution {
       case None_    => Seq.empty
     }
     if (reasons.isEmpty) Compatible else Incompatible(reasons.distinct)
+  }
+
+  /** The narrowest type both `a` and `b` read as without loss — the
+    * promotions a parquet reader applies to files written under the
+    * narrower type: int→long, float→double, and decimal growth (integer
+    * digits and scale each the larger of the two, at most 38 digits).
+    * None when the two types do not widen into one.
+    */
+  def widerType(a: DataType, b: DataType): Option[DataType] = (a, b) match {
+    case _ if a == b => Some(a)
+    case (IntegerType, LongType) | (LongType, IntegerType) => Some(LongType)
+    case (FloatType, DoubleType) | (DoubleType, FloatType) => Some(DoubleType)
+    case (x: DecimalType, y: DecimalType) =>
+      val scale = math.max(x.scale, y.scale)
+      val digits =
+        math.max(x.precision - x.scale, y.precision - y.scale) + scale
+      if (digits <= DecimalType.MAX_PRECISION) Some(DecimalType(digits, scale))
+      else None
+    case _ => None
   }
 
   /** Merged read-schema over a version history: union of fields, newest

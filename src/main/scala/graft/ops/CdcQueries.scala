@@ -321,7 +321,7 @@ object CdcQueries extends QueryPack {
         fs.delete(new Path(statePath), true)
         val cfg = CdcPipeline.Config(keyCols = Seq("key"),
           orderCols = Seq("ts_us", "event_id"), opCol = "op",
-          numBuckets = 8)
+          numBuckets = Some(8))
         CdcPipeline.mergeBatch(
           flatFeedWindow(s, d, None, Some(cutoffUs)), statePath, cfg, 0L)
         CdcPipeline.mergeBatch(
@@ -355,7 +355,7 @@ object CdcQueries extends QueryPack {
         fs.delete(new Path(statePath), true)
         val cfg = CdcPipeline.Config(keyCols = Seq("key"),
           orderCols = Seq("ts_us", "event_id"), opCol = "op",
-          numBuckets = 8)
+          numBuckets = Some(8))
         CdcPipeline.mergeBatch(
           flatFeedWindow(s, d, None, Some(cutoffUs)), statePath, cfg, 0L)
         CdcPipeline.mergeBatch(
@@ -478,8 +478,8 @@ object CdcQueries extends QueryPack {
     // beyond every event time) and merging small files — and the store
     // must still read back as EXACTLY the latest-wins materialization
     // of the full log, which is all the oracle states. Crash-safety of
-    // the rewrite (pointer flips, never-reused dirs, expired-bucket
-    // pointer drops) is CdcPipelineSpec's job; this row proves the
+    // the rewrite (never-reused dirs, one manifest write, re-sizing) is
+    // CdcPipelineSpec's and CdcLayoutSpec's job; this row proves the
     // SEMANTICS survive the rewrite under the driver's independent eye.
     Q("cdc_compact_state",
       (s, d) => {
@@ -491,7 +491,7 @@ object CdcQueries extends QueryPack {
         fs.delete(new Path(statePath), true)
         val cfg = CdcPipeline.Config(keyCols = Seq("key"),
           orderCols = Seq("ts_us", "event_id"), opCol = "op",
-          numBuckets = 8)
+          numBuckets = Some(8))
         CdcPipeline.mergeBatch(
           flatFeedWindow(s, d, None, Some(cutoffUs)), statePath, cfg, 0L)
         CdcPipeline.mergeBatch(
@@ -653,7 +653,7 @@ object CdcQueries extends QueryPack {
         val registry = new SchemaRegistry()
         CdcPipeline.startEvolvingAvro(src, s"$base/state", s"$base/cp",
           registry, subject, s"$base/dead",
-          CdcPipeline.Config(numBuckets = parts,
+          CdcPipeline.Config(numBuckets = Some(parts),
             watermarkDelay = "90 days")).awaitTermination()
         // the truth table, asserted on the LIVE outcome: three
         // registered versions (v4 refused), quarantine non-empty

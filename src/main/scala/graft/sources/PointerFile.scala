@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem,
   Options, Path, RawLocalFileSystem}
 
 /** Tiny atomic pointer files — the shared primitive under every
-  * crash-safe commit protocol in the engine (the CDC sink's per-bucket
-  * pointers, the persisted IVF index's `_CURRENT`): write a
+  * crash-safe commit protocol in the engine (the CDC store's commit
+  * manifests, the persisted IVF index's `_CURRENT`): write a
   * uniquely-named tmp sibling, then ONE `FileContext` rename with
   * `Options.Rename.OVERWRITE`. A delete-then-rename pair would leave a
   * no-pointer window that a crash could turn into data loss; the

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.cdc.Materialize
+import graft.cdc.{Materialize, SchemaEvolution}
+import graft.sources.PointerFile
 
 /** Streaming CDC materialization — the reference's deployed data plane
   * (Debezium topic → Hudi upsert, `/root/reference/README.md:22`)
@@ -21,28 +22,44 @@ import graft.cdc.Materialize
   * SURVEY.md §7.2); the Kafka variant is the same pipeline with
   * `format("kafka")` + key/value decode and is config-only here.
   *
-  * State is a parquet table HASH-BUCKETED on the key into
-  * `Config.numBuckets` bucket directories, merged PARTITION-SCOPED: a
-  * micro-batch rewrites only the buckets its keys hash into; untouched
-  * buckets' files are not read, not rewritten, not even listed. Merge
-  * cost is therefore ∝ batch keys × (table size / numBuckets), never
-  * ∝ table size — the Hudi upsert shape (`/root/reference/README.md:22`:
-  * file groups touched by the batch are the only ones rewritten).
+  * LAYOUT. The state store is a parquet table HASH-BUCKETED on the key:
   *
-  * Commits are CRASH-SAFE: each batch writes an immutable,
-  * NEVER-REUSED `batches/b<id>-<attempt>/__bucket=<n>` directory
-  * (existing state is never modified in place — replays and
-  * fresh-checkpoint id reuse write elsewhere), then flips tiny
-  * per-bucket pointer files with an atomic overwrite-rename; committed
-  * state can never be lost mid-commit, only be a mix of per-bucket
-  * versions that the idempotent latest-wins replay converges.
-  * Every commit also appends a MANIFEST (the full bucket → dir map),
-  * giving the store a commit timeline: [[stateAsOf]] reads any commit
-  * inside the retention window ([[Config.retainVersions]]) and GC
-  * deletes only dirs outside it — which simultaneously keeps the
-  * version a concurrent reader resolved just before a flip. This is a
-  * minimal per-file-group commit timeline with time travel — the same
-  * protocol shape a table format provides at lake scale.
+  *   batches/<dir>/__bucket=<b>/  immutable data, one dir per commit,
+  *                                never reused (id + time + uuid)
+  *   meta/schema                  the running union schema (grow-only,
+  *                                types widened, never narrowed)
+  *   manifests/<seq>              one per commit: batch id, bucket
+  *                                count, row count, bucket → dir map
+  *
+  * A merge rewrites only the buckets its batch's keys hash into;
+  * untouched buckets are not read, not rewritten, not even listed — the
+  * Hudi upsert shape (file groups touched by the batch are the only ones
+  * rewritten). The BUCKET COUNT is sized from the data,
+  * [[bucketsFor]]`(rows)`, so a bucket is a healthy parquet file rather
+  * than a fixed fraction of the table: a small store is one file, whose
+  * commit reads one file and writes one. The count changes only at
+  * commits that rewrite every bucket holding data anyway: the first
+  * commit, every [[compact]], and a merge whose batch touches every
+  * data bucket when the sized count is ≥ 2× away from the current one
+  * (the hysteresis keeps a store from flapping). `Config.numBuckets`
+  * pins the count instead.
+  *
+  * COMMIT PROTOCOL (single writer): (1) write the data to a never-reused
+  * dir; (2) grow `meta/schema` if the batch added or widened a column;
+  * (3) write the next manifest with ONE atomic
+  * [[graft.sources.PointerFile]] write — the commit point; (4) GC.
+  * Readers resolve the newest manifest. A
+  * crash before (3) leaves only an unreferenced dir (collected by the
+  * next commit's GC) and a harmless superset schema; a crash after (3)
+  * leaves the new version committed with its garbage uncollected. Since
+  * one manifest carries the whole layout, a layout change is exactly
+  * as atomic as an upsert.
+  *
+  * The manifests are also the store's timeline: [[stateAsOf]] reads any
+  * commit inside the retention window ([[Config.retainVersions]]), GC
+  * deletes only dirs outside it — which also keeps the version a
+  * concurrent reader resolved just before a commit — and [[describe]]
+  * lists the retained commits as a DataFrame.
   */
 object CdcPipeline {
 
@@ -52,7 +69,10 @@ object CdcPipeline {
       orderCols: Seq[String] = Seq("ts_us", "event_id"),
       opCol: String = "op",
       watermarkDelay: String = "10 minutes",
-      numBuckets: Int = 32,
+      // None sizes the bucket count from the data ([[bucketsFor]]);
+      // Some(n) pins it — a store laid out under another count fails
+      // loudly instead of splitting keys across two layouts
+      numBuckets: Option[Int] = None,
       // how many recent COMMITS stay fully readable: every bucket dir
       // referenced by the last `retainVersions` manifests survives GC,
       // giving bounded TIME TRAVEL ([[stateAsOf]]) and the
@@ -60,17 +80,42 @@ object CdcPipeline {
       // reader resolved just before a commit)
       retainVersions: Int = 2)
 
-  /** Deterministic bucket of a row's key — the unit of merge I/O. */
-  private[streaming] def bucketOf(cfg: Config): org.apache.spark.sql.Column =
-    pmod(xxhash64(cfg.keyCols.map(col): _*), lit(cfg.numBuckets))
-      .cast("int")
+  /** Rows per bucket: ~1M CDC rows make a parquet file of tens to a
+    * hundred MB — one healthy file — the same target as
+    * [[graft.text.Dedup.BucketRows]].
+    */
+  val RowsPerBucket: Long = 1000000L
+
+  /** Bucket count for a store holding `rows` rows (tombstones included). */
+  def bucketsFor(rows: Long): Int = bucketsFor(rows, RowsPerBucket)
+
+  private[streaming] def bucketsFor(rows: Long, perBucket: Long): Int =
+    math.max(1L, math.min(4096L, (rows + perBucket - 1) / perBucket)).toInt
+
+  /** Deterministic bucket of a row's key under modulus `buckets` — the
+    * unit of merge I/O.
+    */
+  private[streaming] def bucketOf(keyCols: Seq[String], buckets: Int)
+      : org.apache.spark.sql.Column =
+    pmod(xxhash64(keyCols.map(col): _*), lit(buckets)).cast("int")
+
+  /** A batch column whose type cannot be widened to (or from) the type
+    * the store holds for it: raised before any data is written.
+    */
+  final class TypeDriftException(val column: String, val stored: DataType,
+                                 val incoming: DataType)
+      extends IllegalArgumentException(
+        s"column '$column' is stored as ${stored.simpleString} but the " +
+          s"batch carries ${incoming.simpleString}; only int→long, " +
+          "float→double and decimal growth widen a stored column " +
+          "(state untouched)")
 
   /** Optional per-phase wall-clock recorder for [[mergeBatch]] — set
-    * only by `graft.CdcMergeBench` to attribute where a commit's fixed
-    * cost goes (batch materialization vs merge write vs pointer/
-    * manifest/GC filesystem work). None in production: the `timed`
-    * wrapper is a nanoTime pair and a None check per PHASE (≤6 per
-    * commit), not per row.
+    * by `graft.CdcMergeBench` to attribute where a commit's fixed cost
+    * goes, and by specs to kill a writer right after a phase (manifest resolve, batch materialization, merge write,
+    * schema/manifest/GC filesystem work). None in production: the
+    * `timed` wrapper is a nanoTime pair and a None check per PHASE (≤8
+    * per commit), not per row.
     */
   @volatile private[graft] var phaseRecorder
       : Option[(String, Double) => Unit] = None
@@ -122,26 +167,6 @@ object CdcPipeline {
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
-  }
-
-  /** Guard the bucket layout: `numBuckets` is the modulus every bucket
-    * path was derived under — merging with a different value would
-    * recompute `bucketOf` under the new modulus while untouched buckets
-    * keep the old layout, leaving a key live in two bucket dirs that
-    * latest-wins never reconciles. The first commit persists the value
-    * in a tiny metadata pointer; every later merge/compact must match.
-    */
-  private def checkBucketLayout(fs: org.apache.hadoop.fs.FileSystem,
-                                statePath: String, cfg: Config): Unit = {
-    val meta = new Path(s"$statePath/meta/numBuckets")
-    if (fs.exists(meta)) {
-      val persisted = graft.sources.PointerFile.read(fs, meta).toInt
-      require(persisted == cfg.numBuckets,
-        s"state at $statePath was laid out with numBuckets=$persisted; " +
-          s"merging with numBuckets=${cfg.numBuckets} would split keys " +
-          "across incompatible bucket layouts")
-    } else graft.sources.PointerFile.write(fs, meta,
-      cfg.numBuckets.toString)
   }
 
   /** SCHEMA GATE AT THE SINK — [[mergeBatch]] behind the registry's
@@ -402,7 +427,9 @@ object CdcPipeline {
   /** One micro-batch, partition-scoped: reduce the batch to
     * latest-per-key, read ONLY the state buckets the batch's keys hash
     * into (pure path selection), merge LATEST-WINS BY EVENT TIME, and
-    * commit ONLY those buckets (immutable batch dir + pointer flips).
+    * commit ONLY those buckets (a new data dir + one manifest) — or,
+    * when the batch rewrites every data bucket anyway and the store
+    * has outgrown its bucket count, all of it under the re-sized count.
     *
     * The merge is `latest(state ∪ batch)` per key — not a blind
     * replace — so it converges under ANY replay order: re-delivering an
@@ -415,7 +442,12 @@ object CdcPipeline {
     * deletes.)
     */
   def mergeBatch(batch: DataFrame, statePath: String, cfg: Config,
-                 batchId: Long): Unit = {
+                 batchId: Long): Unit =
+    mergeBatch(batch, statePath, cfg, batchId, RowsPerBucket)
+
+  private[streaming] def mergeBatch(batch: DataFrame, statePath: String,
+                                    cfg: Config, batchId: Long,
+                                    perBucket: Long): Unit = {
     // drift tolerance (below) is for PAYLOAD columns only: losing a
     // key, ordering, or op column must fail loudly here — nulled keys
     // would collapse a whole batch into one row and nulled order
@@ -434,329 +466,210 @@ object CdcPipeline {
     // materializes lazily inside the touched-bucket collect job and is
     // reused by the merge write; foreachBatch batch sources are
     // offset-pinned, so an eviction-forced recompute is deterministic.
-    val latest = Materialize.latest(batch, cfg.keyCols, order)
-      .withColumn("__bucket", bucketOf(cfg))
-      .cache()
+    val latest = Materialize.latest(batch, cfg.keyCols, order).cache()
     try {
-      mergeLatest(latest, statePath, cfg, batchId)
+      mergeLatest(latest, statePath, cfg, batchId, perBucket)
     } finally { latest.unpersist(blocking = false); () }
   }
 
   private def mergeLatest(latest: DataFrame, statePath: String,
-                          cfg: Config, batchId: Long): Unit = {
+                          cfg: Config, batchId: Long,
+                          perBucket: Long): Unit = {
     val spark = latest.sparkSession
-    val order = cfg.orderCols.map(col)
-    // touched-bucket list: ≤ numBuckets ints, driver-side by design.
-    // This collect doubles as the empty-batch probe: the pre-r10 code
-    // paid a SEPARATE batch.isEmpty job on every commit before doing
-    // anything — folding it here saves one scheduler round trip per
-    // commit on the path that matters (non-empty batches), and an
-    // empty batch still costs exactly one cheap job.
-    val touched = timed("touched_collect")(
-      latest.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted)
-    if (touched.isEmpty) return
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    checkBucketLayout(fs, statePath, cfg)
-    val ptrs = readPointers(fs, statePath)
-    val statePaths = touched.flatMap(b =>
-      ptrs.get(b).map(v => bucketPath(statePath, v, b)))
-    // the store's persisted union schema, read ONCE per commit (it
-    // also feeds the grow-only persist below — r14 re-read it there,
-    // one extra FS round trip per commit)
-    val metaSchema = readMetaSchema(fs, statePath)
-    // Pre-r14 migration fallback (ADVICE r14): no meta/schema yet —
-    // run the one-time footer merge over ALL pointed bucket dirs, not
-    // just the touched ones: a drifted column living only in untouched
-    // buckets would otherwise be missing from the union this commit
-    // persists, and later merges of those buckets under the too-narrow
-    // explicit schema would silently null-and-drop it. One distributed
-    // footer pass, paid exactly once per store lifetime (the persist
-    // below upgrades the store).
-    val inferredSchema: Option[StructType] =
-      if (metaSchema.nonEmpty || ptrs.isEmpty) None
+    val fs = fsOf(spark, statePath)
+    val head = timed("resolve")(newestManifest(fs, statePath))
+    head.foreach(requireLayout(statePath, _, cfg))
+    val modulus = head.map(_.buckets).orElse(cfg.numBuckets).getOrElse(1)
+    // per-bucket row counts of the batch under the CURRENT modulus: ≤
+    // buckets rows, driver-side by design. The one job materializes the
+    // cached `latest`, doubles as the empty-batch probe, and its total
+    // sizes a fresh store — sizing adds no job.
+    val counts = timed("touched_collect")(
+      latest.groupBy(bucketOf(cfg.keyCols, modulus).as("b")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    if (counts.isEmpty) return
+    val touched = counts.keys.toSeq.sorted
+    val buckets = cfg.numBuckets.getOrElse(head match {
+      case None => bucketsFor(counts.values.sum, perBucket)
+      case Some(m) if m.dirs.keySet.subsetOf(counts.keySet) =>
+        // every bucket holding data is rewritten anyway, so re-sizing
+        // costs nothing extra — but only when ≥ 2× off, so a store
+        // near a size boundary keeps its layout. The row estimate
+        // assumes every batch key is new (an upper bound).
+        val target = bucketsFor(m.rows + counts.values.sum, perBucket)
+        if (target >= 2 * m.buckets || 2 * target <= m.buckets) target
+        else m.buckets
+      case Some(m) => m.buckets
+    })
+    // a new modulus rewrites every bucket: all of state is read (the
+    // batch covered every data bucket) and no old dir stays referenced
+    val relayout = buckets != modulus
+    val stored = head.map(_ => metaSchema(fs, statePath))
+    // the store's union schema grown by this batch: new columns
+    // appended, widened types widened, incompatible types refused here —
+    // before any data is written. Columns are stored nullable: file
+    // sources read everything nullable, so equality with the stored
+    // schema is stable and reads never assert a non-null a drifted file
+    // can't honor
+    val schema = grow(stored.getOrElse(new StructType()), latest.schema)
+    val readPaths = head.toSeq.flatMap(m =>
+      touched.flatMap(b => m.dirs.get(b).map(bucketPath(statePath, _, b))))
+    val readObs = Observation()
+    val writeObs = Observation()
+    val merged =
+      if (readPaths.isEmpty) latest
       else {
-        val allPaths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-          bucketPath(statePath, v, b)
-        }
-        Some(spark.read.option("mergeSchema", "true")
-          .parquet(allPaths: _*).schema)
-      }
-    val merged: DataFrame =
-      if (statePaths.nonEmpty) {
         // state's bucket is recomputed from the key (deterministic) —
         // files never store it; I/O scoping is pure path selection.
-        // Pointed-at bucket dirs can span batches written under
-        // DIFFERENT schemas after a drift; the running union schema is
-        // persisted in meta/schema at every commit (r14), so the read
-        // is explicit-schema — files missing a drifted column null it,
-        // exactly the footer-merge union, WITHOUT the per-commit
-        // distributed footer-inference job mergeSchema ran (at lake
-        // scale that job re-reads every live state footer per commit —
-        // a metadata storm the commit log exists to avoid, guide §6).
-        // Pre-r14 stores (no meta/schema yet) use the store-wide
-        // inferred union above; this commit then persists it.
-        val state = (metaSchema.orElse(inferredSchema) match {
-          case Some(sch) => spark.read.schema(sch)
-          case None => spark.read.option("mergeSchema", "true")
-        }).parquet(statePaths.toSeq: _*)
-          .withColumn("__bucket", bucketOf(cfg))
+        // The read is explicit-schema under the union: files written
+        // before a drift null the columns they lack and read narrower
+        // types widened, with no per-commit footer-inference job.
+        val state = spark.read.schema(schema).parquet(readPaths: _*)
+          .observe(readObs, count(lit(1)))
         // allowMissingColumns = SCHEMA DRIFT TOLERANCE: a batch that
-        // ADDS a column keeps it (state rows read null until touched,
-        // Debezium's missing-field semantics); a batch that DROPS one
-        // nulls it on its own rows instead of failing the merge.
+        // DROPS a column nulls it on its own rows instead of failing; a
+        // batch column narrower than the union widens in the union
         Materialize.latest(
           state.unionByName(latest, allowMissingColumns = true),
-          cfg.keyCols, order)
-      } else latest
-    // COMMIT PROTOCOL (crash-safe, single-writer):
-    //  1. write the merged touched buckets to a NEVER-REUSED dir (the
-    //     attempt suffix makes replays and fresh-checkpoint id reuse
-    //     write elsewhere — live pointers can keep referencing old dirs,
-    //     nothing is ever overwritten in place);
-    //  2. flip each touched bucket's pointer file (atomic overwrite
-    //     rename per bucket). A crash mid-flips leaves every bucket on
-    //     a COMMITTED version (some old, some new); replaying the batch
-    //     converges because the merge is latest-wins idempotent;
-    //  3. GC bucket dirs no pointer references (crash before GC only
-    //     leaves orphans, collected by the next merge).
+          cfg.keyCols, cfg.orderCols.map(col))
+      }
     val outDir = uniqueDir("b", batchId)
+    val (parts, allowed) =
+      if (relayout) (buckets, 0 until buckets) else (touched.size, touched)
     // co-locate each bucket before the partitioned write: without this,
-    // every shuffle partition holds rows of every touched bucket and
-    // partitionBy fans out up to (partitions × buckets) small files per
-    // batch — the classic small-file explosion. One exchange on the
-    // write column keeps it to one file group per touched bucket with
-    // full-size row groups. The EXPLICIT partition count (= touched
-    // buckets, never the session's shuffle.partitions) keeps the write
-    // stage at one task per touched bucket — inside a streaming
-    // foreachBatch AQE is disabled for stateful queries, so without
-    // the count a small batch paid shuffle.partitions near-empty write
-    // tasks per commit (pure scheduler overhead at high commit rates).
+    // every shuffle partition holds rows of every bucket and partitionBy
+    // fans out up to (partitions × buckets) small files per batch. The
+    // EXPLICIT partition count keeps the write stage at one task per
+    // written bucket — inside a streaming foreachBatch AQE is disabled
+    // for stateful queries, so without it a small batch paid
+    // shuffle.partitions near-empty write tasks per commit.
     timed("merge_write")(
-      merged.repartition(touched.length, col("__bucket")).write
+      merged.observe(writeObs, count(lit(1)))
+        .withColumn("__bucket", bucketOf(cfg.keyCols, buckets))
+        .repartition(parts, col("__bucket")).write
         .partitionBy("__bucket")
         .mode("overwrite")
         .parquet(s"$statePath/batches/$outDir"))
+    // rows after = rows before − rows read + rows written
+    val rowsRead = if (readPaths.isEmpty) 0L else observed(readObs)
+    val kept =
+      if (relayout) Map.empty[Int, String]
+      else head.map(_.dirs).getOrElse(Map.empty[Int, String])
+    commit(fs, statePath, cfg, head, outDir, allowed.toSet, kept,
+      batchId = batchId, buckets = buckets,
+      rows = head.fold(0L)(_.rows) - rowsRead + observed(writeObs),
+      newSchema = Some(schema).filterNot(stored.contains))
+  }
+
+  /** Steps 2–4 of the commit protocol, once the data dir has landed:
+    * guard, grow `meta/schema`, write the manifest (the commit point),
+    * GC. `kept` is the part of the previous layout this commit leaves
+    * in place; the buckets written to `outDir` replace their entries.
+    */
+  private def commit(fs: FileSystem, statePath: String, cfg: Config,
+                     head: Option[Manifest], outDir: String,
+                     allowed: Set[Int], kept: Map[Int, String],
+                     batchId: Long, buckets: Int, rows: Long,
+                     newSchema: Option[StructType]): Unit = {
     // DETERMINISM GUARD (ADVICE r10): `latest` is cache()d, not
     // checkpointed — an eviction-forced recompute between the
-    // touched-bucket collect above and the write is only safe if the
-    // input batch is replayable (foreachBatch sources are offset-
-    // pinned; mergeBatch is also a public API callers can feed
-    // anything). If a nondeterministic recompute emitted rows in
-    // buckets ABSENT from `touched`, their pointers would never flip
-    // and the rows would be silently lost. One listStatus turns that
-    // silent loss into a loud failure BEFORE any pointer moves: the
-    // crash leaves only an unreferenced batch dir (GC'd later), state
-    // intact — the same fail-stop localCheckpoint gave, without its
-    // per-commit write-everything job.
-    timed("bucket_guard") {
-      val touchedSet = touched.toSet
-      val written = fs.listStatus(
-          new Path(s"$statePath/batches/$outDir"))
+    // touched-bucket collect and the write is only safe if the input
+    // batch is replayable (foreachBatch sources are offset-pinned;
+    // mergeBatch is also a public API callers can feed anything). If a
+    // nondeterministic recompute emitted rows in buckets ABSENT from
+    // the touched set, no manifest would reference them and the rows
+    // would be silently lost. One listStatus turns that into a loud
+    // failure BEFORE the manifest: the crash leaves only an
+    // unreferenced batch dir (GC'd later), state intact.
+    val written = timed("bucket_guard") {
+      val w = fs.listStatus(new Path(s"$statePath/batches/$outDir"))
         .map(_.getPath.getName)
         .filter(_.startsWith("__bucket="))
-        .map(_.stripPrefix("__bucket=").toInt)
-      val stray = written.filterNot(touchedSet)
+        .map(_.stripPrefix("__bucket=").toInt).toSeq
+      val stray = w.filterNot(allowed)
       require(stray.isEmpty,
         s"non-deterministic batch: write produced bucket(s) " +
           s"${stray.sorted.mkString(",")} outside the touched set " +
-          s"${touched.mkString(",")} — the input to mergeBatch must be " +
-          "replayable (offset-pinned source or checkpointed DataFrame); " +
-          "state is untouched, the orphan batch dir will be GC'd")
+          s"${allowed.toSeq.sorted.mkString(",")} — the input to " +
+          "mergeBatch must be replayable (offset-pinned source or " +
+          "checkpointed DataFrame); state is untouched, the orphan " +
+          "batch dir will be GC'd")
+      w
     }
-    // persist the running union schema BEFORE any pointer moves: a
-    // crash in between leaves meta a (harmless) superset — the next
-    // read nulls the extra columns, the same allowMissingColumns
-    // semantics the merge itself applies. Skipped when unchanged (the
-    // no-drift steady state), so it costs one pointer write per DRIFT,
-    // not per commit.
-    timed("meta_schema") {
-      // nullable-normalized: file sources read everything nullable, so
-      // equality against the stored schema is stable and the read-side
-      // schema never asserts a non-null a drifted file can't honor
-      val outSchema = org.apache.spark.sql.types.StructType(
-        merged.schema.filterNot(_.name == "__bucket")
-          .map(_.copy(nullable = true)))
-      // GROW-ONLY (ADVICE r14): when every touched bucket is fresh,
-      // merged = latest and outSchema is the batch-only schema — a
-      // batch missing a drifted column that lives on unwritten buckets
-      // must not SHRINK the stored union (later explicit-schema reads
-      // of those buckets would silently null-and-lose the column).
-      // Union with the stored schema by name, keeping the stored
-      // fields' types; write only when the union gains fields.
-      val stored = metaSchema.orElse(inferredSchema.map(s =>
-        org.apache.spark.sql.types.StructType(
-          s.map(_.copy(nullable = true)))))
-      val grown = stored match {
-        case Some(old) =>
-          val have = old.fieldNames.toSet
-          org.apache.spark.sql.types.StructType(
-            old.fields ++ outSchema.fields.filterNot(f => have(f.name)))
-        case None => outSchema
-      }
-      // write when the union gained fields — or when no meta/schema
-      // file exists yet (fresh store, or the one-time migration: the
-      // inferred fallback must PERSIST or every commit re-pays the
-      // store-wide footer pass)
-      if (metaSchema.isEmpty || !stored.contains(grown))
-        graft.sources.PointerFile.write(fs,
-          new Path(s"$statePath/meta/schema"), grown.json)
-    }
-    timed("ptr_flips")(
-      touched.foreach(b => writePointer(fs, statePath, b, outDir)))
-    timed("manifest")(
-      writeManifest(fs, statePath, batchId,
-        ptrs ++ touched.map(_ -> outDir)))
-    timed("gc")(
-      gcUnreferenced(fs, statePath, cfg.retainVersions))
+    // a crash between this and the manifest leaves meta a harmless
+    // superset: readers null the extra columns and widen old files,
+    // the same semantics the merge itself applies
+    newSchema.foreach(s => timed("meta_schema")(
+      PointerFile.write(fs, new Path(s"$statePath/meta/schema"), s.json)))
+    val m = Manifest(head.fold(0L)(_.seq + 1), batchId, buckets, rows,
+      kept ++ written.map(_ -> outDir))
+    timed("manifest")(writeManifest(fs, statePath, m))
+    timed("gc")(gc(fs, statePath, cfg.retainVersions, head.toSeq :+ m))
   }
 
   /** Read the current materialized state (live rows only — retained
     * tombstones are internal merge state), if any batch has committed.
+    * Resolves the newest manifest eagerly and scans lazily: the dirs it
+    * resolved stay on disk for `retainVersions` commits.
     */
   def currentState(spark: SparkSession, statePath: String,
                    opCol: String = "op"): Option[DataFrame] = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val ptrs = readPointers(fs, statePath)
-    if (ptrs.isEmpty) None
-    else {
-      val paths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-        bucketPath(statePath, v, b)
-      }
-      // bucket dirs may span batches with drifted schemas — union them
-      val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      // null-safe: a null op (possible after payload drift or mixed
-      // old-schema buckets) is NOT a delete — `=!=` would three-value
-      // to NULL and silently hide the row (same trap compact() avoids)
-      Some(if (df.columns.contains(opCol))
-             df.filter(!(col(opCol) <=> "d"))
-           else df)
-    }
+    val fs = fsOf(spark, statePath)
+    newestManifest(fs, statePath).filter(_.dirs.nonEmpty)
+      .map(m => live(scan(spark, fs, statePath, m.dirs), opCol))
   }
 
-  /** Compaction: rewrite every live bucket, dropping tombstones whose
-    * event time is older than `horizonUs` — the bounded-retention pass
-    * the merge protocol assumes (a tombstone only needs to outlive the
-    * replay horizon; Kafka compacted-topic delete retention). Uses the
-    * SAME commit protocol as [[mergeBatch]] (immutable batch dir +
-    * per-bucket pointer flips), so it is crash-safe and can run between
-    * any two merges. Live rows and still-needed tombstones are
-    * byte-for-byte re-laid-out (small files merge as a side effect).
+  /** Compaction: rewrite every bucket, dropping tombstones whose event
+    * time is older than `horizonUs` — the bounded-retention pass the
+    * merge protocol assumes (a tombstone only needs to outlive the
+    * replay horizon; Kafka compacted-topic delete retention). It
+    * re-sizes the bucket count from the exact surviving row count (one
+    * count job, a columnar scan of the op and order columns) and
+    * commits through the SAME protocol as [[mergeBatch]], so it is
+    * crash-safe and can run between any two merges. Live rows and
+    * still-needed tombstones are re-laid-out unchanged.
     */
   def compact(spark: SparkSession, statePath: String, cfg: Config,
-              horizonUs: Long, batchId: Long): Unit = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val ptrs = readPointers(fs, statePath)
-    if (ptrs.isEmpty) return
-    checkBucketLayout(fs, statePath, cfg)
-    val paths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-      bucketPath(statePath, v, b)
+              horizonUs: Long, batchId: Long): Unit =
+    compact(spark, statePath, cfg, horizonUs, batchId, RowsPerBucket)
+
+  private[streaming] def compact(spark: SparkSession, statePath: String,
+                                 cfg: Config, horizonUs: Long,
+                                 batchId: Long, perBucket: Long): Unit = {
+    val fs = fsOf(spark, statePath)
+    val head = newestManifest(fs, statePath) match {
+      case Some(m) if m.dirs.nonEmpty => m
+      case _ => return
     }
+    requireLayout(statePath, head, cfg)
     val tsCol = col(cfg.orderCols.head)
-    // never-reused dir: a retried compact (same id) or a later merge
-    // batch must not overwrite a dir live pointers still reference
-    val outDir = uniqueDir("c", batchId)
     // null-safe retention: a tombstone with UNKNOWN event time (null
     // ts) must be kept — a three-valued `op != d || ts >= horizon`
     // would evaluate NULL and silently drop it, re-enabling the
     // resurrection this retention exists to prevent
-    val compacted = spark.read.option("mergeSchema", "true")
-      .parquet(paths: _*)
+    val kept = scan(spark, fs, statePath, head.dirs)
       .filter(!(col(cfg.opCol) <=> "d" &&
         coalesce(tsCol < horizonUs, lit(false))))
-      .withColumn("__bucket", bucketOf(cfg))
-    compacted.write
-      .partitionBy("__bucket")
-      .mode("overwrite")
-      .parquet(s"$statePath/batches/$outDir")
-    // a fully-tombstoned-and-expired bucket writes no dir: drop its
-    // pointer so readers stop referencing it
-    val written = fs.listStatus(
-        new Path(s"$statePath/batches/$outDir"))
-      .map(_.getPath.getName)
-      .filter(_.startsWith("__bucket="))
-      .map(_.stripPrefix("__bucket=").toInt).toSet
-    ptrs.keys.foreach { b =>
-      if (written.contains(b)) writePointer(fs, statePath, b, outDir)
-      else fs.delete(new Path(s"$statePath/ptr/$b"), false)
-    }
-    writeManifest(fs, statePath, batchId,
-      ptrs.keys.filter(written.contains).map(_ -> outDir).toMap)
-    gcUnreferenced(fs, statePath, cfg.retainVersions)
-  }
-
-  /** COMMIT MANIFESTS — the state store's timeline. Every successful
-    * merge/compact appends one manifest: the FULL bucket → dir map as
-    * of that commit, under a zero-padded monotonic sequence (single
-    * writer, same assumption as the pointer protocol). Manifests are
-    * what make [[stateAsOf]] possible and what GC retention is defined
-    * over — the same two jobs a lake table format's commit log does.
-    */
-  /** The store's persisted running-union schema (`meta/schema`,
-    * StructType JSON), maintained by every merge commit since r14 —
-    * the explicit read schema that replaces per-commit footer-merge
-    * inference. Absent on pre-r14 stores (readers fall back to one
-    * mergeSchema pass, and the next commit persists the union).
-    */
-  private def readMetaSchema(fs: org.apache.hadoop.fs.FileSystem,
-                             statePath: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val p = new Path(s"$statePath/meta/schema")
-    if (!fs.exists(p)) None
-    else org.apache.spark.sql.types.DataType
-      .fromJson(graft.sources.PointerFile.read(fs, p)) match {
-      case st: org.apache.spark.sql.types.StructType => Some(st)
-      case _ => None
-    }
-  }
-
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            statePath: String, batchId: Long,
-                            ptrs: Map[Int, String]): Unit = {
-    val dir = new Path(s"$statePath/manifests")
-    fs.mkdirs(dir)
-    val seq = listManifests(fs, statePath).lastOption
-      .map(_._1 + 1).getOrElse(0L)
-    val content = (s"batchId=$batchId" +:
-      ptrs.toSeq.sortBy(_._1).map { case (b, v) => s"$b $v" })
-      .mkString("\n")
-    graft.sources.PointerFile.write(fs, new Path(dir, f"$seq%09d"),
-      content)
-  }
-
-  /** (seq, manifest path), ascending. */
-  private def listManifests(fs: org.apache.hadoop.fs.FileSystem,
-                            statePath: String): Seq[(Long, Path)] = {
-    val dir = new Path(s"$statePath/manifests")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.forall(_.isDigit))
-      .map(s => s.getPath.getName.toLong -> s.getPath)
-      .sortBy(_._1)
-  }
-
-  private def parseManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            p: Path): (Long, Map[Int, String]) = {
-    val lines = graft.sources.PointerFile.read(fs, p).split("\n")
-    val batchId = lines.head.stripPrefix("batchId=").toLong
-    val ptrs = lines.tail.filter(_.nonEmpty).map { l =>
-      val Array(b, v) = l.split(" ", 2)
-      b.toInt -> v
-    }.toMap
-    (batchId, ptrs)
+    val rows = kept.count()
+    val buckets = cfg.numBuckets.getOrElse(bucketsFor(rows, perBucket))
+    // never-reused dir: a retried compact (same id) or a later merge
+    // batch must not overwrite a dir a retained manifest references
+    val outDir = uniqueDir("c", batchId)
+    timed("compact_write")(
+      kept.withColumn("__bucket", bucketOf(cfg.keyCols, buckets))
+        .repartition(buckets, col("__bucket")).write
+        .partitionBy("__bucket")
+        .mode("overwrite")
+        .parquet(s"$statePath/batches/$outDir"))
+    // a bucket left with no rows writes no dir and leaves the manifest
+    commit(fs, statePath, cfg, Some(head), outDir, (0 until buckets).toSet,
+      kept = Map.empty, batchId = batchId, buckets = buckets, rows = rows,
+      newSchema = None)
   }
 
   /** The commit timeline: (commit sequence, batch id), oldest first. */
-  def commits(spark: SparkSession, statePath: String): Seq[(Long, Long)] = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    listManifests(fs, statePath).map { case (seq, p) =>
-      seq -> parseManifest(fs, p)._1
-    }
-  }
+  def commits(spark: SparkSession, statePath: String): Seq[(Long, Long)] =
+    manifests(fsOf(spark, statePath), statePath).map(m => m.seq -> m.batchId)
 
   /** TIME TRAVEL: the materialized state as of the commit for
     * `batchId` (its most recent commit, if ids recur). Readable for
@@ -766,28 +679,21 @@ object CdcPipeline {
     */
   def stateAsOf(spark: SparkSession, statePath: String, batchId: Long,
                 opCol: String = "op"): Option[DataFrame] = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val hit = listManifests(fs, statePath).reverse
-      .map(m => parseManifest(fs, m._2))
-      .find(_._1 == batchId)
+    val fs = fsOf(spark, statePath)
+    val all = manifests(fs, statePath)
+    val hit = all.reverse.find(_.batchId == batchId)
     require(hit.nonEmpty,
       s"no commit for batchId=$batchId at $statePath " +
-        s"(commits: ${commits(spark, statePath).map(_._2).mkString(",")})")
-    val ptrs = hit.get._2
-    if (ptrs.isEmpty) None
+        s"(commits: ${all.map(_.batchId).mkString(",")})")
+    val dirs = hit.get.dirs
+    if (dirs.isEmpty) None
     else {
-      val paths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-        bucketPath(statePath, v, b)
-      }
-      val missing = paths.filterNot(p => fs.exists(new Path(p)))
+      val missing = dataPaths(statePath, dirs)
+        .filterNot(p => fs.exists(new Path(p)))
       require(missing.isEmpty,
         s"state version for batchId=$batchId is beyond the retention " +
           s"window (retainVersions) — GC removed: ${missing.mkString(", ")}")
-      val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      Some(if (df.columns.contains(opCol))
-             df.filter(!(col(opCol) <=> "d"))
-           else df)
+      Some(live(scan(spark, fs, statePath, dirs), opCol))
     }
   }
 
@@ -796,7 +702,8 @@ object CdcPipeline {
     * to commit `toId`. A row's VERSION is its order columns (latest-
     * wins means any change advances them), so the diff is a full
     * outer join on the key comparing versions — no payload hashing,
-    * no column-set assumptions beyond key + order cols. This is what
+    * no column-set assumptions beyond key + order cols, and no
+    * assumption that both commits share a bucket layout. This is what
     * an incremental downstream consumer reads instead of re-scanning
     * state.
     */
@@ -827,30 +734,152 @@ object CdcPipeline {
         bVer.zip(cfg.orderCols).map { case (c, n) => c.as(s"to_$n") }: _*)
   }
 
-  /** bucket → batch-dir name, from the tiny per-bucket pointer files. */
-  private def readPointers(fs: org.apache.hadoop.fs.FileSystem,
-                           statePath: String): Map[Int, String] = {
-    val dir = new Path(s"$statePath/ptr")
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => !s.getPath.getName.endsWith(".tmp"))
-      .map { st =>
-        st.getPath.getName.toInt ->
-          graft.sources.PointerFile.read(fs, st.getPath)
-      }.toMap
+  /** What is in the store: one row per retained commit — every commit
+    * whose data dirs all still exist; the aged-out manifest GC keeps
+    * for diagnostics is left out — with its bucket count, row count
+    * (tombstones included), and the data files and bytes its version is
+    * made of. Built from the manifests plus one recursive listing.
+    */
+  def describe(spark: SparkSession, statePath: String): DataFrame = {
+    val fs = fsOf(spark, statePath)
+    // (dir, bucket) → (files, bytes) of the parquet data under it
+    val sizes = scala.collection.mutable.Map.empty[(String, Int), (Long, Long)]
+    val batches = new Path(s"$statePath/batches")
+    if (fs.exists(batches)) {
+      val it = fs.listFiles(batches, true)
+      while (it.hasNext) {
+        val f = it.next()
+        val bucketDir = f.getPath.getParent
+        if (!f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith(".") &&
+            bucketDir.getName.startsWith("__bucket=")) {
+          val key = (bucketDir.getParent.getName,
+            bucketDir.getName.stripPrefix("__bucket=").toInt)
+          val (n, b) = sizes.getOrElse(key, (0L, 0L))
+          sizes(key) = (n + 1, b + f.getLen)
+        }
+      }
+    }
+    val rows = manifests(fs, statePath)
+      .filter(_.dirs.forall { case (b, d) => sizes.contains((d, b)) })
+      .map { m =>
+        val fb = m.dirs.toSeq.map { case (b, d) => sizes((d, b)) }
+        (m.seq, m.batchId, m.buckets, m.rows, fb.map(_._1).sum,
+          fb.map(_._2).sum)
+      }
+    import spark.implicits._
+    rows.toDF("seq", "batch_id", "buckets", "rows", "files", "bytes")
   }
 
-  /** Atomic per-bucket pointer flip — the shared
-    * [[graft.sources.PointerFile]] primitive (write a unique tmp,
-    * ONE OVERWRITE-rename; a delete-then-rename pair would leave a
-    * no-pointer window a crash could turn into GC deleting the
-    * bucket's only data).
+  /** One commit: the full bucket → data-dir map under modulus
+    * `buckets`, and the store's row count, tombstones included.
     */
-  private def writePointer(fs: org.apache.hadoop.fs.FileSystem,
-                           statePath: String, bucket: Int,
-                           batchDir: String): Unit =
-    graft.sources.PointerFile.write(fs,
-      new Path(s"$statePath/ptr/$bucket"), batchDir)
+  private final case class Manifest(seq: Long, batchId: Long, buckets: Int,
+                                    rows: Long, dirs: Map[Int, String])
+
+  private def requireLayout(statePath: String, m: Manifest,
+                            cfg: Config): Unit =
+    cfg.numBuckets.foreach(n => require(n == m.buckets,
+      s"state at $statePath is laid out in ${m.buckets} buckets; " +
+        s"merging with numBuckets=$n would split keys across " +
+        "incompatible bucket layouts"))
+
+  private def fsOf(spark: SparkSession, statePath: String): FileSystem =
+    new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** (seq, manifest path), ascending. */
+  private def listManifests(fs: FileSystem,
+                            statePath: String): Seq[(Long, Path)] =
+    try fs.listStatus(new Path(s"$statePath/manifests")).toSeq
+      .filter(s => s.getPath.getName.forall(_.isDigit))
+      .map(s => s.getPath.getName.toLong -> s.getPath)
+      .sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  private def readManifest(fs: FileSystem, seq: Long, p: Path): Manifest = {
+    val (header, body) = PointerFile.read(fs, p).split("\n").toSeq
+      .partition(_.contains("="))
+    val h = header.map { l =>
+      val Array(k, v) = l.split("=", 2)
+      k -> v
+    }.toMap
+    require(h.contains("buckets") && h.contains("rows"),
+      s"manifest $p predates the sized bucket layout (no buckets/rows " +
+        "header); rebuild the store")
+    Manifest(seq, h("batchId").toLong, h("buckets").toInt, h("rows").toLong,
+      body.filter(_.nonEmpty).map { l =>
+        val Array(b, d) = l.split(" ", 2)
+        b.toInt -> d
+      }.toMap)
+  }
+
+  private def writeManifest(fs: FileSystem, statePath: String,
+                            m: Manifest): Unit =
+    PointerFile.write(fs, new Path(f"$statePath/manifests/${m.seq}%09d"),
+      (Seq(s"batchId=${m.batchId}", s"buckets=${m.buckets}",
+        s"rows=${m.rows}") ++
+        m.dirs.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" })
+        .mkString("\n"))
+
+  private def newestManifest(fs: FileSystem,
+                             statePath: String): Option[Manifest] =
+    listManifests(fs, statePath).lastOption
+      .map { case (s, p) => readManifest(fs, s, p) }
+
+  /** Every manifest still on disk, oldest first. */
+  private def manifests(fs: FileSystem, statePath: String): Seq[Manifest] =
+    listManifests(fs, statePath).map { case (s, p) => readManifest(fs, s, p) }
+
+  /** The store's running-union schema (`meta/schema`, StructType JSON,
+    * nullable), grown by every commit that widens it and written before
+    * the first manifest — the explicit read schema of every version.
+    */
+  private def metaSchema(fs: FileSystem, statePath: String): StructType =
+    DataType.fromJson(PointerFile.read(fs,
+      new Path(s"$statePath/meta/schema"))).asInstanceOf[StructType]
+
+  /** The data of one version under the store's union schema: files
+    * written before a drift null the columns they lack and read
+    * narrower types widened.
+    */
+  private def scan(spark: SparkSession, fs: FileSystem, statePath: String,
+                   dirs: Map[Int, String]): DataFrame =
+    spark.read.schema(metaSchema(fs, statePath))
+      .parquet(dataPaths(statePath, dirs): _*)
+
+  /** Live rows. Null-safe: a null op (possible after payload drift) is
+    * NOT a delete — `=!=` would three-value to NULL and silently hide
+    * the row (the same trap compact() avoids).
+    */
+  private def live(df: DataFrame, opCol: String): DataFrame =
+    if (df.columns.contains(opCol)) df.filter(!(col(opCol) <=> "d"))
+    else df
+
+  /** `stored` grown by a batch's schema. GROW-ONLY (ADVICE r14): columns
+    * the batch lacks keep their place and type (a batch missing a
+    * drifted column must not shrink the union later reads depend on);
+    * new columns are appended; a column the batch carries with another
+    * type takes the wider of the two (int→long, float→double, decimal
+    * growth — [[graft.cdc.SchemaEvolution.widerType]]); any other type
+    * change is a [[TypeDriftException]].
+    */
+  private def grow(stored: StructType, batch: StructType): StructType = {
+    val incoming = batch.fields.map(f => f.name -> f.dataType).toMap
+    val widened = stored.fields.map { f =>
+      incoming.get(f.name).fold(f) { t =>
+        SchemaEvolution.widerType(f.dataType, t)
+          .fold(throw new TypeDriftException(f.name, f.dataType, t))(w =>
+            f.copy(dataType = w))
+      }
+    }
+    val have = stored.fieldNames.toSet
+    StructType(widened ++
+      batch.fields.filterNot(f => have(f.name)).map(_.copy(nullable = true)))
+  }
+
+  private def observed(o: Observation): Long =
+    scala.concurrent.Await.result(o.future,
+      scala.concurrent.duration.Duration(1, "minute")).getLong(0)
 
   /** Never-reused output dir name: id + monotonic attempt stamp. */
   private def uniqueDir(prefix: String, batchId: Long): String =
@@ -862,86 +891,43 @@ object CdcPipeline {
                          bucket: Int): String =
     s"$statePath/batches/$version/__bucket=$bucket"
 
-  /** Write-time millis embedded in a [[uniqueDir]] name (`p<id>-<ms>-
-    * <uuid>`); 0 for anything unparseable so unknown dirs sort oldest.
-    */
-  private def dirMillis(name: String): Long = {
-    val parts = name.split("-")
-    if (parts.length >= 2)
-      try parts(1).toLong catch { case _: NumberFormatException => 0L }
-    else 0L
-  }
+  private def dataPaths(statePath: String,
+                        dirs: Map[Int, String]): Seq[String] =
+    dirs.toSeq.sortBy(_._1).map { case (b, d) => bucketPath(statePath, d, b) }
 
-  /** Delete bucket dirs outside the retention window: every
-    * (bucket, dir) referenced by the LAST `retain` MANIFESTS — plus
-    * current pointers, plus (for states predating manifests) each
-    * bucket's most recently superseded version — survives; everything
-    * older goes, then-empty batch dirs with it. Retention ≥ 2 also
-    * covers the concurrent-reader race ([[currentState]] resolves
-    * pointers eagerly, scans lazily — the version a reader resolved
-    * just before a commit is still referenced by the previous
-    * manifest), the same policy [[graft.sim.Similarity.buildIvfIndex]]
-    * hard-codes as keep-2.
+  /** Delete data outside the retention window: every (bucket, dir)
+    * referenced by the LAST `retain` manifests survives; everything
+    * older goes — a dir nothing references in one delete, without
+    * listing it. Retention ≥ 2 also covers the concurrent-reader race
+    * ([[currentState]] resolves eagerly, scans lazily — the version a
+    * reader resolved just before a commit is still referenced by the
+    * previous manifest). `known` holds manifests already parsed.
     */
-  private def gcUnreferenced(fs: org.apache.hadoop.fs.FileSystem,
-                             statePath: String, retain: Int): Unit = {
-    val ptrs = readPointers(fs, statePath)
-    val batchesDir = new Path(s"$statePath/batches")
-    if (!fs.exists(batchesDir)) return
-    // retained (bucket, dir) references from the last `retain` commits
-    val retained: Set[(Int, String)] = listManifests(fs, statePath)
-      .takeRight(math.max(retain, 1))
-      .flatMap { case (_, p) =>
-        parseManifest(fs, p)._2.toSeq.map { case (b, v) => (b, v) }
-      }.toSet
-    val batchDirs = fs.listStatus(batchesDir)
-    // bucket → every (batch dir, sub path) holding a version of it
-    val byBucket = scala.collection.mutable.Map
-      .empty[Int, List[(String, Path)]]
-    batchDirs.foreach { bd =>
-      val batchName = bd.getPath.getName
-      fs.listStatus(bd.getPath)
-        .filter(_.getPath.getName.startsWith("__bucket="))
-        .foreach { sub =>
-          val b = sub.getPath.getName.stripPrefix("__bucket=").toInt
-          byBucket(b) = (batchName, sub.getPath) ::
-            byBucket.getOrElse(b, Nil)
-        }
-    }
-    byBucket.foreach { case (b, dirs) =>
-      val current = ptrs.get(b)
-      val superseded = dirs.filterNot(d => current.contains(d._1))
-      // legacy guard for states whose history predates manifests
-      val keepPrev =
-        if (superseded.isEmpty) None
-        else Some(superseded.maxBy(d => (dirMillis(d._1), d._1))._1)
-      dirs.foreach { case (name, path) =>
-        if (!current.contains(name) && !keepPrev.contains(name) &&
-            !retained((b, name)))
-          fs.delete(path, true)
+  private def gc(fs: FileSystem, statePath: String, retain: Int,
+                 known: Seq[Manifest]): Unit = {
+    val keepN = math.max(retain, 1)
+    val listed = listManifests(fs, statePath)
+    val parsed = known.map(m => m.seq -> m).toMap
+    val refs: Map[String, Set[Int]] = listed.takeRight(keepN)
+      .flatMap { case (s, p) =>
+        parsed.getOrElse(s, readManifest(fs, s, p)).dirs.toSeq
+      }
+      .groupBy(_._2).map { case (d, bs) => d -> bs.map(_._1).toSet }
+    // the commit just wrote under batches/, so it exists
+    fs.listStatus(new Path(s"$statePath/batches")).foreach { bd =>
+      refs.get(bd.getPath.getName) match {
+        case None => fs.delete(bd.getPath, true)
+        case Some(bs) => fs.listStatus(bd.getPath)
+          .filter(s => s.getPath.getName.startsWith("__bucket=") &&
+            !bs(s.getPath.getName.stripPrefix("__bucket=").toInt))
+          .foreach(s => fs.delete(s.getPath, true))
       }
     }
-    // empty = no bucket dirs remain (NB: "__bucket=" also starts
-    // with '_', so a bare underscore test would match data dirs too)
-    batchDirs.foreach { bd =>
-      if (fs.exists(bd.getPath) && !fs.listStatus(bd.getPath)
-          .exists(_.getPath.getName.startsWith("__bucket=")))
-        fs.delete(bd.getPath, true)
-    }
-    // MANIFEST GC (r10 verdict item 5, the one unbounded accretion the
-    // small-file audit found): every commit appends one manifest file
-    // and nothing ever deleted them — a months-long low-rate stream
-    // accretes one per commit forever. Commits older than the keep
-    // window are unreadable anyway (their bucket dirs are GC'd above),
-    // so their manifests are dead metadata. Keep retain + 1: the last
-    // `retain` readable commits PLUS the most recently aged-out one,
-    // whose manifest is what lets stateAsOf fail with the precise
-    // "beyond the retention window" diagnostic instead of a bare
-    // "no commit" (TimeTravelSpec pins that error). Sequence numbering
-    // survives: writeManifest derives the next seq from the NEWEST
-    // manifest, which is always kept.
-    listManifests(fs, statePath)
-      .dropRight(math.max(retain, 1) + 1)
-      .foreach { case (_, p) => fs.delete(p, false) }
+    // MANIFEST GC: keep retain + 1 — the last `retain` readable commits
+    // PLUS the most recently aged-out one, whose manifest is what lets
+    // stateAsOf fail with the precise "beyond the retention window"
+    // diagnostic instead of a bare "no commit". The next sequence
+    // number derives from the NEWEST manifest, which is always kept.
+    listed.dropRight(keepN + 1).foreach { case (_, p) => fs.delete(p, false) }
   }
 }

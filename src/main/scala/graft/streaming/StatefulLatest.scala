@@ -63,42 +63,44 @@ object StatefulLatest {
   }
 
   /** Batch-replay harness: run the stream from a parquet dir of changes
-    * to a memory sink, return the final non-deleted images.
+    * to a memory sink, and register its emissions in the CALLER's
+    * session as the temp view `queryName`.
+    *
+    * The query runs on a child session (`newSession()` carrying a copy
+    * of the caller's runtime SQL settings, e.g. the state-store
+    * provider), so the local-checkpoint file-manager choice it applies
+    * (see `QueryPack.streamSession`: the FileContext default forks
+    * readlink/chmod processes per checkpoint op on local FS) never
+    * touches the caller's conf. The memory sink keeps its rows on the
+    * driver anyway; they are re-registered in the caller's session as a
+    * local relation.
     */
   def replayToMemory(spark: SparkSession, inDir: String, queryName: String,
                      checkpoint: String): Unit = {
-    import spark.implicits._
-    val schema = implicitly[org.apache.spark.sql.Encoder[Change]].schema
-    val src = spark.readStream.schema(schema).parquet(inDir).as[Change]
-    // memory-sink temp view is session-scoped, so this stream must run
-    // in the CALLER's session (a QueryPack.streamSession child would
-    // strand the view) — apply the same local-checkpoint file-manager
-    // choice (see streamSession's scaladoc: the FileContext default
-    // forks readlink/chmod processes per checkpoint op on local FS)
-    // scoped to this one query, then restore.
-    val key = "spark.sql.streaming.checkpointFileManagerClass"
-    val prev = spark.conf.getOption(key)
-    val isLocal = new org.apache.hadoop.fs.Path(checkpoint)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getScheme == "file"
-    if (isLocal)
-      spark.conf.set(key,
+    val s2 = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) s2.conf.set(k, v)
+    }
+    if (new org.apache.hadoop.fs.Path(checkpoint)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getScheme == "file")
+      s2.conf.set("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing." +
           "FileSystemBasedCheckpointFileManager")
-    try {
-      val q = latestStream(src).writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      if (isLocal) prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    import s2.implicits._
+    val schema = implicitly[org.apache.spark.sql.Encoder[Change]].schema
+    val src = s2.readStream.schema(schema).parquet(inDir).as[Change]
+    latestStream(src).writeStream
+      .format("memory")
+      .queryName(queryName)
+      .outputMode("update")
+      .option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val emitted = s2.table(queryName)
+    spark.createDataFrame(
+      java.util.Arrays.asList(emitted.collect(): _*), emitted.schema)
+      .createOrReplaceTempView(queryName)
   }
 }

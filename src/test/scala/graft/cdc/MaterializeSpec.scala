@@ -86,4 +86,20 @@ class MaterializeSpec extends SparkSpec {
       assert(viaWindow.except(viaAgg).count() === 0)
     }
   }
+
+  test("latest passes input columns named like its internal aggregate " +
+       "(__latest, __LATEST_) through unchanged") {
+    import spark.implicits._
+    val in = Seq(("a", 1L, "x", "p"), ("a", 2L, "y", "q"), ("b", 1L, "z", "r"))
+      .toDF("key", "ts", "__latest", "__LATEST_")
+    val out = Materialize.latest(in, Seq("key"), Seq(col("ts")))
+    assert(out.columns.toSeq === in.columns.toSeq)
+    assert(out.orderBy("key").collect().map(_.toSeq).toSeq ===
+      Seq(Seq("a", 2L, "y", "q"), Seq("b", 1L, "z", "r")))
+    // as a KEY column, a fixed aggregate name would be ambiguous with it
+    val keyed = Materialize.latest(in.drop("key"), Seq("__latest"),
+      Seq(col("ts")))
+    assert(keyed.orderBy("__latest").collect().map(_.toSeq).toSeq ===
+      Seq(Seq(1L, "x", "p"), Seq(2L, "y", "q"), Seq(1L, "z", "r")))
+  }
 }

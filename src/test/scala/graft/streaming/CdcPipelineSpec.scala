@@ -115,7 +115,7 @@ class CdcPipelineSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val base = Files.createTempDirectory("cdcscope").toString
     val state = s"$base/state"
-    val cfg = CdcPipeline.Config(numBuckets = 8)
+    val cfg = CdcPipeline.Config(numBuckets = Some(8))
     val full = feed.drop("ts")
 
     // batch 1: the whole feed spreads keys across many buckets
@@ -140,7 +140,8 @@ class CdcPipelineSpec extends SparkSpec {
       .withColumn("ts_us", lit(maxTs + 1000000L))
       .withColumn("op", lit("u"))
     val touchedBucket = oneKey
-      .select(CdcPipeline.bucketOf(cfg).as("b")).head().getInt(0)
+      .select(CdcPipeline.bucketOf(cfg.keyCols, 8).as("b"))
+      .head().getInt(0)
     CdcPipeline.mergeBatch(oneKey, state, cfg, 1L)
     val after = snapshot()
 
@@ -171,7 +172,7 @@ class CdcPipelineSpec extends SparkSpec {
        "rows), a dropped column nulls instead of failing") {
     val base = Files.createTempDirectory("cdcdrift").toString
     val state = s"$base/state"
-    val cfg = CdcPipeline.Config(numBuckets = 8)
+    val cfg = CdcPipeline.Config(numBuckets = Some(8))
     val b1 = feed.filter(col("ts_us") < cutoffUs).drop("ts")
     CdcPipeline.mergeBatch(b1, state, cfg, batchId = 0)
 
@@ -226,7 +227,7 @@ class CdcPipelineSpec extends SparkSpec {
     import org.apache.spark.sql.types.{DataType, StructType}
     val base = Files.createTempDirectory("cdcgrow").toString
     val state = s"$base/state"
-    val cfg = CdcPipeline.Config(numBuckets = 8)
+    val cfg = CdcPipeline.Config(numBuckets = Some(8))
     def metaSchema: StructType = DataType.fromJson(Files.readString(
       java.nio.file.Paths.get(s"$state/meta/schema")))
       .asInstanceOf[StructType]
@@ -255,29 +256,6 @@ class CdcPipelineSpec extends SparkSpec {
     // the drifted values on the old buckets survive a later merge
     val s2 = CdcPipeline.currentState(spark, state).get
     assert(s2.filter(col("source_region") === "eu-central").count() > 0)
-  }
-
-  test("pre-r14 store (no meta/schema): the migration fallback unions " +
-       "over ALL pointed buckets, not just the touched ones") {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val base = Files.createTempDirectory("cdcfall").toString
-    val state = s"$base/state"
-    val cfg = CdcPipeline.Config(numBuckets = 8)
-    // drifted column lands in some buckets, then simulate a pre-r14
-    // store by deleting the persisted union
-    val b1 = feed.filter(col("ts_us") < cutoffUs).drop("ts")
-      .withColumn("source_region", lit("eu-central"))
-    CdcPipeline.mergeBatch(b1, state, cfg, batchId = 0)
-    Files.delete(java.nio.file.Paths.get(s"$state/meta/schema"))
-    // next batch touches a SUBSET of buckets and lacks the column; the
-    // fallback inference must still find it in the untouched buckets
-    val oneKey = feed.drop("ts").limit(1)
-    CdcPipeline.mergeBatch(oneKey, state, cfg, batchId = 1)
-    val persisted = DataType.fromJson(Files.readString(
-      java.nio.file.Paths.get(s"$state/meta/schema")))
-      .asInstanceOf[StructType]
-    assert(persisted.fieldNames.contains("source_region"),
-      "fallback union missed a drifted column in untouched buckets")
   }
 
   test("replaying an older batch after a newer one is a no-op") {
@@ -325,14 +303,17 @@ class CdcPipelineSpec extends SparkSpec {
       .select("key", "event_id", "ts_us", "value", "props")
       .collect().map(_.toString).toSet
     def tombstones(): Long = {
-      // internal state view: read all pointed bucket dirs directly
-      val ptrDir = new java.io.File(s"$state/ptr")
-      val paths = ptrDir.listFiles().filter(f => !f.getName.contains("."))
-        .map { f =>
-          val v = scala.io.Source.fromFile(f).mkString.trim
-          s"$state/batches/$v/__bucket=${f.getName}"
-        }
-      spark.read.parquet(paths.toSeq: _*).filter(col("op") === "d").count()
+      // internal state view: every bucket dir the newest manifest maps
+      val manifests = new java.io.File(s"$state/manifests").listFiles()
+        .filter(_.getName.forall(_.isDigit))
+      val newest = manifests.maxBy(_.getName.toLong)
+      val paths = scala.io.Source.fromFile(newest).getLines()
+        .filter(l => l.nonEmpty && !l.contains("="))
+        .map { l =>
+          val Array(b, v) = l.split(" ", 2)
+          s"$state/batches/$v/__bucket=$b"
+        }.toSeq
+      spark.read.parquet(paths: _*).filter(col("op") === "d").count()
     }
     val tombsBefore = tombstones()
     assert(tombsBefore > 0, "fixture needs at least one tombstone")
@@ -362,29 +343,29 @@ class CdcPipelineSpec extends SparkSpec {
     val base = Files.createTempDirectory("cdcbuckets").toString
     val state = s"$base/state"
     val full = feed.drop("ts")
-    CdcPipeline.mergeBatch(full, state, CdcPipeline.Config(numBuckets = 8),
-      0L)
+    CdcPipeline.mergeBatch(full, state,
+      CdcPipeline.Config(numBuckets = Some(8)), 0L)
     // a different modulus would recompute bucketOf against the old
     // layout → keys live in two bucket dirs; must be rejected up front
     val e = intercept[IllegalArgumentException] {
       CdcPipeline.mergeBatch(full, state,
-        CdcPipeline.Config(numBuckets = 16), 1L)
+        CdcPipeline.Config(numBuckets = Some(16)), 1L)
     }
     assert(e.getMessage.contains("numBuckets"))
     intercept[IllegalArgumentException] {
       CdcPipeline.compact(spark, state,
-        CdcPipeline.Config(numBuckets = 16), Long.MaxValue, 2L)
+        CdcPipeline.Config(numBuckets = Some(16)), Long.MaxValue, 2L)
     }
     // the original layout still merges fine
-    CdcPipeline.mergeBatch(full, state, CdcPipeline.Config(numBuckets = 8),
-      3L)
+    CdcPipeline.mergeBatch(full, state,
+      CdcPipeline.Config(numBuckets = Some(8)), 3L)
   }
 
   test("GC keeps each bucket's most recently superseded version for " +
        "in-flight readers") {
     val base = Files.createTempDirectory("cdcgc").toString
     val state = s"$base/state"
-    val cfg = CdcPipeline.Config(numBuckets = 4)
+    val cfg = CdcPipeline.Config(numBuckets = Some(4))
     val full = feed.drop("ts")
     CdcPipeline.mergeBatch(full, state, cfg, 0L)
 
@@ -467,7 +448,7 @@ class CdcPipelineSpec extends SparkSpec {
        "case-3 batch rejects with the registry verdict, state untouched") {
     val base = Files.createTempDirectory("cdcgate").toString
     val state = s"$base/state"
-    val cfg = CdcPipeline.Config(numBuckets = 8)
+    val cfg = CdcPipeline.Config(numBuckets = Some(8))
     val registry = new graft.cdc.SchemaRegistry()
     val subject = "osci.db.srv1.db1.person-value"
     val b1 = feed.filter(col("ts_us") < cutoffUs).drop("ts")

@@ -98,7 +98,7 @@ class LiveEvolutionSpec extends SparkSpec {
       StructField("schema_json", StringType)))
     val src = spark.readStream.schema(wireSchema).parquet(in)
     val q = CdcPipeline.startEvolvingAvro(src, state, cp, registry,
-      subject, dl, CdcPipeline.Config(numBuckets = 8),
+      subject, dl, CdcPipeline.Config(numBuckets = Some(8)),
       availableNow = false, onRejection = rejections.add(_))
     try {
       q.processAllAvailable()
@@ -214,7 +214,7 @@ class LiveEvolutionSpec extends SparkSpec {
       StructField("schema_version", IntegerType),
       StructField("schema_json", StringType)))).parquet(in)
     val q = CdcPipeline.startEvolvingAvro(src, state, cp, registry,
-      subject, dl, CdcPipeline.Config(numBuckets = 8))
+      subject, dl, CdcPipeline.Config(numBuckets = Some(8)))
     q.awaitTermination()
     assert(registry.history(subject).size === 3)
     val fin = CdcPipeline.currentState(spark, state).get

@@ -87,4 +87,31 @@ class StatefulLatestSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(rows === Seq(2L), s"emitted $rows")
   }
+
+  test("the replay leaves the caller's checkpoint file manager setting " +
+       "unchanged, during the replay and after it") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("stateconf").toString
+    CdcQueries.flatFeed(spark, sf)
+      .select("key", "event_id", "ts_us", "value", "props", "op")
+      .write.parquet(s"$base/in")
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val before = spark.conf.getOption(key)
+    // a poller reads the caller's conf for as long as the replay runs
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    val poller = new Thread(() => while (running) {
+      seen.add(spark.conf.getOption(key).toString)
+      Thread.sleep(2)
+    })
+    poller.start()
+    try StatefulLatest.replayToMemory(spark, s"$base/in", "stateful_conf",
+      s"$base/cp")
+    finally { running = false; poller.join() }
+    assert(seen.size() === 1 && seen.contains(before.toString),
+      s"caller conf changed during the replay: $seen")
+    assert(spark.conf.getOption(key) === before)
+    // the emissions are still visible in the caller's session
+    assert(spark.table("stateful_conf").count() > 0)
+  }
 }

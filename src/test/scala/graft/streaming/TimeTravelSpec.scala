@@ -34,7 +34,7 @@ class TimeTravelSpec extends SparkSpec {
 
   test("stateAsOf reproduces every retained commit; timeline is complete") {
     val state = Files.createTempDirectory("cdc_tt").toString + "/s"
-    val cfg = CdcPipeline.Config(retainVersions = 10, numBuckets = 4)
+    val cfg = CdcPipeline.Config(retainVersions = 10, numBuckets = Some(4))
     val snapshots = thirds.zipWithIndex.map { case (chunk, i) =>
       CdcPipeline.mergeBatch(chunk, state, cfg, i.toLong)
       snap(CdcPipeline.currentState(spark, state).get)
@@ -53,7 +53,7 @@ class TimeTravelSpec extends SparkSpec {
     val state = Files.createTempDirectory("cdc_tt2").toString + "/s"
     // numBuckets = 4: every chunk carries every key's bucket, so
     // commit 0's dirs are fully superseded twice and leave the window
-    val cfg = CdcPipeline.Config(retainVersions = 2, numBuckets = 4)
+    val cfg = CdcPipeline.Config(retainVersions = 2, numBuckets = Some(4))
     thirds.zipWithIndex.foreach { case (chunk, i) =>
       CdcPipeline.mergeBatch(chunk, state, cfg, i.toLong)
     }
