@@ -90,6 +90,9 @@ object Bench {
     // stalls only; a 3× streaming-trigger hiccup on a 1.3 s query
     // sails under 10×median (r11: cdc_stream_enrich 4.2 s vs 1.34 s
     // committed on an equal-speed host). json4s ships with Spark.
+    // the normalization the reference was scaled by, and whether the
+    // 0.8 floor set it (None: no reference at this sf)
+    var retryScale: Option[(Double, Boolean)] = None
     val reference: Map[String, Double] = try {
       val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
         "BENCH_LOCAL.json")
@@ -118,7 +121,9 @@ object Bench {
         // predicted sub-floor times for every tiny query, fired the
         // 1.8× rule 25 times, and exhausted the retry budget before
         // any genuinely stalled query could use it.
-        val scale = math.max(parallelProxy / refProxy.get, 0.8)
+        val raw = parallelProxy / refProxy.get
+        val scale = math.max(raw, 0.8)
+        retryScale = Some((scale, raw < 0.8))
         (j \ "queries") match {
           case JObject(fields) => fields.flatMap { case (k, v) =>
             num(v).map(k -> _ * scale) }.toMap
@@ -201,7 +206,11 @@ object Bench {
       "host_parallel_proxy_sec" -> parallelProxy,
       "host_parallel_proxy_mid_sec" -> midProxy,
       "host_parallel_proxy_close_sec" -> closeProxy,
-      "outlier_retries" -> retries.toDouble) ++ tailExtras
+      "outlier_retries" -> retries.toDouble) ++
+      retryScale.toSeq.flatMap { case (scale, floored) =>
+        Seq("retry_scale" -> scale,
+          "retry_scale_floored" -> (if (floored) 1.0 else 0.0))
+      } ++ tailExtras
     // FULL record (both per-query maps + extras) goes to the committed
     // BENCH_LOCAL.json — the durable artifact the judge reads.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",

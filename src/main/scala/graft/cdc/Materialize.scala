@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** CDC materialization kernel — the semantics a consumer of the reference's
   * topics must compute to get a queryable table (what Hudi DeltaStreamer,
@@ -56,6 +57,14 @@ object Materialize {
     * The aggregate's column name is chosen to differ from every input
     * column (compared case-insensitively, as Spark resolves names), so
     * any input schema passes through whole.
+    *
+    * Key columns leave the aggregate as its grouping attributes, so
+    * the output stays partitioned and sorted by them: a write
+    * partitioned on a key column needs no sort of its own. Keys whose
+    * grouping value is not the row's own value take the struct path
+    * instead: grouping normalizes floating point (-0.0 → 0.0, one NaN)
+    * and collated strings, and only the struct keeps the winning row's
+    * bits, as the window form does.
     */
   def latest(changes: DataFrame,
              keyCols: Seq[String],
@@ -63,10 +72,23 @@ object Materialize {
     val cols = changes.columns.toSeq
     val taken = cols.map(_.toLowerCase).toSet
     val tmp = Iterator.iterate("__latest")(_ + "_").find(n => !taken(n)).get
+    val passed = keyCols.filter(k =>
+      cols.contains(k) && groupsByValue(changes.schema(k).dataType)).toSet
     changes
       .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(cols.map(col): _*), struct(orderCols: _*)).as(tmp))
-      .select(cols.map(c => col(tmp).getField(c).as(c)): _*)
+      .agg(max_by(struct(cols.filterNot(passed).map(col): _*),
+        struct(orderCols: _*)).as(tmp))
+      .select(cols.map(c =>
+        if (passed(c)) col(c) else col(tmp).getField(c).as(c)): _*)
+  }
+
+  /** Types whose grouping value is bit-for-bit the row's value. */
+  private def groupsByValue(t: DataType): Boolean = t match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType |
+         DateType | TimestampType | TimestampNTZType | BinaryType => true
+    case _: DecimalType => true
+    case s: StringType => s == StringType
+    case _ => false
   }
 
   /** A2 — drop keys whose latest event is a delete. Must run AFTER A1. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.{ChangeFeed, Materialize}
 import graft.sources.Tables
+import graft.streaming.CdcPipeline
 
 /** The CDC query inventory (SURVEY.md §2.B rows "Scans/sources",
   * "Aggregation/state", "Streaming" batch-equivalents).
@@ -648,8 +649,8 @@ object CdcQueries extends QueryPack {
         // registry gate to run MID-STREAM on each writer change; the
         // large watermark delay makes the replay order-insensitive
         // (nothing is ever "late" in this bounded window)
-        val src = s2.readStream.option("maxFilesPerTrigger", "1")
-          .schema(wireSchema).parquet(s"$base/in")
+        val src = CdcPipeline.fileSource(s2, s"$base/in", wireSchema,
+          Map("maxFilesPerTrigger" -> "1"))
         val registry = new SchemaRegistry()
         CdcPipeline.startEvolvingAvro(src, s"$base/state", s"$base/cp",
           registry, subject, s"$base/dead",
@@ -711,8 +712,7 @@ object CdcQueries extends QueryPack {
           .select(col("c_custkey").cast("string").as("key"),
             col("c_mktsegment").as("segment"))
         val s2 = QueryPack.streamSession(s, 8, s"$base/cp")
-        val src = s2.readStream.schema(feed.schema)
-          .parquet(s"$base/in")
+        val src = CdcPipeline.fileSource(s2, s"$base/in", feed.schema)
         val dim2 = s2.read.parquet(
           { dim.write.mode("overwrite").parquet(s"$base/dim"); s"$base/dim" })
         val q = src.join(broadcast(dim2), Seq("key"))

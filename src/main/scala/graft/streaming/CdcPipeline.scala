@@ -13,14 +13,30 @@ import graft.sources.PointerFile
   * (Debezium topic → Hudi upsert, `/root/reference/README.md:22`)
   * re-expressed on Structured Streaming:
   *
-  *   readStream (change-event feed)
+  *   [[fileSource]] (change-event feed)
   *     → event-time watermark (T3 late/replayed data)
   *     → dropDuplicatesWithinWatermark (A4 at-least-once dedup)
   *     → foreachBatch: latest-per-key + upsert into versioned state (A1-A3)
   *
-  * The file source stands in for Kafka (no broker in the sandbox —
+  * The file feed stands in for Kafka (no broker in the sandbox —
   * SURVEY.md §7.2); the Kafka variant is the same pipeline with
   * `format("kafka")` + key/value decode and is config-only here.
+  *
+  * SOURCE. Like the Hudi upsert it feeds, the pipeline is a standing
+  * consumer that idles between change bursts, so what an idle poll
+  * costs matters as much as a trigger. [[fileSource]] reads the landing
+  * dir through [[org.apache.spark.sql.graft.CdcFeedSource]]: Spark's
+  * file-source checkpoint format and pickup rules (a checkpoint resumes
+  * under either source), but a poll is one directory listing instead of
+  * a file-index build, and each progress event reports the polls,
+  * listings and files behind it. Every CDC feed of the engine goes
+  * through it.
+  *
+  * MERGE. A commit shuffles once and sorts once: the state's touched
+  * buckets and the batch are unioned, hash-partitioned on their bucket,
+  * and reduced latest-wins per (bucket, key); the aggregate's bucket-
+  * ordered output is what the partitioned write consumes, one file per
+  * written bucket.
   *
   * LAYOUT. The state store is a parquet table HASH-BUCKETED on the key:
   *
@@ -130,14 +146,20 @@ object CdcPipeline {
         r
     }
 
-  /** File-backed change-event stream (schema must be supplied: streaming
-    * sources cannot infer). `options` passes source tuning through —
-    * e.g. `maxFilesPerTrigger` to bound micro-batch size (the file-source
-    * analog of Kafka's `maxOffsetsPerTrigger` backpressure knob).
+  /** File-backed change-event stream over the landing dir `dir`
+    * ([[org.apache.spark.sql.graft.CdcFeedSource]]: Spark's file-source
+    * checkpoint format and pickup rules, one directory listing per
+    * poll). The schema must be supplied: streaming sources cannot
+    * infer. The one option, `maxFilesPerTrigger`, bounds micro-batch
+    * size (the file-source analog of Kafka's `maxOffsetsPerTrigger`
+    * backpressure knob); any other is refused with
+    * `CdcFeedSource.UnsupportedFeedException`.
     */
   def fileSource(spark: SparkSession, dir: String, schema: StructType,
                  options: Map[String, String] = Map.empty): DataFrame =
-    spark.readStream.options(options).schema(schema).parquet(dir)
+    spark.readStream
+      .format(classOf[org.apache.spark.sql.graft.CdcFeedSourceProvider].getName)
+      .options(options).schema(schema).load(dir)
 
   /** A4/T3: watermarked exact-duplicate drop. State for a key expires
     * once the watermark passes, so memory is bounded by delay × rate,
@@ -225,7 +247,9 @@ object CdcPipeline {
                  batchId: Long, topicCol: String = "topic",
                  registry: Option[graft.cdc.SchemaRegistry] = None)
       : Unit = {
-    if (batch.isEmpty) return
+    // persisted FIRST: the topic collect below is the one pass over
+    // the source and the stateful dedup, and doubles as the emptiness
+    // probe (an empty batch presents no topic)
     batch.persist()
     try {
       val present = batch.select(topicCol).distinct()
@@ -360,13 +384,14 @@ object CdcPipeline {
                            Int, Either[Seq[String], StructType]],
                          onRejection: EvolvingRejection => Unit = _ => ())
       : Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     batch.persist()
     try {
       // distinct schema pairs: bounded by schema CHANGES (producer
       // deploys), not rows — driver-side by design, like demuxBatch's
-      // topic collect
+      // topic collect. The collect is the one pass over the source and
+      // the stateful dedup (the batch is persisted first) and doubles
+      // as the emptiness probe: an empty batch presents no version
       val present = batch.select("schema_version", "schema_json")
         .distinct().collect()
         .map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
@@ -516,37 +541,44 @@ object CdcPipeline {
       touched.flatMap(b => m.dirs.get(b).map(bucketPath(statePath, _, b))))
     val readObs = Observation()
     val writeObs = Observation()
-    val merged =
+    // state's bucket is recomputed from the key (deterministic) — files
+    // never store it; I/O scoping is pure path selection. The read is
+    // explicit-schema under the union: files written before a drift
+    // null the columns they lack and read narrower types widened, with
+    // no per-commit footer-inference job. allowMissingColumns = SCHEMA
+    // DRIFT TOLERANCE: a batch that DROPS a column nulls it on its own
+    // rows instead of failing; a batch column narrower than the union
+    // widens in the union
+    val input =
       if (readPaths.isEmpty) latest
-      else {
-        // state's bucket is recomputed from the key (deterministic) —
-        // files never store it; I/O scoping is pure path selection.
-        // The read is explicit-schema under the union: files written
-        // before a drift null the columns they lack and read narrower
-        // types widened, with no per-commit footer-inference job.
-        val state = spark.read.schema(schema).parquet(readPaths: _*)
-          .observe(readObs, count(lit(1)))
-        // allowMissingColumns = SCHEMA DRIFT TOLERANCE: a batch that
-        // DROPS a column nulls it on its own rows instead of failing; a
-        // batch column narrower than the union widens in the union
-        Materialize.latest(
-          state.unionByName(latest, allowMissingColumns = true),
-          cfg.keyCols, cfg.orderCols.map(col))
-      }
+      else spark.read.schema(schema).parquet(readPaths: _*)
+        .observe(readObs, count(lit(1)))
+        .unionByName(latest, allowMissingColumns = true)
     val outDir = uniqueDir("b", batchId)
     val (parts, allowed) =
       if (relayout) (buckets, 0 until buckets) else (touched.size, touched)
-    // co-locate each bucket before the partitioned write: without this,
-    // every shuffle partition holds rows of every bucket and partitionBy
-    // fans out up to (partitions × buckets) small files per batch. The
-    // EXPLICIT partition count keeps the write stage at one task per
-    // written bucket — inside a streaming foreachBatch AQE is disabled
-    // for stateful queries, so without it a small batch paid
-    // shuffle.partitions near-empty write tasks per commit.
+    // ONE SHUFFLE, ONE SORT. The input is hash-partitioned on its
+    // bucket once: each written bucket sits in one task, one file per
+    // bucket. With state to merge, the latest-wins aggregate groups by
+    // (bucket, key): that partitioning already clusters every group,
+    // so the aggregate adds no exchange, and its sort-based output —
+    // ordered by the bucket it passes through — is the order the
+    // partitioned write needs, so the writer adds no sort. Without
+    // state the batch is latest-per-key already and the writer's sort
+    // is the one sort. The EXPLICIT partition count keeps the stage at
+    // one task per written bucket — inside a streaming foreachBatch AQE
+    // is disabled for stateful queries, so without it a small batch
+    // paid shuffle.partitions near-empty tasks per commit.
+    val bucketed = input
+      .withColumn("__bucket", bucketOf(cfg.keyCols, buckets))
+      .repartition(parts, col("__bucket"))
+    val merged =
+      if (readPaths.isEmpty) bucketed
+      else Materialize.latest(bucketed, "__bucket" +: cfg.keyCols,
+        cfg.orderCols.map(col))
     timed("merge_write")(
       merged.observe(writeObs, count(lit(1)))
-        .withColumn("__bucket", bucketOf(cfg.keyCols, buckets))
-        .repartition(parts, col("__bucket")).write
+        .write
         .partitionBy("__bucket")
         .mode("overwrite")
         .parquet(s"$statePath/batches/$outDir"))

@@ -89,7 +89,7 @@ object StatefulLatest {
           "FileSystemBasedCheckpointFileManager")
     import s2.implicits._
     val schema = implicitly[org.apache.spark.sql.Encoder[Change]].schema
-    val src = s2.readStream.schema(schema).parquet(inDir).as[Change]
+    val src = CdcPipeline.fileSource(s2, inDir, schema).as[Change]
     latestStream(src).writeStream
       .format("memory")
       .queryName(queryName)

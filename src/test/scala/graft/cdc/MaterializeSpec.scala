@@ -73,7 +73,26 @@ class MaterializeSpec extends SparkSpec {
       ("b", Option.empty[Long], 3L, "nullts"), ("b", Option(5L), 4L, "real"),
       ("c", Option.empty[Long], 5L, "n1"), ("c", Option.empty[Long], 6L, "n2")
     )).toDF("key", "ts_us", "event_id", "value")
-    val inputs = Seq(feed.select("key", "ts_us", "event_id", "value"), edge)
+    // a DOUBLE key: Spark groups -0.0 with 0.0 and every NaN with
+    // every other, and the winner must keep its own key bits, as the
+    // window's row does (the group {0.0, -0.0} is won by -0.0, the NaN
+    // group by a non-canonical NaN)
+    val oddNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val dbl = spark.createDataFrame(Seq(
+      (0.0, Option(1L), 1L, "zero"), (-0.0, Option(2L), 2L, "negzero"),
+      (Double.NaN, Option(1L), 3L, "nan"), (oddNaN, Option(2L), 4L, "odd"),
+      (1.5, Option.empty[Long], 5L, "plain")
+    )).toDF("key", "ts_us", "event_id", "value")
+    /** Rows with doubles as their raw bits: equality `except` cannot
+      * see (it equates -0.0 with 0.0 and NaNs with each other).
+      */
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+        case v => String.valueOf(v)
+      }.mkString("|")).toSeq.sorted
+    val inputs =
+      Seq(feed.select("key", "ts_us", "event_id", "value"), edge, dbl)
     inputs.foreach { df =>
       val viaAgg = Materialize.latest(df, Seq("key"),
         Seq(col("ts_us"), col("event_id")))
@@ -84,7 +103,11 @@ class MaterializeSpec extends SparkSpec {
       assert(viaAgg.columns.toSeq === df.columns.toSeq)
       assert(viaAgg.except(viaWindow).count() === 0)
       assert(viaWindow.except(viaAgg).count() === 0)
+      assert(bits(viaAgg) === bits(viaWindow))
     }
+    assert(bits(Materialize.latest(dbl, Seq("key"),
+      Seq(col("ts_us"), col("event_id"))).select("value")) ===
+      Seq("negzero", "odd", "plain"))
   }
 
   test("latest passes input columns named like its internal aggregate " +
