@@ -234,22 +234,6 @@ object Dedup {
     else containmentPairsPrefix(docs, k, threshold)
   }
 
-  /** Build a PERSISTED inverted shingle index — the standing artifact
-    * the continuous-ingestion path ([[crossCorpusPairs]]) probes, so
-    * the corpus is shingled/sized ONCE and every arriving shard pays
-    * only its own probe. Three tables land in an immutable fresh
-    * version dir — `postings` (shingle, doc_id), `sizes`
-    * (doc_id, n_sh), `dfreq` (shingle, df: the hot-shingle cap input,
-    * precomputed so probes never re-aggregate the corpus) — and a
-    * single atomic overwrite-rename flips `_CURRENT`; the 2 newest
-    * versions survive GC. Identical crash-safety/concurrent-reader
-    * story as [[graft.sim.Similarity.buildIvfIndex]] (shared
-    * [[graft.sources.PointerFile]] primitive).
-    *
-    * Scale: at deployment the postings table is registered bucketed on
-    * `shingle` so probes shuffle only the (small) shard side; the
-    * versioned-dir artifact itself is layout-agnostic.
-    */
   /** Rows-per-bucket target for a segment's postings table (~8-10 MB
     * of parquet per bucket at ~10 B/posting). Scale-adaptive (r14,
     * guide §2/§6): a FIXED bucket count is wrong at both ends — at
@@ -272,6 +256,22 @@ object Dedup {
     math.max(1L, math.min(4096L,
       (nPostings + BucketRows - 1) / BucketRows)).toInt
 
+  /** Declared schemas of a segment's three side files. Every read of
+    * them passes its schema: a schema-less `spark.read.parquet` runs a
+    * footer-inference Spark job per segment and file. Segments are
+    * written with these types (doc ids are cast to BIGINT by
+    * [[segmentKernel]]).
+    */
+  private val SideSchemas = Map(
+    "postings" -> "doc_id BIGINT, shingle BIGINT",
+    "sizes" -> "doc_id BIGINT, n_sh BIGINT",
+    "dfreq" -> "shingle BIGINT, df BIGINT")
+
+  /** One side file of segment `seg`, read under its declared schema. */
+  private def readSide(spark: org.apache.spark.sql.SparkSession,
+                       dir: String, seg: String, file: String): DataFrame =
+    spark.read.schema(SideSchemas(file)).parquet(s"$dir/$seg/$file")
+
   /** Catalog name for one version's bucketed postings table —
     * deterministic from (dir, version) so any session re-derives it.
     */
@@ -279,6 +279,46 @@ object Dedup {
     ("graft_shidx_" + Integer.toHexString(dir.hashCode) + "_" + version)
       .replaceAll("[^A-Za-z0-9_]", "_")
 
+  /** A segment's `buckets` metadata file: the postings table's bucket
+    * count on the first line, the segment's postings count on the
+    * second. Segments written before the count was recorded have the
+    * first line only.
+    */
+  private def metaPath(dir: String, version: String) =
+    new org.apache.hadoop.fs.Path(s"$dir/$version/buckets")
+
+  /** (bucket count, postings count) of a segment; None when it has no
+    * `buckets` file (a pre-bucketing segment), a None count when the
+    * file predates the count line.
+    */
+  private def readSegmentMeta(fs: org.apache.hadoop.fs.FileSystem,
+                              dir: String, version: String)
+      : Option[(Int, Option[Long])] = {
+    val p = metaPath(dir, version)
+    if (!fs.exists(p)) None
+    else {
+      val lines = graft.sources.PointerFile.read(fs, p).linesIterator
+        .map(_.trim).toSeq
+      Some((lines.head.toInt, lines.lift(1).map(_.toLong)))
+    }
+  }
+
+  /** BUILD a persisted inverted shingle index — the standing artifact
+    * the continuous-ingestion path ([[crossCorpusPairs]]) probes, so
+    * the corpus is shingled/sized ONCE and every arriving shard pays
+    * only its own probe. Three tables land in an immutable fresh
+    * version dir — `postings` (shingle, doc_id), `sizes`
+    * (doc_id, n_sh), `dfreq` (shingle, df: the hot-shingle cap input,
+    * precomputed so probes never re-aggregate the corpus) — and a
+    * single atomic overwrite-rename flips `_CURRENT`; the 2 newest
+    * versions survive GC. Identical crash-safety/concurrent-reader
+    * story as [[graft.sim.Similarity.buildIvfIndex]] (shared
+    * [[graft.sources.PointerFile]] primitive).
+    *
+    * Scale: at deployment the postings table is registered bucketed on
+    * `shingle` so probes shuffle only the (small) shard side; the
+    * versioned-dir artifact itself is layout-agnostic.
+    */
   def buildShingleIndex(docs: DataFrame, dir: String, k: Int = 3): Unit = {
     import graft.sources.SegmentedIndex
     val spark = docs.sparkSession
@@ -289,7 +329,7 @@ object Dedup {
     // postings after they land — the r8 reduction pass that cut the
     // segment write from three 4M-row shuffles to one (BASELINE.md
     // round-8).
-    val arr = withShingleArray(docs, k, "doc_id", "text").cache()
+    val arr = segmentKernel(docs, k).cache()
     // one eager agg materializes the kernel cache AND sizes the
     // segment's bucket count from its postings volume (r14,
     // scale-adaptive layout — see BucketRows); the two concurrent
@@ -298,7 +338,7 @@ object Dedup {
     // write into the agg), one number gained.
     val nPost = arr.agg(coalesce(sum(size(col("sharr")).cast("long")),
       lit(0L))).head().getLong(0)
-    writeSegmentFiles(arr, dir, version, segmentBuckets(nPost))
+    writeKernelSegment(arr, dir, version, nPost)
     // all consumers are done — release the kernel cache rather than
     // letting builds accumulate blocks for the session's lifetime
     arr.unpersist(false)
@@ -307,10 +347,40 @@ object Dedup {
     SegmentedIndex.commitBuild(spark, dir, version)
   }
 
-  /** The three data files of one postings segment — shared by build
-    * and append so both get the same bucketed layout and the same
-    * write shape. Input is the PRE-explode kernel `arr` =
-    * (doc_id, sharr), already materialized (cached + counted).
+  /** The (doc_id, sharr) kernel a build or append writes, with doc ids
+    * cast to the side files' declared BIGINT. Integral ids (TINYINT to
+    * BIGINT) widen losslessly, so probe values are unchanged; any other
+    * id type is refused before a job runs — a cast would turn it into
+    * nulls or a mid-write failure.
+    */
+  private def segmentKernel(docs: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    docs.schema("doc_id").dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw new IllegalArgumentException(
+        s"shingle index doc_id must be an integral type, got ${t.sql}")
+    }
+    withShingleArray(docs, k, "doc_id", "text")
+      .select(col("doc_id").cast("long").as("doc_id"), col("sharr"))
+  }
+
+  /** One segment's files from the PRE-explode kernel `arr` =
+    * (doc_id, sharr), already materialized (cached + counted). sharr is
+    * the per-doc DISTINCT shingle set, so size(sharr) IS the exploded
+    * per-doc count — same n_sh, no shuffle.
+    */
+  private def writeKernelSegment(arr: DataFrame, dir: String,
+                                 version: String, nPost: Long): Unit =
+    writeSegmentFiles(
+      arr.select(col("doc_id"), explode(col("sharr")).as("shingle")),
+      arr.select(col("doc_id"), size(col("sharr")).cast("long").as("n_sh")),
+      dir, version, nPost)
+
+  /** The files of one postings segment — shared by build, append and
+    * compact so all three get the same bucketed layout and the same
+    * write shape. `postings` (doc_id, shingle) and `sizes`
+    * (doc_id, n_sh) hold the segment's rows; `nPost` is the postings
+    * row count, which sizes the bucket count.
     *
     * Postings are written BUCKETED on shingle (and registered in the
     * catalog): every later probe joins on shingle, and a bucketed scan
@@ -329,42 +399,34 @@ object Dedup {
     * postings shuffle), and df aggregates zero-Exchange off the
     * just-written bucketed postings — the segment now pays exactly one
     * row-level shuffle, the one that defines its layout.
+    *
+    * The `buckets` file records the bucket count and `nPost` (see
+    * [[metaPath]]), so a later fold sizes itself without reading any
+    * segment file.
     */
-  private def writeSegmentFiles(arr: DataFrame, dir: String,
-                                version: String, buckets: Int): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val spark = arr.sparkSession
-    val writes = Seq(
-      Future {
-        arr.select(col("doc_id"), explode(col("sharr")).as("shingle"))
-          .repartition(buckets, col("shingle"))
-          .write.mode("errorifexists")
-          .bucketBy(buckets, "shingle").sortBy("shingle")
-          .option("path", s"$dir/$version/postings")
-          .format("parquet").saveAsTable(postingsTable(dir, version))
-      },
-      Future {
-        // sharr is the per-doc DISTINCT shingle set, so size(sharr)
-        // IS the exploded per-doc count — same n_sh, no shuffle.
-        // coalesce (narrow, like compaction's sizes rewrite) into
-        // bucket-count-order files: uncoalesced, the write inherited
-        // the kernel's partitioning and a 400-doc delta segment paid
-        // 32 tasks + 32 one-KB files per append (guide §6 small
-        // files), which every describe/probe/compact reader then
-        // re-paid as per-file open cost
-        arr.select(col("doc_id"),
-            size(col("sharr")).cast("long").as("n_sh"))
-          .coalesce(buckets)
-          .write.mode("errorifexists").parquet(s"$dir/$version/sizes")
-      })
-    Await.result(Future.sequence(writes), Duration.Inf)
+  private def writeSegmentFiles(postings: DataFrame, sizes: DataFrame,
+                                dir: String, version: String,
+                                nPost: Long): Unit = {
+    val spark = postings.sparkSession
+    val buckets = segmentBuckets(nPost)
+    concurrently(spark)(
+      () => postings
+        .repartition(buckets, col("shingle"))
+        .write.mode("errorifexists")
+        .bucketBy(buckets, "shingle").sortBy("shingle")
+        .option("path", s"$dir/$version/postings")
+        .format("parquet").saveAsTable(postingsTable(dir, version)),
+      // coalesce (narrow) into bucket-count-order files: uncoalesced,
+      // the write inherited the input's partitioning and a 400-doc
+      // delta segment paid 32 tasks + 32 one-KB files per append
+      // (guide §6 small files), which every describe/probe/compact
+      // reader then re-paid as per-file open cost
+      () => sizes.coalesce(buckets)
+        .write.mode("errorifexists").parquet(s"$dir/$version/sizes"))
     // bucket-count metadata FIRST so readPostings can re-register
     val fs = graft.sources.SegmentedIndex.fsFor(spark, dir)
-    val bf = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/$version/buckets"), true)
-    try bf.write(s"$buckets".getBytes("UTF-8")) finally bf.close()
+    val bf = fs.create(metaPath(dir, version), true)
+    try bf.write(s"$buckets\n$nPost".getBytes("UTF-8")) finally bf.close()
     // df per shingle = count over this segment's postings — computed
     // off the BUCKETED table just written, so the aggregation's
     // required hash-partitioning on shingle is satisfied by the scan
@@ -374,25 +436,52 @@ object Dedup {
       .write.mode("errorifexists").parquet(s"$dir/$version/dfreq")
   }
 
+  /** Runs `jobs` concurrently, each under the caller's thread-local
+    * Spark state (local properties — job group, job tags, SQL
+    * execution — and active session), so the jobs they start belong to
+    * the caller: cancelling the caller's job group cancels them, and
+    * listeners attribute them to it. Pool threads would otherwise carry
+    * whatever properties they inherited when the pool created them.
+    * Waits for every job, then rethrows the first failure.
+    */
+  private def concurrently(spark: org.apache.spark.sql.SparkSession)(
+      jobs: (() => Unit)*): Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    val session =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
+    try {
+      val running = jobs.map(j =>
+        SQLExecution.withThreadLocalCaptured(session, pool)(j()))
+      val failures = running.flatMap(f =>
+        scala.util.Try(f.get()).failed.toOption)
+      failures.headOption.foreach {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+        case e => throw e
+      }
+    } finally pool.shutdown()
+  }
+
   /** The version's postings as the registered BUCKETED table,
-    * re-registering from the `buckets` metadata when this session has
-    * not seen it (bucket ids recover from Spark's bucketed file
-    * names). Pre-bucketing versions (no `buckets` file) read as plain
-    * parquet — layout-compatible, just without the co-location.
+    * re-registering under the declared postings schema from the
+    * `buckets` metadata's first line when this session has not seen it
+    * (bucket ids recover from Spark's bucketed file names).
+    * Pre-bucketing versions (no `buckets` file) read as plain parquet
+    * under the same schema — layout-compatible, just without the
+    * co-location. No path runs a Spark job.
     */
   private def readPostings(spark: org.apache.spark.sql.SparkSession,
                            dir: String, version: String): DataFrame = {
-    val bp = new org.apache.hadoop.fs.Path(s"$dir/$version/buckets")
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(bp)) spark.read.parquet(s"$dir/$version/postings")
-    else {
-      val n = graft.sources.PointerFile.read(fs, bp).trim.toInt
-      val tbl = postingsTable(dir, version)
-      if (!spark.catalog.tableExists(tbl))
-        spark.sql(s"CREATE TABLE $tbl (doc_id BIGINT, shingle BIGINT) " +
-          s"USING parquet CLUSTERED BY (shingle) SORTED BY (shingle) " +
-          s"INTO $n BUCKETS LOCATION '$dir/$version/postings'")
-      spark.table(tbl)
+    val fs = graft.sources.SegmentedIndex.fsFor(spark, dir)
+    readSegmentMeta(fs, dir, version) match {
+      case None => readSide(spark, dir, version, "postings")
+      case Some((n, _)) =>
+        val tbl = postingsTable(dir, version)
+        if (!spark.catalog.tableExists(tbl))
+          spark.sql(s"CREATE TABLE $tbl (${SideSchemas("postings")}) " +
+            s"USING parquet CLUSTERED BY (shingle) SORTED BY (shingle) " +
+            s"INTO $n BUCKETS LOCATION '$dir/$version/postings'")
+        spark.table(tbl)
     }
   }
 
@@ -431,7 +520,7 @@ object Dedup {
     // exactly-once under foreachBatch replay (cf. appendIvfIndex)
     if (SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag)) return
     val version = SegmentedIndex.newVersionName()
-    val arr = withShingleArray(newDocs, k, "doc_id", "text").cache()
+    val arr = segmentKernel(newDocs, k).cache()
     // one eager job materializes the kernel, decides emptiness, AND
     // sizes the delta segment's bucket count (r14): a quiet ingest
     // tick (no docs, or none long enough to shingle) commits nothing —
@@ -443,7 +532,7 @@ object Dedup {
     val nPost = arr.agg(coalesce(sum(size(col("sharr")).cast("long")),
       lit(0L))).head().getLong(0)
     if (nPost == 0) { arr.unpersist(false); return }
-    writeSegmentFiles(arr, dir, version, segmentBuckets(nPost))
+    writeKernelSegment(arr, dir, version, nPost)
     // delta kernel fully consumed — release (streaming ingest calls
     // this once per micro-batch; leaked blocks would grow ∝ stream age)
     arr.unpersist(false)
@@ -498,6 +587,10 @@ object Dedup {
     * disjoint docs, so a df-capped probe of the compacted index is
     * bit-identical to the segmented one. Reads index FILES only, never
     * the corpus (no re-shingling): cost ∝ index size, not corpus text.
+    * The fold runs no metadata job: its bucket count comes from the
+    * postings counts the segments' `buckets` files record, and every
+    * file is read under its declared schema ([[SideSchemas]]) — the
+    * same number of Spark jobs at any chain length.
     *
     * The compacted version commits as a fresh BASE (no `segments`
     * manifest) carrying the chain's exactly-once tags forward in
@@ -513,56 +606,35 @@ object Dedup {
     val segs = indexSegments(spark, dir, parent)
     if (segs.size <= 1) return
     val version = SegmentedIndex.newVersionName()
+    val fs = SegmentedIndex.fsFor(spark, dir)
+    // bucket count sized from the FOLDED total, as a build sizes its
+    // own: the sum of the chain's recorded postings counts, no job.
+    // Segments written before the count was recorded are summed from
+    // their sizes (sum(n_sh) IS a segment's postings count) in one
+    // metadata-weight agg job.
+    val counts =
+      segs.map(v => v -> readSegmentMeta(fs, dir, v).flatMap(_._2))
+    val legacy = counts.collect { case (v, None) => v }
+    val nPost = counts.flatMap(_._2).sum +
+      (if (legacy.isEmpty) 0L
+       else legacy.map(v => readSide(spark, dir, v, "sizes"))
+         .reduce(_ unionAll _)
+         .agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0))
     // read each segment's postings as PLAIN parquet, not the catalog's
     // bucketed table: a union of identically-bucketed scans already
     // reports the target hash partitioning, so Catalyst elides the
-    // repartition below — and the bucketed WRITE then runs on the
-    // concatenated per-segment partitions, emitting one file per
-    // (segment, bucket) instead of per bucket, i.e. exactly the file
-    // population compaction exists to collapse. A plain scan carries
-    // no partitioning claim, so the layout-defining shuffle survives.
-    val allSizes = segs.map(v => spark.read.parquet(s"$dir/$v/sizes"))
-      .reduce(_ unionAll _)
-    // bucket count sized from the FOLDED total (sum(n_sh) over the
-    // chain's sizes files IS the union's postings count) — one
-    // metadata-weight agg job, same scale-adaptive layout as a build
-    val nPost = allSizes
-      .agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0)
-    val buckets = segmentBuckets(nPost)
-    // postings + sizes rewrites are independent — run them as
-    // concurrent jobs like writeSegmentFiles does (r14: the serial
-    // shape put the small sizes pass on the compaction's wall-clock)
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val writes = Seq(
-        Future {
-          segs.map(v => spark.read.parquet(s"$dir/$v/postings"))
-            .reduce(_ unionAll _)
-            .repartition(buckets, col("shingle"))
-            .write.mode("errorifexists")
-            .bucketBy(buckets, "shingle").sortBy("shingle")
-            .option("path", s"$dir/$version/postings")
-            .format("parquet").saveAsTable(postingsTable(dir, version))
-        },
-        Future {
-          // sizes are tiny per-doc rows scattered over per-segment
-          // files — coalesce (narrow) into bucket-count-order files
-          allSizes.coalesce(buckets)
-            .write.mode("errorifexists").parquet(s"$dir/$version/sizes")
-        })
-      Await.result(Future.sequence(writes), Duration.Inf)
-    }
-    val fs = SegmentedIndex.fsFor(spark, dir)
-    val bf = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/$version/buckets"), true)
-    try bf.write(s"$buckets".getBytes("UTF-8")) finally bf.close()
-    // df zero-Exchange off the just-written bucketed postings, exactly
-    // like a base build — equals the probe's summed-across-segments df
-    readPostings(spark, dir, version)
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
-      .write.mode("errorifexists").parquet(s"$dir/$version/dfreq")
+    // repartition in writeSegmentFiles — and the bucketed WRITE then
+    // runs on the concatenated per-segment partitions, emitting one
+    // file per (segment, bucket) instead of per bucket, i.e. exactly
+    // the file population compaction exists to collapse. A plain scan
+    // carries no partitioning claim, so the layout-defining shuffle
+    // survives. Sizes union verbatim (a doc lives wholly in one
+    // segment); df is recomputed off the new bucketed postings, which
+    // equals the probe's summed-across-segments df.
+    def union(file: String) =
+      segs.map(v => readSide(spark, dir, v, file)).reduce(_ unionAll _)
+    writeSegmentFiles(union("postings"), union("sizes"), dir, version,
+      nPost)
     SegmentedIndex.commitCompact(spark, dir, version, parent,
       SegmentedIndex.committedTags(fs, dir, segs))
   }
@@ -583,12 +655,12 @@ object Dedup {
     val ver = SegmentedIndex.currentVersion(spark, dir)
     SegmentedIndex.segments(spark, dir, ver).zipWithIndex.map {
       case (seg, i) =>
-        spark.read.parquet(s"$dir/$seg/sizes")
+        readSide(spark, dir, seg, "sizes")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_sh")).as("n_postings"),
             min(col("doc_id")).as("min_doc"),
             max(col("doc_id")).as("max_doc"))
-          .crossJoin(spark.read.parquet(s"$dir/$seg/dfreq")
+          .crossJoin(readSide(spark, dir, seg, "dfreq")
             .agg(count(lit(1)).as("n_shingles")))
           .select(lit(i).as("seg_ord"), col("n_docs"),
             col("n_postings"), col("n_shingles"),
@@ -680,7 +752,7 @@ object Dedup {
       graft.sources.SegmentedIndex.currentVersion(spark, dir)
     val segs = indexSegments(spark, dir, version)
     val segPostings = segs.map(v => readPostings(spark, dir, v))
-    val exSizes = segs.map(v => spark.read.parquet(s"$dir/$v/sizes"))
+    val exSizes = segs.map(v => readSide(spark, dir, v, "sizes"))
       .reduce(_ unionAll _)
     // localCheckpoint, not cache (cf. ngramJaccardPairs): the probe
     // references the shard kernel once per segment join PLUS the n_b
@@ -704,7 +776,7 @@ object Dedup {
       if (maxPostings == Int.MaxValue) (segPostings, in0, exSizes)
       else {
         val dfreq = segs
-          .map(v => spark.read.parquet(s"$dir/$v/dfreq"))
+          .map(v => readSide(spark, dir, v, "dfreq"))
           .reduce(_ unionAll _)
           .groupBy("shingle").agg(sum(col("df")).as("df"))
         val overCap = dfreq.filter(col("df") > maxPostings)

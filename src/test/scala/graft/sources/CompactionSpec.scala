@@ -178,7 +178,7 @@ class CompactionSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(dir).getFileSystem(
         spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(s"$dir/$compactVer/buckets"))
-      .trim.toInt
+      .linesIterator.next().trim.toInt
     assert(postFiles.size <= declaredBuckets,
       s"${postFiles.size} postings files > $declaredBuckets buckets")
     assert(postFiles.size < preFold,

@@ -1,0 +1,196 @@
+package graft.text
+
+import java.util.Properties
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+import graft.SparkSpec
+import graft.ops.TextQueries
+import graft.sources.{PointerFile, SegmentedIndex}
+
+/** The shingle index's Spark jobs: maintenance and reads run no
+  * metadata job (no footer inference, the fold sized from the
+  * segments' recorded postings counts), so the fold and the probe run
+  * the same number of jobs at any chain length; every job a call
+  * starts, also the concurrent writes, carries the caller's local
+  * properties; segments written before the count line fold and probe
+  * as before; and doc ids are stored as BIGINT.
+  */
+class ShingleIndexJobsSpec extends SparkSpec {
+
+  private def planted: DataFrame = TextQueries.plantedDocs(spark, sf)
+  private def existing = planted.filter(col("doc_id") < 1000000L)
+  private def incoming = planted.filter(col("doc_id") >= 1000000L)
+
+  private def fs = new Path("/tmp")
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def fresh(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toString + "/idx"
+
+  /** A chain of `n` segments over `existing`: a base build, then
+    * n − 1 appends, split by doc_id modulo n.
+    */
+  private def chain(n: Int, dir: String): String = {
+    Dedup.buildShingleIndex(existing.filter(col("doc_id") % n === 0), dir)
+    (1 until n).foreach(i =>
+      Dedup.appendShingleIndex(dir,
+        existing.filter(col("doc_id") % n === i)))
+    assert(segs(dir).size === n)
+    dir
+  }
+
+  private def segs(dir: String): Seq[String] =
+    SegmentedIndex.segments(spark, dir,
+      SegmentedIndex.currentVersion(spark, dir))
+
+  private def probe(dir: String): DataFrame =
+    Dedup.probeShingleIndex(dir, incoming, k = 3, threshold = 0.8)
+
+  private def assertSame(a: DataFrame, b: DataFrame, what: String): Unit =
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
+
+  private val Marker = "graft.spec.jobsBarrier"
+
+  /** (local properties, first stage name) of every job `body` starts,
+    * in start order. Listener events arrive in order, so once a marker
+    * job run after `body` is seen, every job of `body` has been.
+    */
+  private def jobsOf(body: => Unit): Seq[(Properties, String)] = {
+    SegmentedIndex.awaitGc()
+    val seen = new LinkedBlockingQueue[(Properties, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put((e.properties,
+          e.stageInfos.headOption.map(_.name).getOrElse("")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(Marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(Marker, null)
+      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .takeWhile { j =>
+          assert(j != null, "listener barrier timed out")
+          j._1.getProperty(Marker) == null
+        }.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def sites(jobs: Seq[(Properties, String)]) =
+    jobs.map(_._2).mkString("\n")
+
+  test("the fold runs as many jobs on a 5-segment chain as on a " +
+       "2-segment one") {
+    val two = chain(2, fresh("shjobs2"))
+    val five = chain(5, fresh("shjobs5"))
+    val j2 = jobsOf(Dedup.compactShingleIndex(spark, two))
+    val j5 = jobsOf(Dedup.compactShingleIndex(spark, five))
+    assert(segs(two).size === 1 && segs(five).size === 1)
+    assert(j2.size === j5.size,
+      s"2 segments:\n${sites(j2)}\n5 segments:\n${sites(j5)}")
+  }
+
+  test("the probe runs as many jobs at chain length 3 as at 1") {
+    val one = chain(1, fresh("shprobe1"))
+    val three = chain(3, fresh("shprobe3"))
+    var r1, r3: DataFrame = null
+    val j1 = jobsOf { r1 = probe(one); r1.collect() }
+    val j3 = jobsOf { r3 = probe(three); r3.collect() }
+    assert(j1.size === j3.size,
+      s"1 segment:\n${sites(j1)}\n3 segments:\n${sites(j3)}")
+    assertSame(r1, r3, "chain-3 probe diverged from chain-1")
+  }
+
+  test("every job of append and compact carries the caller's local " +
+       "properties, the concurrent writes' too") {
+    val dir = chain(2, fresh("shprops"))
+    val key = "graft.spec.caller"
+    val sc = spark.sparkContext
+    sc.setLocalProperty(key, "owner")
+    try {
+      val jobs = jobsOf {
+        Dedup.appendShingleIndex(dir,
+          incoming.filter(col("doc_id") % 2 === 0))
+        Dedup.compactShingleIndex(spark, dir)
+      }
+      assert(jobs.nonEmpty)
+      val lost = jobs.filter(_._1.getProperty(key) != "owner")
+      assert(lost.isEmpty,
+        s"${lost.size} of ${jobs.size} jobs lost the caller's " +
+          s"property:\n${sites(lost)}")
+    } finally sc.setLocalProperty(key, null)
+    assert(segs(dir).size === 1)
+  }
+
+  test("segments without the count line fold and probe like a " +
+       "rebuild, to the new path's bucket count") {
+    val counted = chain(3, fresh("shcounted"))
+    val legacy = chain(3, fresh("shlegacy"))
+    // rewrite two of the legacy chain's `buckets` files to the old
+    // one-line form, and drop its registered tables so the probe
+    // re-registers from those files
+    segs(legacy).take(2).foreach { v =>
+      val p = new Path(s"$legacy/$v/buckets")
+      val first = PointerFile.read(fs, p).linesIterator.next()
+      val out = fs.create(p, true)
+      try out.write(first.getBytes("UTF-8")) finally out.close()
+      assert(PointerFile.read(fs, p) === first)
+    }
+    spark.sql("SHOW TABLES").collect().map(_.getString(1))
+      .filter(_.startsWith("graft_shidx_")).foreach(t =>
+        spark.sql(s"DROP TABLE $t"))
+    val rebuilt = fresh("shrebuilt")
+    Dedup.buildShingleIndex(existing, rebuilt)
+    assertSame(probe(legacy), probe(rebuilt), "legacy chain probe")
+    Dedup.compactShingleIndex(spark, counted)
+    Dedup.compactShingleIndex(spark, legacy)
+    def meta(dir: String) = PointerFile.read(fs,
+      new Path(s"$dir/${segs(dir).head}/buckets")).linesIterator.toSeq
+    val nPost =
+      spark.read.parquet(s"$rebuilt/${segs(rebuilt).head}/postings").count()
+    assert(meta(legacy) === meta(counted))
+    assert(meta(legacy) === meta(rebuilt))
+    assert(meta(legacy)(1).toLong === nPost)
+    assert(meta(legacy).head.toInt === Dedup.segmentBuckets(nPost))
+    assertSame(probe(legacy), probe(rebuilt), "folded legacy probe")
+    assertSame(probe(counted), probe(rebuilt), "folded probe")
+  }
+
+  test("an INT doc_id is stored as BIGINT with probe values unchanged; " +
+       "a non-integral doc_id is refused before any job") {
+    val asInt = fresh("shint")
+    val asLong = fresh("shlong")
+    val intIds =
+      existing.select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    Dedup.buildShingleIndex(intIds.filter(col("doc_id") % 2 === 0), asInt)
+    Dedup.appendShingleIndex(asInt, intIds.filter(col("doc_id") % 2 === 1))
+    Dedup.buildShingleIndex(existing, asLong)
+    for (v <- segs(asInt); f <- Seq("postings", "sizes")) {
+      val onDisk = spark.read.parquet(s"$asInt/$v/$f")
+      assert(onDisk.schema("doc_id").dataType === LongType, s"$v/$f")
+    }
+    val p = probe(asInt)
+    assert(p.schema("a_id").dataType === LongType)
+    assert(p.count() > 0)
+    assertSame(p, probe(asLong), "INT-id probe")
+    val refused = fresh("shstr")
+    val strIds =
+      existing.select(col("doc_id").cast("string").as("doc_id"), col("text"))
+    val jobs = jobsOf {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.buildShingleIndex(strIds, refused)
+      }
+      assert(e.getMessage.contains("integral"), e.getMessage)
+    }
+    assert(jobs.isEmpty, sites(jobs))
+    assert(!fs.exists(new Path(refused)))
+  }
+}
