@@ -3,25 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same instant contract as Verify: NTZ-encoded events read as UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JVM-native chmod for local-FS writes (r15, guide §5 driver/
-      // fixed cost): without hadoop native libs, RawLocalFileSystem
-      // FORKS a chmod process per created file — ~10-15 ms on every
-      // parquet part/checksum/_SUCCESS of every tiny segment write,
-      // overhead a real HDFS/S3 deployment (or a native-lib host)
-      // never pays. NioLocalFileSystem does the identical permission
-      // set through java.nio. Results are unaffected (same files,
-      // same permissions).
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.NioLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession.builder(cpus).getOrCreate()
     // Untimed warmup: session/codegen/scheduler/datasource spin-up is not
     // query cost, and must not be attributed to whichever query runs first.
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -194,23 +177,17 @@ object Bench {
         (name, math.min(warm, retry), cold, ok)
       }
     }
-    // proxies + retry count ride in EVERY record (subset runs too —
-    // a subset re-measurement is useless without normalization)
+    // run contract, proxies and retry count ride in EVERY record
+    // (subset runs too — a subset re-measurement is useless without
+    // normalization)
     val tailExtras =
-      if (sys.env.contains("SPARK_GRAFT_NO_EXTRAS") || only.isDefined)
-        Seq.empty[(String, Double)]
+      if (only.isDefined) Seq.empty[(String, Double)]
       else benchExtras(spark, sfDir, skip)
     val closeProxy = measureParallelProxy()
-    val extras = Seq(
-      "host_serial_proxy_sec" -> serialProxy,
-      "host_parallel_proxy_sec" -> parallelProxy,
-      "host_parallel_proxy_mid_sec" -> midProxy,
-      "host_parallel_proxy_close_sec" -> closeProxy,
-      "outlier_retries" -> retries.toDouble) ++
-      retryScale.toSeq.flatMap { case (scale, floored) =>
-        Seq("retry_scale" -> scale,
-          "retry_scale_floored" -> (if (floored) 1.0 else 0.0))
-      } ++ tailExtras
+    val extras = BenchRecord.headExtras(cpus,
+      spark.sparkContext.defaultParallelism, serialProxy,
+      (parallelProxy, midProxy, closeProxy), retries,
+      retryScale) ++ tailExtras
     // FULL record (both per-query maps + extras) goes to the committed
     // BENCH_LOCAL.json — the durable artifact the judge reads.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",

@@ -37,6 +37,30 @@ object BenchRecord {
         else (acc, len)
     }._1.reverse.mkString(",")
 
+  /** The extras every record leads with, in the order the stdout clamp
+    * keeps them: the run contract (`cpus` asked for, the session's
+    * `default_parallelism`), the host-speed proxies (serial; parallel
+    * at open, mid and close of the sitting), the outlier-retry count
+    * and, when a same-sf reference was found, the scale the retry rule
+    * normalized it by and whether the 0.8 floor set that scale.
+    */
+  def headExtras(cpus: Int, defaultParallelism: Int, serialProxy: Double,
+      parallelProxies: (Double, Double, Double), retries: Int,
+      retryScale: Option[(Double, Boolean)]): Seq[(String, Double)] = {
+    val (open, mid, close) = parallelProxies
+    Seq("cpus" -> cpus.toDouble,
+      "default_parallelism" -> defaultParallelism.toDouble,
+      "host_serial_proxy_sec" -> serialProxy,
+      "host_parallel_proxy_sec" -> open,
+      "host_parallel_proxy_mid_sec" -> mid,
+      "host_parallel_proxy_close_sec" -> close,
+      "outlier_retries" -> retries.toDouble) ++
+      retryScale.toSeq.flatMap { case (scale, floored) =>
+        Seq("retry_scale" -> scale,
+          "retry_scale_floored" -> (if (floored) 1.0 else 0.0))
+      }
+  }
+
   /** The durable everything-included line for BENCH_LOCAL.json.
     *
     * `retried` records BOTH attempts of every outlier-retried query

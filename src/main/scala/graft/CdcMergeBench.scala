@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max, min}
 
 /** Sustained-ingest throughput for the CDC merge path (r9 verdict
@@ -21,18 +20,9 @@ object CdcMergeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val batchCounts = sys.env.getOrElse("SPARK_GRAFT_MERGE_BATCHES",
       "2,10,25").split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.NioLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.builder().getOrCreate()
     // untimed warmup (codegen/scheduler spin-up, cf. Bench)
     spark.range(1000000L).selectExpr("sum(id)").collect()
 

@@ -179,13 +179,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.builder(cpus = 4).getOrCreate()
     val out = new StringBuilder
     out ++= "# Physical plans (explain formatted)\n\n"
     out ++= s"Generated by `graft.Plans` over `$sfDir`. Things to check "

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Memory-pressure proof for the heavy aggregates (r9 verdict item 5):
   * run a named slice of the inventory under a DELIBERATELY starved
@@ -25,12 +24,7 @@ object SpillProbe {
     val names = queryCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder()
       // starve execution memory: with the caller's small heap this
       // forces UnsafeExternalSorter / aggregation hash maps to spill
       .config("spark.memory.fraction",
@@ -47,7 +41,6 @@ object SpillProbe {
       .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold",
         sys.env.getOrElse("SPARK_GRAFT_FORCE_SPILL_ROWS", "2147483647"))
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
     @volatile var spilledMem = 0L

@@ -38,12 +38,10 @@ object LinearClassifier {
     * breaking the bounded-collect contract exactly at the corpus
     * sizes it exists for. Widen the modulus to 10¹² in that regime
     * (bound holds to ~8×10¹⁵ rows); below it the historical 10⁶
-    * selection is kept bit-identical. Shared with ClassifierProbe so
-    * the probe's reported sample size can never drift from the
-    * classifier's actual selection (ADVICE r8).
+    * selection is kept bit-identical.
     */
-  def sampleSelection(n: Long, sampleN: Int): (Long, Long) = {
-    // public API guard (ADVICE r9): `sampleN * mod` with mod = 10¹²
+  private[ml] def sampleSelection(n: Long, sampleN: Int): (Long, Long) = {
+    // overflow guard (ADVICE r9): `sampleN * mod` with mod = 10¹²
     // would overflow Long past sampleN ≈ 9.2×10⁶ — and a driver-side
     // collect that large has no legitimate caller anyway (the whole
     // contract is a BOUNDED sample). Fail loudly instead of silently

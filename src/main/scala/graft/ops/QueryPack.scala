@@ -144,13 +144,23 @@ object QueryPack {
                     checkpointDir: String): SparkSession = {
     val s2 = parent.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+    useLocalCheckpointManager(s2, checkpointDir)
+    s2
+  }
+
+  /** On a `file:` `checkpointDir`, point `session`'s streaming
+    * checkpoint file manager at the FileSystem-based one (see
+    * [[streamSession]] for why); any other scheme keeps Spark's
+    * default. Only for a session the caller owns: the conf is set on it.
+    */
+  def useLocalCheckpointManager(session: SparkSession,
+                                checkpointDir: String): Unit = {
     val scheme = new org.apache.hadoop.fs.Path(checkpointDir)
-      .getFileSystem(parent.sparkContext.hadoopConfiguration).getScheme
+      .getFileSystem(session.sparkContext.hadoopConfiguration).getScheme
     if (scheme == "file")
-      s2.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      session.conf.set("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing." +
           "FileSystemBasedCheckpointFileManager")
-    s2
   }
 }
 

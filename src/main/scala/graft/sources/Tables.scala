@@ -128,8 +128,8 @@ object Tables {
     *    session zone must BE UTC. The loader ASSERTS that instead of
     *    silently overwriting it (VERDICT r6 item 7: a read that
     *    reconfigures the session changes the semantics of unrelated
-    *    timestamp logic); every entry point (Verify/Bench/ScaleProbe/
-    *    GenScale/Profile/SparkSpec) pins UTC at session construction.
+    *    timestamp logic); every entry point pins UTC at session
+    *    construction through `graft.LocalSession` (so does SparkSpec).
     */
   private def normalizeTs(df: DataFrame, tsType: DataType): DataFrame =
     tsType match {

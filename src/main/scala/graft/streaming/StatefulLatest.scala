@@ -81,12 +81,7 @@ object StatefulLatest {
     spark.conf.getAll.foreach { case (k, v) =>
       if (spark.conf.isModifiable(k)) s2.conf.set(k, v)
     }
-    if (new org.apache.hadoop.fs.Path(checkpoint)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getScheme == "file")
-      s2.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
+    graft.ops.QueryPack.useLocalCheckpointManager(s2, checkpoint)
     import s2.implicits._
     val schema = implicitly[org.apache.spark.sql.Encoder[Change]].schema
     val src = CdcPipeline.fileSource(s2, inDir, schema).as[Change]

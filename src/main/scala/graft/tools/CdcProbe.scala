@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CDC merge-throughput scale probe (VERDICT r6 item 9): replay the
@@ -19,14 +18,7 @@ object CdcProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("localdata/sf10")
     val label = args.lift(1).getOrElse(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.builder().getOrCreate()
     val out = scala.collection.mutable.LinkedHashMap[String, Double]()
 
     val feed = graft.ops.CdcQueries.flatFeed(spark, sfDir).localCheckpoint()

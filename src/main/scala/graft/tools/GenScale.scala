@@ -57,10 +57,7 @@ object GenScale {
     val out = args.lift(1).getOrElse("localdata/sf1")
     val rep = args.lift(2).map(_.toInt).getOrElse(10)
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.LocalSession.builder()
       // Legacy-encoding support: pre-r6 testdata carried TIMESTAMP(NANOS),
       // which Spark 4 rejects unless read as a raw nano-long (same conf
       // Tables.events sets; a no-op for the current timestamp[us] files).
@@ -68,9 +65,7 @@ object GenScale {
       // round-trips the source encoding verbatim and Tables.eventsWindow's
       // encoding sniff handles the output identically to the input.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, out, rep, only)
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -23,16 +22,7 @@ import graft.text.Dedup
 object LifecycleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.NioLocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val fs = new Path("/tmp").getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -61,7 +51,7 @@ object LifecycleProbe {
     val incoming = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
       .localCheckpoint()
-    println(s"[lifecycle] docs=${docs.count()} sf=$sfDir cpus=$cpus")
+    println(s"[lifecycle] docs=${docs.count()} sf=$sfDir cpus=${spark.sparkContext.defaultParallelism}")
 
     timed("shingle_build")(_ => ())(dir =>
       Dedup.buildShingleIndex(existing, dir))

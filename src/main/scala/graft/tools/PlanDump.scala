@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query `explain("formatted")` dumps for the optimization-round
   * plan evidence (`plans/rNN/<query>_{before,after}.txt`): one file per
-  * named query, same harness shape as `graft.Plans` (sf0.01, local[4]).
+  * named query, same harness shape as `graft.Plans` (sf0.01,
+  * `LocalSession` at 4 cpus).
   *
   *   sbt 'runMain graft.tools.PlanDump plans/r15 _before q1,q2'
   */
@@ -14,13 +13,7 @@ object PlanDump {
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.builder(cpus = 4).getOrCreate()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = graft.Plans.resolve(name)(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-curve probe for the two STANDING-ARTIFACT paths — the ones
@@ -21,14 +20,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("localdata/sf1")
     val label = args.lift(1).getOrElse(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.builder().getOrCreate()
     val out = scala.collection.mutable.LinkedHashMap[String, Double]()
     def timed(name: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()

@@ -19,32 +19,50 @@ import org.apache.spark.sql.functions._
   * recall, probed-candidate mass (nprobe/nlist × n — the scan-cost
   * proxy that survives host noise), and wall-clock build/probe times.
   *
-  * Corpus: [[HiDimProbe.genEmbeddings]] (deterministic clustered
-  * mixture — no RNG, distributed generation).
+  * Corpus: [[genEmbeddings]] (deterministic clustered mixture — no
+  * RNG, distributed generation).
   *
   * Usage: runMain graft.tools.ShardScaleProbe [n] [dim] [clusters] [shards]
   */
 object ShardScaleProbe {
+
+  /** Deterministic clustered corpus: (vec_id long, embedding
+    * array<double> of `dim`, label int = cluster). A hash-seeded
+    * mixture (no RNG, reproducible to the bit): `clusters` centers with
+    * uniform[-1,1] coordinates, each vector = its center +
+    * uniform[-1,1] noise per coordinate, so the cluster signal and the
+    * intra-cluster spread carry equal per-coordinate variance: cells
+    * overlap and nprobe buys recall. Pure column
+    * expressions — generation is distributed and codegen'd, no driver
+    * materialization at any n.
+    */
+  def genEmbeddings(spark: SparkSession, n: Long, dim: Int,
+                    clusters: Int): DataFrame = {
+    // uniform [-1, 1] from a 64-bit hash, exactly reproducible
+    def u(cols: org.apache.spark.sql.Column*) =
+      pmod(xxhash64(cols: _*), lit(2000001L)).cast("double") / 1000000.0 - 1.0
+    val c = pmod(col("vec_id"), lit(clusters.toLong)).as("label")
+    spark.range(n).select(col("id").as("vec_id"))
+      .withColumn("label", c)
+      .withColumn("embedding",
+        transform(sequence(lit(0), lit(dim - 1)), j =>
+          u(lit("c"), col("label"), j) + u(lit("n"), col("vec_id"), j)))
+      .select(col("vec_id"), col("embedding"),
+        col("label").cast("int").as("label"))
+  }
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1048576L)
     val dim = args.lift(1).map(_.toInt).getOrElse(64)
     val clusters = args.lift(2).map(_.toInt).getOrElse(2048)
     val shards = args.lift(3).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.builder().getOrCreate()
     import graft.sim.Similarity
 
     val dir = s"/tmp/graft_shardprobe_${n}_$dim"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    HiDimProbe.genEmbeddings(spark, n, dim, clusters, noise = 1.0)
+    genEmbeddings(spark, n, dim, clusters)
       .write.parquet(s"$dir/corpus")
     val vecs = spark.read.parquet(s"$dir/corpus")
 

@@ -54,6 +54,28 @@ class BenchRecordSpec extends AnyFunSuite {
       .foreach(s => assert(tail.contains(s), s"$s not in last 300 chars"))
   }
 
+  test("the run contract, proxies and retry fields lead the extras and " +
+      "all survive the stdout clamp") {
+    val head = BenchRecord.headExtras(cpus = 32, defaultParallelism = 32,
+      serialProxy = 1.874, parallelProxies = (12.531, 13.208, 14.977),
+      retries = 25, retryScale = Some((0.8, true)))
+    val keys = Seq("cpus", "default_parallelism", "host_serial_proxy_sec",
+      "host_parallel_proxy_sec", "host_parallel_proxy_mid_sec",
+      "host_parallel_proxy_close_sec", "outlier_retries", "retry_scale",
+      "retry_scale_floored")
+    assert(head.map(_._1) === keys)
+    val line = BenchRecord.compact(results, head ++ extras, sf)
+    val ex = mapper.readTree(line).get("extras")
+    keys.foreach(k => assert(ex.has(k), s"$k clamped out of $line"))
+    assert(ex.get("cpus").asInt() === 32)
+    assert(ex.get("default_parallelism").asInt() === 32)
+    assert(ex.get("outlier_retries").asInt() === 25)
+    assert(ex.get("retry_scale_floored").asDouble() === 1.0)
+    // no same-sf reference: the two retry_scale fields are absent
+    assert(BenchRecord.headExtras(4, 4, 2.0, (9.0, 9.5, 9.9), 0, None)
+      .map(_._1) === keys.take(7))
+  }
+
   test("full record carries the complete failed list and both query maps") {
     val node = mapper.readTree(BenchRecord.full(results, extras, sf))
     assert(node.get("failed").size() === 60)

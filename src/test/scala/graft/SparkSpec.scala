@@ -10,19 +10,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same local-FS impl as Bench/Verify (NioLocalFileSystem's
-      // fork-free chmod) so suites exercise the FS the engine runs on
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.NioLocalFileSystem")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the entry points' run contract (UTC, NIO local FS, WARN), so suites
+  // exercise the FS and time zone the engine runs on
+  lazy val session: SparkSession = LocalSession.builder(cpus = 4)
+    .appName("graft-test")
+    .config("spark.sql.shuffle.partitions", 8L)
+    .getOrCreate()
 }
