@@ -234,27 +234,31 @@ object Dedup {
     else containmentPairsPrefix(docs, k, threshold)
   }
 
-  /** Rows-per-bucket target for a segment's postings table (~8-10 MB
-    * of parquet per bucket at ~10 B/posting). Scale-adaptive (r14,
-    * guide §2/§6): a FIXED bucket count is wrong at both ends — at
-    * bench SF a 400-doc delta segment paid 32 shuffle tasks + 32
-    * one-KB files + a 32-task probe join per segment (pure fixed cost,
-    * measured 1.71 s → 0.99 s on the 3-segment probe when the tiny
-    * segments collapse to one bucket), while at lake scale 32 buckets
-    * would make multi-GB buckets with no probe parallelism. Buckets =
+  /** Rows-per-bucket target for a segment's postings (~8-10 MB of
+    * parquet per bucket at ~10 B/posting). Scale-adaptive (r14, guide
+    * §2/§6): a FIXED bucket count is wrong at both ends — at bench SF a
+    * 400-doc delta segment paid 32 shuffle tasks + 32 one-KB files + a
+    * 32-task probe join per segment (pure fixed cost, measured 1.71 s →
+    * 0.99 s on the 3-segment probe when the tiny segments collapse to
+    * one bucket), while at lake scale 32 buckets would make multi-GB
+    * buckets with no probe parallelism. Buckets =
     * ceil(postings / target), so the layout grows with the segment:
     * sf0.1 delta → 1, sf10 base → ~20 (today's probe parallelism
-    * preserved), 100 TB corpus → thousands. Per-segment counts are
-    * recorded in the segment's `buckets` metadata — readers re-register
-    * from it, so mixed-count chains stay correct by construction.
+    * preserved), 100 TB corpus → thousands. Each segment records its
+    * count in its `buckets` file, and a chain read groups its segments
+    * by that count, so mixed-count chains stay correct by construction;
+    * it also cuts a group where its postings per bucket would pass this
+    * target ([[scanGroups]]), so no probe task holds more.
+    * Build and append take the target as a package-private
+    * `perBucket` argument, so specs can build mixed-count chains at
+    * test sizes.
     */
-  val BucketRows: Long =
-    sys.props.getOrElse("graft.index.bucket.rows", "1000000").toLong
+  val BucketRows: Long = 1000000L
 
   /** Bucket count for one segment holding `nPostings` rows. */
-  def segmentBuckets(nPostings: Long): Int =
+  def segmentBuckets(nPostings: Long, perBucket: Long = BucketRows): Int =
     math.max(1L, math.min(4096L,
-      (nPostings + BucketRows - 1) / BucketRows)).toInt
+      (nPostings + perBucket - 1) / perBucket)).toInt
 
   /** Declared schemas of a segment's three side files. Every read of
     * them passes its schema: a schema-less `spark.read.parquet` runs a
@@ -266,18 +270,69 @@ object Dedup {
     "postings" -> "doc_id BIGINT, shingle BIGINT",
     "sizes" -> "doc_id BIGINT, n_sh BIGINT",
     "dfreq" -> "shingle BIGINT, df BIGINT")
+    .map { case (f, ddl) =>
+      f -> org.apache.spark.sql.types.StructType.fromDDL(ddl) }
 
-  /** One side file of segment `seg`, read under its declared schema. */
-  private def readSide(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, seg: String, file: String): DataFrame =
-    spark.read.schema(SideSchemas(file)).parquet(s"$dir/$seg/$file")
-
-  /** Catalog name for one version's bucketed postings table —
-    * deterministic from (dir, version) so any session re-derives it.
+  /** The layout postings are written in: `n` buckets on shingle,
+    * sorted by shingle within each file.
     */
-  private def postingsTable(dir: String, version: String): String =
-    ("graft_shidx_" + Integer.toHexString(dir.hashCode) + "_" + version)
-      .replaceAll("[^A-Za-z0-9_]", "_")
+  private def postingsBuckets(n: Int) =
+    org.apache.spark.sql.catalyst.catalog.BucketSpec(n, Seq("shingle"),
+      Seq("shingle"))
+
+  /** Side file `file` of the segments `segs`, as ONE scan under its
+    * declared schema ([[org.apache.spark.sql.graft.ChainRelation]]: one
+    * `listStatus` per segment, no catalog table, no job). Plain, or
+    * bucketed when every segment's postings were written in `buckets`
+    * buckets.
+    */
+  private def readChain(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, segs: Seq[String], file: String,
+                        buckets: Option[Int] = None): DataFrame =
+    org.apache.spark.sql.graft.ChainRelation.read(spark,
+      segs.map(v => s"$dir/$v/$file"), SideSchemas(file),
+      buckets.map(postingsBuckets))
+
+  /** The postings of the segments `segs` as BUCKETED scans, grouped
+    * by [[scanGroups]], plus one plain scan over the pre-bucketing
+    * segments (no `buckets` file): a chain whose segments share a
+    * bucket count is one bucketed scan while its postings per bucket
+    * stay within [[BucketRows]].
+    */
+  private[text] def readPostingsGroups(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      segs: Seq[String]): Seq[DataFrame] = {
+    val fs = graft.sources.SegmentedIndex.fsFor(spark, dir)
+    scanGroups(segs.map(v => v -> readSegmentMeta(fs, dir, v)))
+      .map { case (n, vs) => readChain(spark, dir, vs, "postings", n) }
+  }
+
+  /** The chain `segs`, each with its `buckets` metadata
+    * ([[readSegmentMeta]]), as scan groups (bucket count, segments):
+    * segments of one bucket count share a group, in chain order, while
+    * the group's postings per bucket stay within [[BucketRows]]. Bucket b of
+    * a group's scan is ONE join task over bucket b of every segment in
+    * it, so this keeps a probe task within the bound a segment's own
+    * sizing gives it, and a chain of many segments keeps one task per
+    * (group, bucket). A segment with no recorded postings count is a
+    * group of its own; the pre-bucketing segments are one plain group
+    * (a plain scan splits by file size). Ordered by bucket count,
+    * plain first.
+    */
+  private[text] def scanGroups(
+      segs: Seq[(String, Option[(Int, Option[Long])])])
+      : Seq[(Option[Int], Seq[String])] =
+    segs.groupBy(_._2.map(_._1)).toSeq.sortBy(_._1.getOrElse(0)).flatMap {
+      case (None, vs) => Seq(None -> vs.map(_._1))
+      case (n @ Some(b), vs) =>
+        val rows = vs.map { case (v, m) =>
+          v -> m.flatMap(_._2).fold(Long.MaxValue)(p => (p + b - 1) / b) }
+        rows.foldLeft(Vector.empty[(Long, Vector[String])]) {
+          case (gs :+ ((load, g)), (v, r)) if r <= BucketRows - load =>
+            gs :+ ((load + r, g :+ v))
+          case (gs, (v, r)) => gs :+ ((r, Vector(v)))
+        }.map(n -> _._2)
+    }
 
   /** A segment's `buckets` metadata file: the postings table's bucket
     * count on the first line, the segment's postings count on the
@@ -315,11 +370,16 @@ object Dedup {
     * story as [[graft.sim.Similarity.buildIvfIndex]] (shared
     * [[graft.sources.PointerFile]] primitive).
     *
-    * Scale: at deployment the postings table is registered bucketed on
-    * `shingle` so probes shuffle only the (small) shard side; the
-    * versioned-dir artifact itself is layout-agnostic.
+    * Scale: the postings are written bucketed on `shingle` (see
+    * [[writeSegmentFiles]]) so probes shuffle only the (small) shard
+    * side.
     */
-  def buildShingleIndex(docs: DataFrame, dir: String, k: Int = 3): Unit = {
+  def buildShingleIndex(docs: DataFrame, dir: String, k: Int = 3): Unit =
+    buildShingleIndex(docs, dir, k, BucketRows)
+
+  private[text] def buildShingleIndex(docs: DataFrame, dir: String, k: Int,
+                                      perBucket: Long): Unit =
+      asOp(docs.sparkSession, "buildShingleIndex") {
     import graft.sources.SegmentedIndex
     val spark = docs.sparkSession
     val version = SegmentedIndex.newVersionName()
@@ -338,7 +398,7 @@ object Dedup {
     // write into the agg), one number gained.
     val nPost = arr.agg(coalesce(sum(size(col("sharr")).cast("long")),
       lit(0L))).head().getLong(0)
-    writeKernelSegment(arr, dir, version, nPost)
+    writeKernelSegment(arr, dir, version, nPost, perBucket)
     // all consumers are done — release the kernel cache rather than
     // letting builds accumulate blocks for the session's lifetime
     arr.unpersist(false)
@@ -346,6 +406,24 @@ object Dedup {
     // partial dir can't evict the last committed version (PointerFile)
     SegmentedIndex.commitBuild(spark, dir, version)
   }
+
+  /** Runs `body` with `op` as the call site of the Spark jobs it
+    * starts, then restores the caller's. The name is a local property,
+    * so the jobs other threads start for it — [[concurrently]]'s writes,
+    * AQE's and the broadcast pool's, all of which copy the caller's
+    * local properties — carry it too, instead of the pool frame
+    * (`CompletableFuture$AsyncSupply.run`) their stacks would name.
+    */
+  private def asOp[T](spark: org.apache.spark.sql.SparkSession, op: String)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty(CallSiteShort)
+    sc.setCallSite(op)
+    try body finally sc.setLocalProperty(CallSiteShort, caller)
+  }
+
+  /** The local property `SparkContext.setCallSite` sets. */
+  private val CallSiteShort = "callSite.short"
 
   /** The (doc_id, sharr) kernel a build or append writes, with doc ids
     * cast to the side files' declared BIGINT. Integral ids (TINYINT to
@@ -370,27 +448,29 @@ object Dedup {
     * per-doc count — same n_sh, no shuffle.
     */
   private def writeKernelSegment(arr: DataFrame, dir: String,
-                                 version: String, nPost: Long): Unit =
+                                 version: String, nPost: Long,
+                                 perBucket: Long): Unit =
     writeSegmentFiles(
       arr.select(col("doc_id"), explode(col("sharr")).as("shingle")),
       arr.select(col("doc_id"), size(col("sharr")).cast("long").as("n_sh")),
-      dir, version, nPost)
+      dir, version, nPost, segmentBuckets(nPost, perBucket))
 
   /** The files of one postings segment — shared by build, append and
     * compact so all three get the same bucketed layout and the same
     * write shape. `postings` (doc_id, shingle) and `sizes`
     * (doc_id, n_sh) hold the segment's rows; `nPost` is the postings
-    * row count, which sizes the bucket count.
+    * row count and `buckets` the bucket count it sized.
     *
-    * Postings are written BUCKETED on shingle (and registered in the
-    * catalog): every later probe joins on shingle, and a bucketed scan
-    * gives that join its postings side with ZERO Exchange — only the
-    * (small) incoming shard shuffles, into the bucket partitioning
-    * (plan-asserted in DedupSpec). repartition to the bucket count on
-    * the same key first: repartition and bucketBy share the Murmur3
-    * partitioning, so each task holds exactly one bucket and each
-    * bucket lands in ONE file — the single-file-per-bucket layout the
-    * reader requires to also trust the per-bucket sort order.
+    * Postings are written BUCKETED on shingle, with no catalog table
+    * ([[org.apache.spark.sql.graft.ChainRelation.write]]: each file name
+    * carries its bucket id, as a bucketed `saveAsTable` names it): every
+    * later probe joins on shingle, and a bucketed scan gives that join
+    * its postings side with ZERO Exchange — only the (small) incoming
+    * shard shuffles, into the bucket partitioning (plan-asserted in
+    * DedupSpec). repartition to the bucket count on the same key first:
+    * repartition and the bucketed write share the Murmur3 partitioning,
+    * so each task holds exactly one bucket and each bucket lands in ONE
+    * file.
     *
     * Write-cost shape (r8 reduction pass): the exploded set used to
     * feed THREE shuffled jobs (postings repartition, sizes groupBy
@@ -401,21 +481,17 @@ object Dedup {
     * row-level shuffle, the one that defines its layout.
     *
     * The `buckets` file records the bucket count and `nPost` (see
-    * [[metaPath]]), so a later fold sizes itself without reading any
-    * segment file.
+    * [[metaPath]]): chain reads group segments by the count, and a
+    * later fold sizes itself without reading any segment file.
     */
   private def writeSegmentFiles(postings: DataFrame, sizes: DataFrame,
                                 dir: String, version: String,
-                                nPost: Long): Unit = {
+                                nPost: Long, buckets: Int): Unit = {
     val spark = postings.sparkSession
-    val buckets = segmentBuckets(nPost)
     concurrently(spark)(
-      () => postings
-        .repartition(buckets, col("shingle"))
-        .write.mode("errorifexists")
-        .bucketBy(buckets, "shingle").sortBy("shingle")
-        .option("path", s"$dir/$version/postings")
-        .format("parquet").saveAsTable(postingsTable(dir, version)),
+      () => org.apache.spark.sql.graft.ChainRelation.write(
+        postings.repartition(buckets, col("shingle")),
+        s"$dir/$version/postings", postingsBuckets(buckets)),
       // coalesce (narrow) into bucket-count-order files: uncoalesced,
       // the write inherited the input's partitioning and a 400-doc
       // delta segment paid 32 tasks + 32 one-KB files per append
@@ -423,15 +499,14 @@ object Dedup {
       // reader then re-paid as per-file open cost
       () => sizes.coalesce(buckets)
         .write.mode("errorifexists").parquet(s"$dir/$version/sizes"))
-    // bucket-count metadata FIRST so readPostings can re-register
     val fs = graft.sources.SegmentedIndex.fsFor(spark, dir)
     val bf = fs.create(metaPath(dir, version), true)
     try bf.write(s"$buckets\n$nPost".getBytes("UTF-8")) finally bf.close()
-    // df per shingle = count over this segment's postings — computed
-    // off the BUCKETED table just written, so the aggregation's
-    // required hash-partitioning on shingle is satisfied by the scan
-    // itself: no Exchange, cost = one local re-read of the segment
-    readPostings(spark, dir, version)
+    // df per shingle = count over this segment's postings — read back
+    // BUCKETED, so the aggregation's required hash-partitioning on
+    // shingle is satisfied by the scan itself: no Exchange, cost = one
+    // local re-read of the segment
+    readChain(spark, dir, Seq(version), "postings", Some(buckets))
       .groupBy("shingle").agg(count(lit(1)).as("df"))
       .write.mode("errorifexists").parquet(s"$dir/$version/dfreq")
   }
@@ -462,29 +537,6 @@ object Dedup {
     } finally pool.shutdown()
   }
 
-  /** The version's postings as the registered BUCKETED table,
-    * re-registering under the declared postings schema from the
-    * `buckets` metadata's first line when this session has not seen it
-    * (bucket ids recover from Spark's bucketed file names).
-    * Pre-bucketing versions (no `buckets` file) read as plain parquet
-    * under the same schema — layout-compatible, just without the
-    * co-location. No path runs a Spark job.
-    */
-  private def readPostings(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, version: String): DataFrame = {
-    val fs = graft.sources.SegmentedIndex.fsFor(spark, dir)
-    readSegmentMeta(fs, dir, version) match {
-      case None => readSide(spark, dir, version, "postings")
-      case Some((n, _)) =>
-        val tbl = postingsTable(dir, version)
-        if (!spark.catalog.tableExists(tbl))
-          spark.sql(s"CREATE TABLE $tbl (${SideSchemas("postings")}) " +
-            s"USING parquet CLUSTERED BY (shingle) SORTED BY (shingle) " +
-            s"INTO $n BUCKETS LOCATION '$dir/$version/postings'")
-        spark.table(tbl)
-    }
-  }
-
   /** The postings SEGMENTS a version's data lives in: the `segments`
     * text manifest when present ([[appendShingleIndex]] versions), else
     * the version itself (a base [[buildShingleIndex]] — backward
@@ -499,11 +551,11 @@ object Dedup {
     * — continuous corpus ingestion for the standing dedup artifact,
     * the text mirror of `Similarity.appendIvfIndex`. The incoming
     * docs' postings/sizes/dfreq are written as a new SEGMENT (postings
-    * bucketed on shingle exactly like the base build, so every
-    * segment's pair join keeps its zero-Exchange co-location), plus a
-    * `segments` manifest = parent's manifest + itself; one atomic
-    * `_CURRENT` flip commits. I/O ∝ |delta| — never a rebuild — and
-    * probes fan out across ALL manifest segments. Doc ids must be new
+    * bucketed on shingle exactly like the base build, so the probe's
+    * bucketed scan of the chain keeps its zero-Exchange co-location),
+    * plus a `segments` manifest = parent's manifest + itself; one
+    * atomic `_CURRENT` flip commits. I/O ∝ |delta| — never a rebuild —
+    * and probes read ALL manifest segments. Doc ids must be new
     * (a doc lives wholly in one segment; same contract as the IVF
     * append), so per-segment candidate pairs are disjoint and the
     * union is exact. Crash-safety inherits the build's protocol: a
@@ -512,32 +564,42 @@ object Dedup {
     * pins every segment a kept version still references.
     */
   def appendShingleIndex(dir: String, newDocs: DataFrame, k: Int = 3,
-                         tag: Option[String] = None): Unit = {
+                         tag: Option[String] = None): Unit =
+    appendShingleIndex(dir, newDocs, k, tag, BucketRows)
+
+  private[text] def appendShingleIndex(dir: String, newDocs: DataFrame,
+                                       k: Int, tag: Option[String],
+                                       perBucket: Long): Unit =
+      asOp(newDocs.sparkSession, "appendShingleIndex") {
     import graft.sources.SegmentedIndex
     val spark = newDocs.sparkSession
     val parent = SegmentedIndex.currentVersion(spark, dir)
     val parentSegs = indexSegments(spark, dir, parent)
     // exactly-once under foreachBatch replay (cf. appendIvfIndex)
-    if (SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag)) return
-    val version = SegmentedIndex.newVersionName()
-    val arr = segmentKernel(newDocs, k).cache()
-    // one eager job materializes the kernel, decides emptiness, AND
-    // sizes the delta segment's bucket count (r14): a quiet ingest
-    // tick (no docs, or none long enough to shingle) commits nothing —
-    // an empty segment would be a schema-less parquet dir later probes
-    // choke on. Folding the old separate newDocs.isEmpty scan into the
-    // agg saves one job per micro-batch; skipping the shingle-less
-    // case also skips the zero-row segment the old path would have
-    // committed.
-    val nPost = arr.agg(coalesce(sum(size(col("sharr")).cast("long")),
-      lit(0L))).head().getLong(0)
-    if (nPost == 0) { arr.unpersist(false); return }
-    writeKernelSegment(arr, dir, version, nPost)
-    // delta kernel fully consumed — release (streaming ingest calls
-    // this once per micro-batch; leaked blocks would grow ∝ stream age)
-    arr.unpersist(false)
-    SegmentedIndex.commitAppend(spark, dir, version, parent,
-      parentSegs, tag)
+    if (!SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag)) {
+      val version = SegmentedIndex.newVersionName()
+      val arr = segmentKernel(newDocs, k).cache()
+      // one eager job materializes the kernel, decides emptiness, AND
+      // sizes the delta segment's bucket count (r14): a quiet ingest
+      // tick (no docs, or none long enough to shingle) commits nothing
+      // — an empty segment would be a schema-less parquet dir later
+      // probes choke on. Folding the old separate newDocs.isEmpty scan
+      // into the agg saves one job per micro-batch; skipping the
+      // shingle-less case also skips the zero-row segment the old path
+      // would have committed.
+      val nPost = arr.agg(coalesce(sum(size(col("sharr")).cast("long")),
+        lit(0L))).head().getLong(0)
+      if (nPost == 0) arr.unpersist(false)
+      else {
+        writeKernelSegment(arr, dir, version, nPost, perBucket)
+        // delta kernel fully consumed — release (streaming ingest calls
+        // this once per micro-batch; leaked blocks would grow ∝ stream
+        // age)
+        arr.unpersist(false)
+        SegmentedIndex.commitAppend(spark, dir, version, parent,
+          parentSegs, tag)
+      }
+    }
   }
 
   /** foreachBatch sink for STREAMING corpus ingest into a persisted
@@ -548,8 +610,8 @@ object Dedup {
     * micro-batch finds its tag on the committed segment chain and
     * no-ops, while a RESET checkpoint mints a fresh tag namespace.
     * Appending whole documents per batch keeps the segment invariant
-    * (a doc lives wholly in one segment), so the probe's per-segment
-    * pair union is batch-split-invariant — streamed ingest ≡ one flat
+    * (a doc lives wholly in one segment), so the probe's pairs are
+    * batch-split-invariant — streamed ingest ≡ one flat
     * append ≡ a rebuilt index.
     *
     * `maxSegments > 0` turns on SELF-MAINTAINING ingest: after each
@@ -575,10 +637,12 @@ object Dedup {
     * whole segment chain back into ONE bucketed segment — the missing
     * third verb of the standing-index lifecycle (build/append/compact,
     * the same role minor compaction plays in every LSM store). Appends
-    * keep ingest I/O ∝ |delta|, but each one adds a segment the probe
-    * must fan out over (one bucketed pair join + one postings file set
-    * per segment); after N appends that per-segment fixed cost, not
-    * data volume, dominates probe latency. Compaction rewrites the
+    * keep ingest I/O ∝ |delta|, but each one adds a postings file set
+    * per bucket to the probe's scan (and a segment whose bucket count
+    * differs from the chain's, or that would take a probe task past
+    * [[BucketRows]], adds a scan and a pair join of its own);
+    * after N appends that per-segment fixed cost, not data volume,
+    * dominates probe latency. Compaction rewrites the
     * union of all segment postings through the one layout-defining
     * shuffle a base build pays (bucketed on shingle, one file per
     * bucket), unions the per-doc sizes verbatim (a doc lives wholly in
@@ -600,11 +664,21 @@ object Dedup {
     * in-flight probes. No-op when the chain is already one segment.
     */
   def compactShingleIndex(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Unit = {
+                          dir: String): Unit =
+      asOp(spark, "compactShingleIndex") {
     import graft.sources.SegmentedIndex
     val parent = SegmentedIndex.currentVersion(spark, dir)
     val segs = indexSegments(spark, dir, parent)
-    if (segs.size <= 1) return
+    if (segs.size > 1) foldChain(spark, dir, parent, segs)
+  }
+
+  /** The fold of [[compactShingleIndex]]: the chain `segs` of version
+    * `parent`, rewritten as one segment and committed.
+    */
+  private def foldChain(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, parent: String,
+                        segs: Seq[String]): Unit = {
+    import graft.sources.SegmentedIndex
     val version = SegmentedIndex.newVersionName()
     val fs = SegmentedIndex.fsFor(spark, dir)
     // bucket count sized from the FOLDED total, as a build sizes its
@@ -617,24 +691,22 @@ object Dedup {
     val legacy = counts.collect { case (v, None) => v }
     val nPost = counts.flatMap(_._2).sum +
       (if (legacy.isEmpty) 0L
-       else legacy.map(v => readSide(spark, dir, v, "sizes"))
-         .reduce(_ unionAll _)
+       else readChain(spark, dir, legacy, "sizes")
          .agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0))
-    // read each segment's postings as PLAIN parquet, not the catalog's
-    // bucketed table: a union of identically-bucketed scans already
-    // reports the target hash partitioning, so Catalyst elides the
-    // repartition in writeSegmentFiles — and the bucketed WRITE then
-    // runs on the concatenated per-segment partitions, emitting one
-    // file per (segment, bucket) instead of per bucket, i.e. exactly
-    // the file population compaction exists to collapse. A plain scan
-    // carries no partitioning claim, so the layout-defining shuffle
-    // survives. Sizes union verbatim (a doc lives wholly in one
-    // segment); df is recomputed off the new bucketed postings, which
-    // equals the probe's summed-across-segments df.
-    def union(file: String) =
-      segs.map(v => readSide(spark, dir, v, file)).reduce(_ unionAll _)
-    writeSegmentFiles(union("postings"), union("sizes"), dir, version,
-      nPost)
+    // read the chain's postings as ONE PLAIN scan, not a bucketed one:
+    // a bucketed scan already reports the target hash partitioning, so
+    // Catalyst would elide the repartition in writeSegmentFiles — and
+    // the bucketed WRITE would then emit one file per (segment, bucket)
+    // instead of per bucket, i.e. exactly the file population
+    // compaction exists to collapse (and a chain of mixed bucket counts
+    // has no one partitioning to claim). A plain scan carries no
+    // partitioning claim, so the layout-defining shuffle survives.
+    // Sizes carry over verbatim (a doc lives wholly in one segment); df
+    // is recomputed off the new bucketed postings, which equals the
+    // probe's summed-across-segments df.
+    writeSegmentFiles(readChain(spark, dir, segs, "postings"),
+      readChain(spark, dir, segs, "sizes"), dir, version, nPost,
+      segmentBuckets(nPost))
     SegmentedIndex.commitCompact(spark, dir, version, parent,
       SegmentedIndex.committedTags(fs, dir, segs))
   }
@@ -655,12 +727,12 @@ object Dedup {
     val ver = SegmentedIndex.currentVersion(spark, dir)
     SegmentedIndex.segments(spark, dir, ver).zipWithIndex.map {
       case (seg, i) =>
-        readSide(spark, dir, seg, "sizes")
+        readChain(spark, dir, Seq(seg), "sizes")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_sh")).as("n_postings"),
             min(col("doc_id")).as("min_doc"),
             max(col("doc_id")).as("max_doc"))
-          .crossJoin(readSide(spark, dir, seg, "dfreq")
+          .crossJoin(readChain(spark, dir, Seq(seg), "dfreq")
             .agg(count(lit(1)).as("n_shingles")))
           .select(lit(i).as("seg_ord"), col("n_docs"),
             col("n_postings"), col("n_shingles"),
@@ -706,16 +778,18 @@ object Dedup {
     */
   def searchShingleIndex(spark: org.apache.spark.sql.SparkSession,
                          dir: String, phrase: String, docs: DataFrame,
-                         k: Int = 3): DataFrame = {
+                         k: Int = 3): DataFrame =
+      asOp(spark, "searchShingleIndex") {
     import graft.sources.SegmentedIndex
     val ver = SegmentedIndex.currentVersion(spark, dir)
     val sh = phraseShingles(spark, phrase, k)
     // within one segment postings are distinct (doc, shingle) pairs
     // and a doc lives wholly in one segment — count(*) == n distinct
-    // matched shingles; == |needle shingles| is the conjunction
-    val cands = indexSegments(spark, dir, ver)
-      .map(v => readPostings(spark, dir, v))
-      .reduce(_ unionAll _)
+    // matched shingles; == |needle shingles| is the conjunction. One
+    // plain scan over the chain: the filter and the doc_id aggregate
+    // gain nothing from the shingle buckets.
+    val cands = readChain(spark, dir, indexSegments(spark, dir, ver),
+        "postings")
       .filter(col("shingle").isin(sh: _*))
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
       .filter(col("n_hit") === sh.distinct.length)
@@ -731,12 +805,16 @@ object Dedup {
     * [[crossCorpusPairs]](indexed corpus, incoming) — a_id from the
     * standing corpus, b_id from the shard — but the corpus-side
     * shingling, sizing, and document frequencies are READ, not
-    * recomputed. The probe fans out across every SEGMENT the current
-    * version's manifest lists (one for a plain build, one more per
-    * append): a corpus doc lives wholly in one segment, so per-segment
-    * candidate pairs are disjoint and their union is exact, while each
-    * segment's pair join keeps its own bucketed zero-Exchange
-    * co-location. `maxPostings` drops degenerate boilerplate shingles
+    * recomputed. The probe reads every SEGMENT the current version's
+    * manifest lists (one for a plain build, one more per append) as
+    * bucketed postings scans grouped by bucket count
+    * ([[readPostingsGroups]]) — ONE scan and ONE pair join for a
+    * uniform chain while its postings per bucket stay within
+    * [[BucketRows]] — each join keeping its zero-Exchange
+    * bucketed co-location; `sizes` and `dfreq` are one scan each. A
+    * corpus doc lives wholly in one segment, so candidate pairs from
+    * different segments are disjoint and their union is exact.
+    * `maxPostings` drops degenerate boilerplate shingles
     * via the precomputed df tables — document frequency is summed
     * ACROSS segments first, so the capped universe is identical to a
     * rebuilt index's (a per-segment cap would resurrect boilerplate
@@ -746,16 +824,16 @@ object Dedup {
     */
   def probeShingleIndex(dir: String, incoming: DataFrame, k: Int = 3,
                         threshold: Double = 0.8,
-                        maxPostings: Int = Int.MaxValue): DataFrame = {
+                        maxPostings: Int = Int.MaxValue): DataFrame =
+      asOp(incoming.sparkSession, "probeShingleIndex") {
     val spark = incoming.sparkSession
     val version =
       graft.sources.SegmentedIndex.currentVersion(spark, dir)
     val segs = indexSegments(spark, dir, version)
-    val segPostings = segs.map(v => readPostings(spark, dir, v))
-    val exSizes = segs.map(v => readSide(spark, dir, v, "sizes"))
-      .reduce(_ unionAll _)
+    val postings = readPostingsGroups(spark, dir, segs)
+    val exSizes = readChain(spark, dir, segs, "sizes")
     // localCheckpoint, not cache (cf. ngramJaccardPairs): the probe
-    // references the shard kernel once per segment join PLUS the n_b
+    // references the shard kernel once per postings join PLUS the n_b
     // sizes, and AQE materializes those exchanges concurrently — a
     // lazy cache lets them race past the unfilled cache and run the
     // kernel several times. The eager checkpoint computes it exactly
@@ -773,11 +851,9 @@ object Dedup {
     // The shard keeps its novel (df-absent) shingles: only shingles
     // KNOWN to be over-cap are removed from it.
     val (posts, in, exSizesEff) =
-      if (maxPostings == Int.MaxValue) (segPostings, in0, exSizes)
+      if (maxPostings == Int.MaxValue) (postings, in0, exSizes)
       else {
-        val dfreq = segs
-          .map(v => readSide(spark, dir, v, "dfreq"))
-          .reduce(_ unionAll _)
+        val dfreq = readChain(spark, dir, segs, "dfreq")
           .groupBy("shingle").agg(sum(col("df")).as("df"))
         val overCap = dfreq.filter(col("df") > maxPostings)
           .select("shingle")
@@ -791,10 +867,10 @@ object Dedup {
         // fixed shard; anti-join restores ~uncapped cost). Equivalent
         // filter: every postings shingle is in dfreq, so
         // "not over-cap" ≡ "under-cap".
-        val p = segPostings.map(
+        val p = postings.map(
           _.join(broadcast(overCap), Seq("shingle"), "left_anti"))
         val i = in0.join(broadcast(overCap), Seq("shingle"), "left_anti")
-        val drops = segPostings.reduce(_ unionAll _)
+        val drops = readChain(spark, dir, segs, "postings")
           .join(broadcast(overCap), Seq("shingle"))
           .groupBy("doc_id").agg(count(lit(1)).as("n_drop"))
         val adj = exSizes.join(drops, Seq("doc_id"), "left")
@@ -802,15 +878,12 @@ object Dedup {
             (col("n_sh") - coalesce(col("n_drop"), lit(0L))).as("n_sh"))
         (p, i, adj)
       }
-    // ONE shard subtree shared by every segment branch (a per-branch
-    // select would mint fresh exprIds and defeat ReuseExchange — the
-    // shard's move into the bucket partitioning, or its broadcast,
-    // then materializes once instead of once per segment), and ONE
-    // pair aggregation above the union: per-segment candidate sets
-    // are disjoint (a doc lives wholly in one segment), so the
-    // map-side partial aggs run inside each branch and a single
-    // exchange carries the same total rows S per-segment exchanges
-    // did — minus (S−1) stages of fixed overhead.
+    // one pair join per bucket-count group (one in a uniform chain),
+    // all sharing ONE shard subtree (a per-join select would mint fresh
+    // exprIds and defeat ReuseExchange — the shard's broadcast then
+    // materializes once), and ONE pair aggregation above them: the
+    // groups' candidate sets are disjoint (a doc lives wholly in one
+    // segment)
     val inSel = in.select(col("doc_id").as("b_id"), col("shingle"))
     val common = posts.map(pp =>
         pp.select(col("doc_id").as("a_id"), col("shingle"))

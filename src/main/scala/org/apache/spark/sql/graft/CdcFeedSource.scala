@@ -178,7 +178,7 @@ object CdcFeedSource {
   private val MaxFilesPerTrigger = "maxFilesPerTrigger"
 
   /** Spark's hidden-path rule for streamed and listed files. */
-  private def hidden(name: String): Boolean =
+  private[graft] def hidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")
 

@@ -149,28 +149,52 @@ class DedupSpec extends SparkSpec {
       .except(recomputed).isEmpty)
   }
 
-  test("probe joins the standing postings WITHOUT shuffling them " +
-       "(bucketed registration), and re-registers in a fresh catalog") {
+  test("probe joins the standing postings WITHOUT shuffling them: one " +
+       "bucketed postings scan at chain lengths 1-4, no catalog table") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val dir = java.nio.file.Files.createTempDirectory("shidxb").toString
     val existing = planted.filter(col("doc_id") < 1000000L)
     val incoming = planted.filter(col("doc_id") >= 1000000L)
-    Dedup.buildShingleIndex(existing, dir)
+    // a uniform chain: every segment sizes to the same bucket count
+    def slice(i: Int) = existing.filter(col("doc_id") % 4 === i)
+    // a pair's Jaccard depends on its two docs only, so the chain of
+    // the first `len` slices answers the full recompute's pairs whose
+    // a_id is in those slices
     val expected = Dedup.crossCorpusPairs(existing, incoming, k = 3,
       threshold = 0.8).collect().toSet
+    def expectedAt(len: Int) = expected.filter(_.getLong(0) % 4 < len)
+    def noTables(after: String): Unit =
+      assert(spark.sql("SHOW TABLES").collect().map(_.getString(1))
+        .filter(_.startsWith("graft_shidx_")).isEmpty, after)
+    object Aqe extends AdaptiveSparkPlanHelper
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     // disable auto-broadcast: at test SF the shard side would
     // broadcast (also shuffle-free), hiding the bucket co-location the
-    // registration exists for — the big-shard regime at lake scale
+    // bucketed read exists for — the big-shard regime at lake scale
     spark.conf.set(key, "-1")
-    def assertColocated(): Unit = {
+    def segs = Dedup.indexSegments(spark, dir,
+      graft.sources.SegmentedIndex.currentVersion(spark, dir))
+    // `len` slices indexed, in `nSegs` segments
+    def assertColocated(len: Int, nSegs: Int): Unit = {
+      assert(segs.size === nSegs)
       val probed = Dedup.probeShingleIndex(dir, incoming, k = 3,
         threshold = 0.8)
-      assert(probed.collect().toSet === expected)
+      assert(probed.collect().toSet === expectedAt(len), s"chain $len")
+      noTables(s"probe at chain $len")
+      val exec = probed.queryExecution.executedPlan
+      val postingsScans = Aqe.collect(exec) {
+        case s: FileSourceScanExec
+          if s.relation.location.rootPaths.forall(_.getName == "postings") =>
+          s
+      }
+      assert(postingsScans.size === 1, s"chain $len:\n$exec")
+      assert(postingsScans.head.bucketedScan, s"chain $len:\n$exec")
+      assert(postingsScans.head.relation.location.rootPaths.size === nSegs)
       // AQE's toString prints the Final AND Initial plans — count
       // exchanges only in the final (executed) section
-      val plan = probed.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
+      val plan = exec.toString.split("== Initial Plan ==")(0)
       assert(plan.contains("Bucketed: true"), plan)
       // the ONLY shingle-key exchange is the incoming shard moving
       // into the bucket partitioning; the postings side reads in place
@@ -181,14 +205,23 @@ class DedupSpec extends SparkSpec {
           plan)
     }
     try {
-      assertColocated()
-      // simulate a NEW session/JVM probing the standing artifact: drop
-      // every registered postings table, forcing re-registration from
-      // the on-disk `buckets` metadata over the already-written files
-      spark.sql("SHOW TABLES").collect()
-        .map(_.getString(1)).filter(_.startsWith("graft_shidx_"))
-        .foreach(t => spark.sql(s"DROP TABLE $t"))
-      assertColocated()
+      Dedup.buildShingleIndex(slice(0), dir)
+      noTables("build")
+      assertColocated(1, 1)
+      (1 until 4).foreach { i =>
+        Dedup.appendShingleIndex(dir, slice(i))
+        noTables(s"append $i")
+        assertColocated(i + 1, i + 1)
+      }
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val counts = segs.map(v => graft.sources.PointerFile.read(fs,
+        new org.apache.hadoop.fs.Path(s"$dir/$v/buckets"))
+        .linesIterator.next())
+      assert(counts.distinct.size === 1, s"not uniform: $counts")
+      Dedup.compactShingleIndex(spark, dir)
+      noTables("fold")
+      assertColocated(4, 1)
     } finally spark.conf.set(key, prev)
   }
 

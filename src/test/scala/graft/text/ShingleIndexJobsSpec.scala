@@ -18,8 +18,9 @@ import graft.sources.{PointerFile, SegmentedIndex}
   * segments' recorded postings counts), so the fold and the probe run
   * the same number of jobs at any chain length; every job a call
   * starts, also the concurrent writes, carries the caller's local
-  * properties; segments written before the count line fold and probe
-  * as before; and doc ids are stored as BIGINT.
+  * properties and the op's name as its call site; segments written
+  * before the count line fold and probe as before; and doc ids are
+  * stored as BIGINT.
   */
 class ShingleIndexJobsSpec extends SparkSpec {
 
@@ -130,13 +131,47 @@ class ShingleIndexJobsSpec extends SparkSpec {
     assert(segs(dir).size === 1)
   }
 
+  test("every job of append, fold and probe carries its op's call " +
+       "site; the caller's is restored and names the probe's result") {
+    val dir = chain(2, fresh("shsites"))
+    val sc = spark.sparkContext
+    def named(site: String, jobs: Seq[(Properties, String)]): Unit = {
+      assert(jobs.nonEmpty, site)
+      val other = jobs.filterNot(j =>
+        j._1.getProperty("callSite.short") == site && j._2 == site)
+      assert(other.isEmpty,
+        s"${other.size} of ${jobs.size} jobs not named $site:\n" +
+          sites(other))
+    }
+    // resolved outside the listener: reading the corpus infers its
+    // schema in a job of the spec's own
+    val delta = incoming.filter(col("doc_id") % 2 === 0)
+    val shard = incoming
+    sc.setCallSite("spec.caller")
+    try {
+      named("appendShingleIndex",
+        jobsOf(Dedup.appendShingleIndex(dir, delta)))
+      var probed: DataFrame = null
+      named("probeShingleIndex", jobsOf {
+        probed = Dedup.probeShingleIndex(dir, shard, k = 3, threshold = 0.8)
+      })
+      assert(sc.getLocalProperty("callSite.short") === "spec.caller")
+      // the probe's result is lazy: its jobs run in the caller's action,
+      // under the caller's call site, AQE's and the broadcast's included
+      named("spec.caller", jobsOf(probed.collect()))
+      named("compactShingleIndex",
+        jobsOf(Dedup.compactShingleIndex(spark, dir)))
+      assert(sc.getLocalProperty("callSite.short") === "spec.caller")
+    } finally sc.clearCallSite()
+    assert(segs(dir).size === 1)
+  }
+
   test("segments without the count line fold and probe like a " +
        "rebuild, to the new path's bucket count") {
     val counted = chain(3, fresh("shcounted"))
     val legacy = chain(3, fresh("shlegacy"))
     // rewrite two of the legacy chain's `buckets` files to the old
-    // one-line form, and drop its registered tables so the probe
-    // re-registers from those files
+    // one-line form
     segs(legacy).take(2).foreach { v =>
       val p = new Path(s"$legacy/$v/buckets")
       val first = PointerFile.read(fs, p).linesIterator.next()
@@ -144,9 +179,9 @@ class ShingleIndexJobsSpec extends SparkSpec {
       try out.write(first.getBytes("UTF-8")) finally out.close()
       assert(PointerFile.read(fs, p) === first)
     }
-    spark.sql("SHOW TABLES").collect().map(_.getString(1))
-      .filter(_.startsWith("graft_shidx_")).foreach(t =>
-        spark.sql(s"DROP TABLE $t"))
+    // the chain reads register no table, so there is none to drop
+    assert(spark.sql("SHOW TABLES").collect().map(_.getString(1))
+      .filter(_.startsWith("graft_shidx_")).isEmpty)
     val rebuilt = fresh("shrebuilt")
     Dedup.buildShingleIndex(existing, rebuilt)
     assertSame(probe(legacy), probe(rebuilt), "legacy chain probe")
