@@ -559,13 +559,6 @@ object Bench {
     val (memoSize, memoHits) = sim.Similarity.trainingMemoStats
     extras("train_memo_artifacts") = memoSize.toDouble
     extras("train_memo_hits") = memoHits.toDouble
-    // cross-PROCESS reuse (r13): artifacts answered from the on-disk
-    // mirror vs trained-and-written this JVM — when the driver's
-    // Verify ran first, disk_hits > 0 and writes ≈ 0 means this
-    // sitting paid no training cost at all
-    val (diskHits, diskWrites) = sim.Similarity.trainingDiskStats
-    extras("train_disk_hits") = diskHits.toDouble
-    extras("train_disk_writes") = diskWrites.toDouble
     extras.toSeq
   }
 }

@@ -1,8 +1,13 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ChainRelation
+import org.apache.spark.sql.types._
+
+import graft.sources.SegmentedIndex
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -119,129 +124,13 @@ object Similarity {
   private val trainMemo =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  // ---- cross-JVM artifact persistence (VERDICT r12 item 5) ---------
-  // The memory memo dies with the JVM, but the driver's own harness is
-  // a Verify-then-Bench PROCESS PAIR over the same corpus, and a
-  // production restart is the same shape — both retrain artifacts a
-  // previous process already computed. A disk mirror under a stable
-  // root closes that: every artifact is a pure deterministic function
-  // of its key (which since r13 includes the corpus's physical
-  // identity — paths + file-listing digest — so staleness is a key
-  // change, not a cache bug), so a file on disk is bit-identical to
-  // what retraining would produce and every oracle stays green.
-  // Commit protocol is the index stores' write-then-atomic-rename: a
-  // torn write is an unreadable temp file, never a half artifact; an
-  // unreadable/corrupt file deserializes to a miss and is rewritten.
-  // Default root lives under the repo's `localdata/` (NOT /tmp: the
-  // cache is deserialized, so it must not sit in a world-writable
-  // dir), overridable or disable-able (empty string) via
-  // SPARK_GRAFT_TRAIN_CACHE or [[setTrainingArtifactDir]].
-  @volatile private var persistRoot: Option[String] =
-    sys.env.get("SPARK_GRAFT_TRAIN_CACHE") match {
-      case Some("") => None
-      case Some(d)  => Some(d)
-      case None     =>
-        // default ONLY when the process already sits in a workspace
-        // that has a `localdata/` dir (this repo's run layout): a
-        // library consumer at an arbitrary cwd must not get a
-        // default-on disk write under whatever their cwd happens to
-        // be — they opt in via the env var or the setter.
-        val d = new java.io.File("localdata")
-        if (d.isDirectory)
-          Some(new java.io.File(d, "train_cache").getAbsolutePath)
-        else None
-    }
-
-  def setTrainingArtifactDir(dir: Option[String]): Unit =
-    persistRoot = dir
-
-  def trainingArtifactDir: Option[String] = persistRoot
-
-  private def artifactFile(root: String, key: String): java.io.File = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(("v1|" + key).getBytes("UTF-8"))
-    new java.io.File(root, java.util.Base64.getUrlEncoder
-      .withoutPadding.encodeToString(md) + ".bin")
-  }
-
-  // Deserialization allowlist (ADVICE r13, medium): the cache root can
-  // be pointed at a shared/group-writable dir via SPARK_GRAFT_TRAIN_CACHE,
-  // where a planted .bin would otherwise be a gadget-chain surface.
-  // Cached artifact shapes are exactly arrays of doubles, Tuple2
-  // (incl. specialized), and boxed primitives — nothing outside
-  // java.lang / scala needs to deserialize. Anything else is REJECTED
-  // and the load degrades to a miss (retrain), never an execution.
-  private val artifactFilter = java.io.ObjectInputFilter.Config
-    .createFilter("java.lang.*;scala.**;maxdepth=24;maxrefs=100000000;!*")
-
-  private def diskLoad(root: String, key: String): Option[AnyRef] = {
-    val f = artifactFile(root, key)
-    if (!f.isFile) None
-    else try {
-      val in = new java.io.ObjectInputStream(
-        new java.io.BufferedInputStream(new java.io.FileInputStream(f)))
-      in.setObjectInputFilter(artifactFilter)
-      try Some(in.readObject()) finally in.close()
-    } catch { case _: Throwable => None }
-  }
-
-  /** Newest-K bound on the disk mirror (ADVICE r13, low): every
-    * in-place corpus rewrite keys a fresh artifact, so without
-    * eviction stale .bin files accumulate forever. Matches MemoCap —
-    * far above any real inventory's distinct (corpus, params) count.
+  /** Drop every memoized training artifact (for tests that rewrite a
+    * corpus in place at unchanged cardinality faster than filesystem
+    * mtime granularity can key it).
     */
-  private[sim] val DiskMirrorCap = 256
-
-  /** @return true iff the artifact verifiably landed (ADVICE r13: the
-    * write-count must not claim writes a failed store swallowed).
-    */
-  private def diskStore(root: String, key: String, v: AnyRef): Boolean =
-    try {
-      val dir = new java.io.File(root)
-      dir.mkdirs()
-      val tmp = java.io.File.createTempFile("train_", ".tmp", dir)
-      val out = new java.io.ObjectOutputStream(
-        new java.io.BufferedOutputStream(
-          new java.io.FileOutputStream(tmp)))
-      try out.writeObject(v) finally out.close()
-      java.nio.file.Files.move(tmp.toPath, artifactFile(root, key).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-      // prune OLDEST beyond the cap, after the new artifact is live;
-      // racing writers at worst re-delete already-deleted files
-      val bins = dir.listFiles()
-      if (bins != null) {
-        val committed = bins.filter(_.getName.endsWith(".bin"))
-        if (committed.length > DiskMirrorCap)
-          committed.sortBy(f => (f.lastModified, f.getName))
-            .dropRight(DiskMirrorCap).foreach(_.delete())
-      }
-      true
-    } catch { case _: Throwable => false } // cache write is best-effort
-
-  /** Drop every memoized training artifact — memory AND the disk
-    * mirror (for tests that rewrite a corpus in place at unchanged
-    * cardinality faster than filesystem mtime granularity can key it).
-    */
-  def clearTrainingMemo(): Unit = {
-    trainMemo.clear(); memoHits.set(0)
-    diskHitsCtr.set(0); diskWritesCtr.set(0)
-    persistRoot.foreach { root =>
-      val kids = new java.io.File(root).listFiles()
-      if (kids != null)
-        kids.filter(_.getName.endsWith(".bin")).foreach(_.delete())
-    }
-  }
-
-  /** Drop ONLY the in-memory memo, leaving the disk mirror intact —
-    * how a spec simulates a JVM restart (the disk mirror is exactly
-    * the state a fresh process would find).
-    */
-  private[sim] def dropMemoryMemo(): Unit = trainMemo.clear()
+  def clearTrainingMemo(): Unit = { trainMemo.clear(); memoHits.set(0) }
 
   private val memoHits = new java.util.concurrent.atomic.AtomicLong(0)
-  private val diskHitsCtr = new java.util.concurrent.atomic.AtomicLong(0)
-  private val diskWritesCtr = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Observability for specs and the bench record: distinct artifacts
     * cached / lookups answered from the in-memory cache since the last
@@ -249,15 +138,6 @@ object Similarity {
     */
   def trainingMemoStats: (Int, Long) = (trainMemo.size, memoHits.get)
 
-  /** (artifacts loaded from the disk mirror, artifacts written to it)
-    * since the last clear — the cross-process reuse evidence.
-    */
-  def trainingDiskStats: (Long, Long) = (diskHitsCtr.get, diskWritesCtr.get)
-
-  /** get/putIfAbsent (NOT computeIfAbsent: the loader runs Spark jobs
-    * and CHM forbids re-entrant updates). A lost race recomputes the
-    * same deterministic value — wasted work, never a wrong answer.
-    */
   /** Bound on distinct cached artifacts (ADVICE r12: the map never
     * evicted). Crossing the cap clears the whole memo — deterministic,
     * trivially correct (values are pure functions of their keys; a
@@ -266,27 +146,15 @@ object Similarity {
     */
   private val MemoCap = 256
 
+  /** get/putIfAbsent (NOT computeIfAbsent: the loader runs Spark jobs
+    * and CHM forbids re-entrant updates). A lost race recomputes the
+    * same deterministic value — wasted work, never a wrong answer.
+    */
   private def memoized[T <: AnyRef](key: String)(f: => T): T = {
     val hit = trainMemo.get(key)
     if (hit != null) { memoHits.incrementAndGet(); hit.asInstanceOf[T] }
     else {
-      // memory miss → disk mirror → train; only a genuine train pays
-      // a disk write (a disk hit re-seeds the memory memo for free)
-      val fromDisk = persistRoot.flatMap(diskLoad(_, key))
-      val v = fromDisk match {
-        case Some(d) => diskHitsCtr.incrementAndGet(); d.asInstanceOf[T]
-        case None =>
-          val computed = f
-          persistRoot.foreach { root =>
-            // count ONLY verified landings: diskStore swallows its own
-            // failures, and 'writes ≈ 0 while hits > 0' is the spec's
-            // cross-process evidence — it must not lie when the cache
-            // is broken (ADVICE r13)
-            if (diskStore(root, key, computed))
-              diskWritesCtr.incrementAndGet(): Unit
-          }
-          computed
-      }
+      val v = f
       if (trainMemo.size >= MemoCap) trainMemo.clear()
       val prev = trainMemo.putIfAbsent(key, v)
       (if (prev != null) prev else v).asInstanceOf[T]
@@ -367,8 +235,7 @@ object Similarity {
             // one listing RPC equivalent, already cached by the
             // FileIndex from planning — no extra filesystem
             // round-trip. Sorted by path before digesting: listing
-            // order is not a stable contract, and the key must be
-            // IDENTICAL across processes for the disk mirror to hit.
+            // order is not a stable contract.
             val listingDigest = listingDigestCached(fs.location) {
                 val lmd = java.security.MessageDigest.getInstance("MD5")
                 val lbb = java.nio.ByteBuffer.allocate(8)
@@ -825,11 +692,10 @@ object Similarity {
     // the MERGE codebook (pre-refine) is a pure deterministic function
     // of (corpus, params) — per-shard points sort by id, shard routing
     // is a hash, the merge sorts by shard — so it memoizes like the
-    // driver-trained paths (memory + disk mirror). The refine pass is
-    // deliberately OUTSIDE the memo: refined means are reduction-order
-    // (partitioning-)dependent, so a cross-process cache of them could
-    // disagree bitwise with a fresh train under a different
-    // parallelism.
+    // driver-trained paths. The refine pass is deliberately OUTSIDE
+    // the memo: refined means are reduction-order (partitioning-)
+    // dependent, so a cached copy could disagree bitwise with a fresh
+    // train under a different parallelism.
     val seeds = memoized(
       s"shardcents|$n|$kWant|$nShards|$sN|$itersLocal|$idCol|$vecCol|" +
         planKey(corpus)) {
@@ -1039,27 +905,34 @@ object Similarity {
         col("__cell.centroid_id").as("centroid_id"))
 
   /** Probe-join-rank over cell-assigned corpus rows
-    * (`cand_id, c_vec2, centroid_id`). Corpus cell assignment is unique
-    * and each query probes nprobe DISTINCT cells, so a (query, cand)
-    * pair joins at most once — no dedup pass needed before ranking.
+    * (`cand_id, c_vec2, centroid_id`) and the queries' probed cells
+    * (`query_id, q_vec, centroid_id`, [[assignCells]]). Corpus cell
+    * assignment is unique and each query probes nprobe DISTINCT cells,
+    * so a (query, cand) pair joins at most once — no dedup pass needed
+    * before ranking.
     */
-  private def rankProbed(cells: DataFrame, queries: DataFrame, k: Int,
-                         cents: Array[(Int, Array[Double])], nprobe: Int,
-                         idCol: String, vecCol: String): DataFrame = {
-    val probed = broadcast(
-      assignCells(queries, cents, "query_id", "q_vec", nprobe,
-        idCol, vecCol))
-    val scored = probed.join(cells, Seq("centroid_id"))
+  private def rankProbed(cells: DataFrame, probed: DataFrame, k: Int)
+      : DataFrame =
+    rankTopK(broadcast(probed).join(cells, Seq("centroid_id"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        cosine(col("q_vec"), col("c_vec2")).as("cos"))
-      .withColumn("cos_r", round(col("cos"), 6))
+        cosine(col("q_vec"), col("c_vec2")).as("cos")), k)
+
+  /** Per-query top-k of scored pairs (`query_id, cand_id, cos`),
+    * ranked on the score rounded to 6 decimals (+ cand_id tiebreak) so
+    * equal-to-6-decimals scores order identically in any engine
+    * computing the same values; the score is reported rounded to 4
+    * decimals as `name`.
+    */
+  private def rankTopK(scored: DataFrame, k: Int, name: String = "cosine")
+      : DataFrame = {
     val wr = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_r").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(wr))
+    scored.withColumn("cos_r", round(col("cos"), 6))
+      .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("cand_id"),
-        round(col("cos"), 4).as("cosine"))
+        round(col("cos"), 4).as(name))
   }
 
   /** Blocked k-NN self-join with IVF-cell block refinement: every
@@ -1111,76 +984,41 @@ object Similarity {
                           idCol: String, vecCol: String): DataFrame = {
     val cells = assignCells(corpus, cents, "cand_id", "c_vec2",
       probes = 1, idCol, vecCol)
-    rankProbed(cells, queries, k, cents, nprobe, idCol, vecCol)
+    rankProbed(cells,
+      assignCells(queries, cents, "query_id", "q_vec", nprobe, idCol, vecCol),
+      k)
   }
 
   /** Build a PERSISTED IVF index: the corpus written partitioned on
     * disk by nearest-centroid cell (`centroid_id=` hive dirs) plus the
     * trained centroid table. The index is built once; every probe then
-    * reads ONLY its probed cells via static partition pruning — file
-    * I/O ∝ nprobe/nlist of the corpus, the build-once/probe-many shape
-    * every production vector store uses (and the property
-    * IvfIndexSpec pins via `PartitionFilters` in the scan plan).
+    * reads ONLY its probed cells — file I/O ∝ nprobe/nlist of the
+    * corpus, the build-once/probe-many shape every production vector
+    * store uses (and the property IvfIndexSpec pins via
+    * `PartitionFilters` in the scan plan). Precomputed `centroids` let
+    * the beyond-cap sharded trainer (or any external codebook) feed the
+    * same persisted-index protocol.
     */
   def buildIvfIndex(corpus: DataFrame, dir: String,
                     nlist: Int = 0, sampleN: Int = 0, iters: Int = 4,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     centroids: Option[Array[(Int, Array[Double])]] = None)
-      : Unit = {
-    val spark = corpus.sparkSession
-    // precomputed centroids let the beyond-cap sharded trainer (or any
-    // external codebook) feed the same persisted-index protocol
-    val cents = centroids.getOrElse(
-      trainCentroids(corpus, nlist, sampleN, iters, idCol, vecCol))
-    // crash-safe rebuild, same protocol as the CDC sink (shared
-    // primitive: graft.sources.PointerFile): centroids and cells land
-    // together in an immutable fresh version dir; a single atomic
-    // overwrite-rename flips `_CURRENT` to it. A crash mid-build
-    // leaves _CURRENT on the old, internally-consistent version —
-    // probes can never pair new centroids with old cell assignments.
-    // Version names embed a millisecond stamp so GC can keep the 2
-    // NEWEST COMMITTED versions (per-version marker, counted by
-    // PointerFile.commitVersion): the superseded-but-recent one stays
-    // readable for in-flight/lazy probes that resolved _CURRENT before
-    // the flip, a concurrent builder's fresher flip is never deleted
-    // out from under its pointer, and a crashed build's partial dir
-    // (no marker) can't push a committed version out of the window.
-    import graft.sources.SegmentedIndex
-    val version = SegmentedIndex.newVersionName()
-    import spark.implicits._
-    cents.toSeq.map { case (i, v) => (i, v.toSeq) }
-      .toDF("centroid_id", "centroid")
-      // coalesce(1): driver-local centroid table (≤ nlist rows) — the
-      // collapsed upstream is a localSeqToDF, nothing to parallelize
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$version/centroids")
-    // cluster by cell before the hive write (r12): partitionBy alone
-    // writes up to (input tasks × nlist) files — ~25k at sf10, ~10⁵
-    // past the nlist cap — and every probe then opens nprobe × tasks
-    // files instead of nprobe. One small shuffle of (id, vec, cell)
-    // rows buys ≤1 file per cell dir: measured 2.7× on the probe path
-    // at n = 3·10⁵ (ShardScaleProbe smoke). Same discipline the
-    // compaction path has always used.
-    assignCells(corpus, cents, idCol, vecCol, probes = 1, idCol, vecCol)
-      .transform(clusterByCell)
-      .write.mode("errorifexists").partitionBy("centroid_id")
-      .parquet(s"$dir/$version/cells")
-    SegmentedIndex.commitBuild(spark, dir, version)
-  }
+      : Unit =
+    buildIvf(corpus, dir, "buildIvfIndex")(Trained(centroids.getOrElse(
+      trainCentroids(corpus, nlist, sampleN, iters, idCol, vecCol))))(
+      rawCells(idCol, vecCol))
 
   /** The version dir `_CURRENT` points at (the one consistent
     * (centroids, cells) pair). Public so tests and tooling can reason
     * about the commit protocol.
     */
-  def indexVersion(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): String =
-    graft.sources.SegmentedIndex.currentVersion(spark, dir)
+  def indexVersion(spark: SparkSession, dir: String): String =
+    SegmentedIndex.currentVersion(spark, dir)
 
   /** The trained centroid table of one committed index version. */
-  def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, version: String)
+  def readCentroids(spark: SparkSession, dir: String, version: String)
       : Array[(Int, Array[Double])] =
-    spark.read.parquet(s"$dir/$version/centroids")
+    spark.read.schema(CentroidSchema).parquet(s"$dir/$version/centroids")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -1190,204 +1028,318 @@ object Similarity {
     * version itself (a base [[buildIvfIndex]] — backward compatible
     * with pre-append indexes).
     */
-  def indexSegments(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, version: String): Seq[String] =
-    graft.sources.SegmentedIndex.segments(spark, dir, version)
+  def indexSegments(spark: SparkSession, dir: String, version: String)
+      : Seq[String] =
+    SegmentedIndex.segments(spark, dir, version)
 
-  /** Append NEW vectors to a persisted IVF index WITHOUT rebuild — the
-    * continuous-ingestion path for embeddings, the vector mirror of the
-    * text side's standing shingle index (`Dedup.probeShingleIndex`).
-    * The incoming shard is assigned to the EXISTING trained centroids
-    * (the same zero-shuffle per-row argmax as the build) and written as
-    * a new SEGMENT: a fresh version dir holding only the delta cells
-    * (hive-partitioned by `centroid_id` like every segment), the
-    * centroid table copied forward (nlist rows), and a `segments`
-    * manifest = parent's manifest + itself. One atomic `_CURRENT` flip
-    * commits; probes resolve the manifest and partition-prune across
-    * ALL segments, so probe I/O stays ∝ nprobe/nlist of the total
-    * corpus and append I/O is ∝ |delta| — never a rebuild.
-    *
-    * Crash-safety inherits the build's protocol: a partial append dir
-    * (no `_COMMITTED` marker) is never pointed to and never consumes a
-    * GC keep slot; referenced parent segments are passed as `pinned`
-    * so the keep-window GC can't collect a segment an active
-    * manifest still needs. Centroids are FROZEN at append time — the
-    * standard IVF trade (drifted data degrades recall, not
-    * correctness); retraining is a [[buildIvfIndex]] rebuild.
+  // ---- the one IVF segment path ------------------------------------
+  // Raw, PQ and SQ8 differ only in their trained state (centroids,
+  // plus codebooks for PQ) and their cell encoder (`rawCells`,
+  // `pqCells`, `sq8Cells`). Build, append, compaction, describe and the
+  // probes' cell read are one body each, on the segmented-index
+  // protocol (graft.sources.SegmentedIndex): a version dir holds
+  // `centroids/` (and `codebooks/`) plus `cells/centroid_id=<c>/`, and
+  // one atomic `_CURRENT` flip commits it, so a probe never pairs new
+  // centroids with old cell assignments.
+
+  /** An IVF index's trained state, frozen across appends and
+    * compactions: the coarse centroids, and for PQ the codebooks.
     */
-  /** Cluster rows by cell for a one-file-per-cell hive write WITHOUT
-    * losing writer parallelism: `repartition(col)` with no explicit
-    * count is AQE-coalescible, and a SMALL delta then collapses to
-    * ONE task serially creating ~nlist cell dirs (AppendProbe r14:
-    * a 2k-row append cost 8 s vs 2.4 s for a 20k-row one at
-    * nlist=781 — the cost was the single writer, not the append).
-    * An explicit count is user-specified and AQE leaves it alone;
-    * each cell still hashes wholly to one partition, so the
-    * one-file-per-cell layout contract is unchanged.
+  private[sim] final case class Trained(
+      cents: Array[(Int, Array[Double])],
+      books: Option[Array[Array[Array[Double]]]] = None)
+
+  /** Declared schemas of the trained-state tables: every read passes
+    * its schema, so none runs a footer-inference job.
     */
-  private def clusterByCell(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-      col("centroid_id"))
+  private val CentroidSchema =
+    StructType.fromDDL("centroid_id INT, centroid ARRAY<DOUBLE>")
+  private val CodebookSchema =
+    StructType.fromDDL("j INT, code INT, codeword ARRAY<DOUBLE>")
+
+  /** The hive partition column of every segment's `cells/`. */
+  private val CellColumn = StructField("centroid_id", IntegerType)
+  private val CellDir = "centroid_id=(-?\\d+)".r
+
+  /** An append whose cell rows do not cast losslessly to the index's
+    * cells schema. It is raised before anything is written, so every
+    * segment of a chain holds one schema.
+    */
+  final class CellSchemaMismatch(msg: String)
+      extends IllegalArgumentException(msg)
+
+  /** `df` with its nearest centroid as `centroid_id`: the zero-shuffle
+    * per-row argmax over centroid literals.
+    */
+  private def withCell(df: DataFrame, cents: Array[(Int, Array[Double])],
+                       vecCol: String): DataFrame =
+    df.withColumn("centroid_id",
+      element_at(nearestCellStructs(col(vecCol), cents, 1), 1)
+        .getField("centroid_id"))
+
+  /** Raw cells: the vectors themselves. */
+  private[sim] def rawCells(idCol: String, vecCol: String)(t: Trained)
+      : DataFrame => DataFrame =
+    withCell(_, t.cents, vecCol)
+      .select(col(idCol), col(vecCol), col("centroid_id"))
+
+  /** The build of every IVF family: train, then write the trained
+    * state and the corpus's cells into a fresh version and commit it.
+    */
+  private[sim] def buildIvf(corpus: DataFrame, dir: String, op: String)(
+      train: => Trained)(cells: Trained => DataFrame => DataFrame): Unit =
+    SegmentedIndex.asOp(corpus.sparkSession, op) {
+      val spark = corpus.sparkSession
+      val trained = train
+      val version = SegmentedIndex.newVersionName()
+      writeTrained(spark, s"$dir/$version", trained)
+      writeCells(cells(trained)(corpus), s"$dir/$version/cells")
+      SegmentedIndex.commitBuild(spark, dir, version)
+    }
+
+  /** The trained-state tables of a fresh version. coalesce(1): they
+    * are driver-local (≤ nlist and m·ksub rows) — the upstream is a
+    * localSeqToDF, nothing to parallelize.
+    */
+  private def writeTrained(spark: SparkSession, path: String,
+                           t: Trained): Unit = {
+    import spark.implicits._
+    t.cents.toSeq.map { case (i, v) => (i, v.toSeq) }
+      .toDF("centroid_id", "centroid")
+      .coalesce(1).write.mode("errorifexists").parquet(s"$path/centroids")
+    t.books.foreach(_.zipWithIndex.flatMap { case (book, j) =>
+        book.zipWithIndex.map { case (cw, code) => (j, code, cw.toSeq) }
+      }.toSeq.toDF("j", "code", "codeword")
+      .coalesce(1).write.mode("errorifexists").parquet(s"$path/codebooks"))
+  }
+
+  /** The trained state of one committed version. */
+  private def readTrained(spark: SparkSession, dir: String,
+                          version: String, books: Boolean): Trained =
+    Trained(readCentroids(spark, dir, version),
+      if (books) Some(readCodebooks(spark, dir, version)) else None)
+
+  /** The one cell write: rows clustered by cell, then hive-partitioned
+    * by `centroid_id`, so each cell dir gets one file. partitionBy
+    * alone writes up to (input tasks × nlist) files — ~25k at sf10 —
+    * and every probe then opens nprobe × tasks files instead of
+    * nprobe (r12: the clustered layout measured 2.7× on the probe path
+    * at n = 3·10⁵). `repartition(col)` with no count is
+    * AQE-coalescible, and a SMALL delta then collapses to ONE task
+    * serially creating ~nlist cell dirs (AppendProbe r14: a 2k-row
+    * append cost 8 s vs 2.4 s for a 20k-row one at nlist=781); an
+    * explicit count is left alone by AQE, and each cell still hashes
+    * wholly to one partition.
+    */
+  private def writeCells(rows: DataFrame, path: String): Unit =
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism,
+        col("centroid_id"))
+      .write.mode("errorifexists").partitionBy("centroid_id")
+      .parquet(path)
+
+  /** Every cell dir of the segments `segs`, as (cell, path) in chain
+    * order and cell order within a segment: one `listStatus` of each
+    * segment's `cells/`. A cell no row was assigned to has no dir.
+    */
+  private def cellDirs(spark: SparkSession, dir: String, segs: Seq[String])
+      : Seq[(Int, String)] = {
+    val fs = SegmentedIndex.fsFor(spark, dir)
+    segs.flatMap { s =>
+      val cells = s"$dir/$s/cells"
+      val names =
+        try fs.listStatus(new Path(cells)).toSeq
+          .filter(_.isDirectory).map(_.getPath.getName)
+        catch { case _: java.io.FileNotFoundException => Nil }
+      names.collect { case CellDir(c) => c.toInt }.sorted
+        .map(c => (c, s"$cells/centroid_id=$c"))
+    }
+  }
+
+  /** The data schema every cell file of a chain holds, read from the
+    * footer of the first cell file of `dirs` on the driver: no Spark
+    * job. None when no dir holds a file.
+    */
+  private def cellsSchema(spark: SparkSession, dir: String,
+                          dirs: Iterator[(Int, String)]): Option[StructType] = {
+    val fs = SegmentedIndex.fsFor(spark, dir)
+    dirs.flatMap(d => fs.listStatus(new Path(d._2)).iterator)
+      .find(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(st => ChainRelation.footerSchema(spark, st.getPath))
+  }
+
+  /** [[cellsSchema]] of a chain a read needs to type. */
+  private def chainSchema(spark: SparkSession, dir: String,
+                          dirs: Seq[(Int, String)]): StructType =
+    cellsSchema(spark, dir, dirs.iterator).getOrElse(
+      throw new IllegalStateException(s"IVF index $dir holds no cell file"))
+
+  /** The cells of `dirs` as ONE scan under `schema`, with `centroid_id`
+    * as its partition column: one `listStatus` per dir, no job. An
+    * empty `dirs` is an empty, correctly typed scan.
+    */
+  private def scanCells(spark: SparkSession, dirs: Seq[(Int, String)],
+                        schema: StructType): DataFrame =
+    ChainRelation.read(spark, dirs.map(_._2), schema,
+      partition = Some(CellColumn))
+
+  /** The cells a probe reads: those `probed` (query rows assigned to
+    * cells) names, across EVERY segment the version's manifest lists,
+    * as one scan. Listing is ∝ segments + |probed ∩ nonempty| —
+    * reading a segment's whole `cells/` tree would pay partition
+    * discovery ∝ nlist, which at a beyond-cap nlist dwarfs the probe
+    * itself (r12: ~10 s of listing for a 3-of-4096-cell probe at
+    * n = 2²⁰).
+    */
+  private def probedCells(spark: SparkSession, dir: String, version: String,
+                          probed: DataFrame): DataFrame = {
+    val wanted = probed.select("centroid_id").distinct()
+      .collect().map(_.getInt(0)).toSet
+    val all = cellDirs(spark, dir, indexSegments(spark, dir, version))
+    scanCells(spark, all.filter(d => wanted(d._1)),
+      chainSchema(spark, dir, all))
+  }
 
   /** Copy the parent version's FROZEN trained-state files (centroids;
     * codebooks when the family has them — everything but cells and
-    * protocol files) into a fresh version dir at the filesystem level.
-    * Appends used to RE-WRITE identical centroid/codebook parquet
-    * tables through a Spark job per table per micro-batch — pure fixed
-    * cost for bytes the parent already holds (r14; compactIvfIndex has
-    * always carried trained state forward this way, appends now share
-    * the routine).
+    * protocol files) into a fresh version dir at the filesystem level:
+    * no Spark job re-writes bytes the parent already holds.
     */
-  private def copyTrainedState(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, parent: String,
-                               version: String): Unit = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val fs = graft.sources.SegmentedIndex.fsFor(spark, dir)
+  private def copyTrainedState(spark: SparkSession, dir: String,
+                               parent: String, version: String): Unit = {
+    val fs = SegmentedIndex.fsFor(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val protocol = Set("cells", "segments",
-      graft.sources.SegmentedIndex.AppendTag,
-      graft.sources.SegmentedIndex.MultiTags,
-      graft.sources.PointerFile.CommittedMarker)
+    val protocol = Set("cells", "segments", SegmentedIndex.AppendTag,
+      SegmentedIndex.MultiTags, graft.sources.PointerFile.CommittedMarker)
     fs.listStatus(new Path(s"$dir/$parent"))
       .filter(st => !protocol(st.getPath.getName))
       .foreach { st =>
-        require(FileUtil.copy(fs, st.getPath, fs,
+        require(org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
           new Path(s"$dir/$version/${st.getPath.getName}"),
           false, conf), s"copy of ${st.getPath} failed")
       }
   }
 
+  /** True where every value of `from` casts to `to` unchanged. */
+  private def widens(from: DataType, to: DataType): Boolean = {
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+    (from, to) match {
+      case _ if from == to => true
+      case (ArrayType(f, _), ArrayType(t, _)) => widens(f, t)
+      case (f, t) if integral.contains(f) && integral.contains(t) =>
+        integral.indexOf(f) < integral.indexOf(t)
+      case (ByteType | ShortType | IntegerType | FloatType, DoubleType) =>
+        true
+      case (ByteType | ShortType, FloatType) => true
+      case _ => false
+    }
+  }
+
+  /** `rows` cast by name to the chain's cells schema `to`, where every
+    * cast is lossless; otherwise a [[CellSchemaMismatch]].
+    */
+  private def conformCells(rows: DataFrame, to: StructType): DataFrame = {
+    val have = StructType(rows.schema.filter(_.name != "centroid_id"))
+    if (have.fieldNames.toSet != to.fieldNames.toSet ||
+        to.exists(f => !widens(have(f.name).dataType, f.dataType)))
+      throw new CellSchemaMismatch(s"cells ${have.simpleString} do not " +
+        s"cast losslessly to the index's ${to.simpleString}")
+    rows.select(to.map(f => col(f.name).cast(f.dataType).as(f.name)) :+
+      col("centroid_id"): _*)
+  }
+
+  /** Append NEW vectors to a persisted IVF index WITHOUT rebuild — the
+    * continuous-ingestion path for embeddings, the vector mirror of the
+    * text side's standing shingle index (`Dedup.probeShingleIndex`).
+    * The incoming shard is assigned to the EXISTING trained centroids
+    * (and, for PQ, encoded with the frozen codebooks) and written as a
+    * new SEGMENT: a fresh version dir holding only the delta cells, the
+    * trained state copied forward, and a `segments` manifest = parent's
+    * manifest + itself. One atomic `_CURRENT` flip commits; probes read
+    * the probed cells of ALL segments, so probe I/O stays ∝
+    * nprobe/nlist of the total corpus and append I/O is ∝ |delta|.
+    *
+    * Crash-safety inherits the build's protocol: a partial append dir
+    * (no `_COMMITTED` marker) is never pointed to, and GC pins every
+    * segment a kept manifest references. Centroids are FROZEN at
+    * append time — the standard IVF trade (drifted data degrades
+    * recall, not correctness); retraining is a rebuild. The delta's
+    * cells are cast to the chain's cells schema where the cast is
+    * lossless (INT → BIGINT ids, say) and refused with a
+    * [[CellSchemaMismatch]] otherwise.
+    */
   def appendIvfIndex(dir: String, incoming: DataFrame,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding",
-                     tag: Option[String] = None): Unit = {
-    import graft.sources.SegmentedIndex
-    val spark = incoming.sparkSession
-    val parent = indexVersion(spark, dir)
-    val parentSegs = indexSegments(spark, dir, parent)
-    // exactly-once under foreachBatch replay: a batch whose tag is
-    // already on the committed chain was fully ingested before the
-    // crash (segment commit precedes checkpoint commit) — re-delivery
-    // must not duplicate its vectors
-    if (SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag)) return
-    // a quiet ingest tick commits nothing: an empty delta segment
-    // would be a schema-less parquet dir every later probe chokes on
-    if (incoming.isEmpty) return
-    val cents = readCentroids(spark, dir, parent)
-    val version = SegmentedIndex.newVersionName()
-    copyTrainedState(spark, dir, parent, version)
-    assignCells(incoming, cents, idCol, vecCol, probes = 1, idCol, vecCol)
-      .transform(clusterByCell) // one file per cell dir (r12)
-      .write.mode("errorifexists").partitionBy("centroid_id")
-      .parquet(s"$dir/$version/cells")
-    // GC is manifest-aware (commitVersion pins every segment a KEPT
-    // version's manifest references), so committing here can never
-    // collect a parent segment this manifest still needs.
-    SegmentedIndex.commitAppend(spark, dir, version, parent,
-      parentSegs, tag)
-  }
+                     tag: Option[String] = None): Unit =
+    appendIvf(dir, incoming, tag, "appendIvfIndex", books = false)(
+      rawCells(idCol, vecCol))
 
-  /** foreachBatch sink for streaming ingest into a persisted index.
-    * Tags each append `<streamId>#<batchId>` where streamId is the
-    * query's stable id from the checkpoint's `metadata` file (written
-    * at query start, constant across restarts of the SAME checkpoint).
-    * A raw batchId tag is ambiguous across stream lifetimes: wipe the
-    * checkpoint but keep the index, and the new stream's batch 0
-    * collides with the old chain's tag "0" — new data silently dropped
-    * as a phantom replay. A reset checkpoint mints a fresh query id,
-    * so its batches land in a fresh tag namespace; replays within one
-    * checkpoint still dedupe exactly.
+  /** The append of every IVF family: the tag check, the empty check,
+    * then the delta's cells, typed to the chain's schema, written as a
+    * new segment with the trained state copied forward.
+    */
+  private def appendIvf(dir: String, incoming: DataFrame,
+                        tag: Option[String], op: String, books: Boolean)(
+      cells: Trained => DataFrame => DataFrame): Unit =
+    SegmentedIndex.asOp(incoming.sparkSession, op) {
+      val spark = incoming.sparkSession
+      val parent = indexVersion(spark, dir)
+      val parentSegs = indexSegments(spark, dir, parent)
+      // a batch whose tag is already on the committed chain was fully
+      // ingested before a crash (segment commit precedes checkpoint
+      // commit), and a quiet ingest tick has nothing to commit
+      if (!SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag) &&
+          !incoming.isEmpty) {
+        // the base segment's footer types the chain (lazily listed: a
+        // later segment only when the base holds no cell)
+        val rows = cells(readTrained(spark, dir, parent, books))(incoming)
+        val typed = cellsSchema(spark, dir, parentSegs.iterator.flatMap(s =>
+          cellDirs(spark, dir, Seq(s)))).fold(rows)(conformCells(rows, _))
+        val version = SegmentedIndex.newVersionName()
+        copyTrainedState(spark, dir, parent, version)
+        writeCells(typed, s"$dir/$version/cells")
+        SegmentedIndex.commitAppend(spark, dir, version, parent,
+          parentSegs, tag)
+      }
+    }
+
+  /** foreachBatch sink for streaming ingest into a persisted index:
+    * each micro-batch lands via [[appendIvfIndex]] under the
+    * `<streamId>#<batchId>` tag (exactly-once under checkpoint replay,
+    * a fresh namespace on a reset checkpoint; see
+    * [[graft.sources.SegmentedIndex.streamSink]]), and `maxSegments > 0`
+    * folds the chain with [[compactIvfIndex]] once it grows past that.
     */
   def ivfStreamSink(dir: String, checkpointDir: String,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     maxSegments: Int = 0)
       : (DataFrame, Long) => Unit =
-    graft.sources.SegmentedIndex.streamSink(checkpointDir) {
-      (batch, tag) =>
-        appendIvfIndex(dir, batch, idCol, vecCol, tag)
-        // maxSegments > 0: self-maintaining ingest — fold the chain
-        // after the append commits (see SegmentedIndex.maintain for
-        // the crash-ordering argument; _TAGS keeps replays exactly-
-        // once across folds)
-        graft.sources.SegmentedIndex.maintain(
-          batch.sparkSession, dir, maxSegments) {
-          compactIvfIndex(batch.sparkSession, dir)
-        }
-    }
+    SegmentedIndex.maintainedSink(dir, checkpointDir, maxSegments)(
+      appendIvfIndex(dir, _, idCol, vecCol, _))(compactIvfIndex(_, dir))
 
   /** Probe a persisted index: the probed cell set (≤ queries × nprobe
-    * ids, computed from the small query side) becomes a STATIC `isin`
-    * partition filter, so the cells scan touches only those
-    * directories — across EVERY segment the current version's manifest
-    * lists (one for a plain build, one per append since). Results are
+    * ids, computed from the small query side) is all the cells scan
+    * lists, across EVERY segment of the current version. Results are
     * identical to [[ivfTopK]] with the same trained centroids over the
     * union corpus.
     */
-  /** Pruned multi-segment cell read (r12): lists ONLY the probed cell
-    * dirs of each segment — `spark.read.parquet(root)` + an isin
-    * partition filter prunes the SCAN but still pays partition
-    * DISCOVERY ∝ nlist (it lists every cell dir before planning),
-    * which at a beyond-cap nlist dwarfs the probe itself (measured:
-    * a 3-of-4096-cell probe spent ~10 s listing at n = 2²⁰). Explicit
-    * probed paths + basePath make listing ∝ |probed ∩ nonempty| —
-    * the manifest-read discipline a production store uses. Segments
-    * stay separate reads (sibling hive trees refuse one multi-root
-    * read), unioned by name; cell dirs absent from a segment (no rows
-    * assigned there) are dropped by ONE `listStatus` of the segment's
-    * `cells/` dir intersected with the probed set — metadata RPC count
-    * is ∝ segments, NOT segments × nprobe (VERDICT r12 item 3: the
-    * old per-(segment × cell) serial `exists` loop was nprobe
-    * round-trips per segment; one listing returning nlist names is
-    * one round-trip and the intersection is a driver-side hash probe).
-    */
-  private def readProbedCells(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, segs: Seq[String],
-                              probedCells: Array[Int]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val wanted = probedCells.toSeq.sorted // stable plan text
-    val perSeg = segs.flatMap { s =>
-      val base = s"$dir/$s/cells"
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      val fs = basePath.getFileSystem(conf)
-      val present: Set[String] =
-        try fs.listStatus(basePath).iterator
-          .filter(_.isDirectory).map(_.getPath.getName).toSet
-        catch { case _: java.io.FileNotFoundException => Set.empty }
-      val paths = wanted.map(c => s"centroid_id=$c")
-        .filter(present.contains).map(n => s"$base/$n")
-      if (paths.isEmpty) None
-      else Some(spark.read.option("basePath", base).parquet(paths: _*))
-    }
-    if (perSeg.nonEmpty) perSeg.reduce(_ unionByName _)
-    else
-      // every probed cell is empty in every segment (tiny-corpus
-      // corner): fall back to one discovery read, filtered empty, so
-      // callers still get the right schema
-      segs.map(s => spark.read.parquet(s"$dir/$s/cells"))
-        .reduce(_ unionByName _)
-        .filter(lit(false))
-  }
-
   def ivfProbeIndexed(dir: String, queries: DataFrame, k: Int,
                       nprobe: Int = 0,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    val spark = queries.sparkSession
-    val ver = indexVersion(spark, dir)
-    val cents = readCentroids(spark, dir, ver)
-    val np = if (nprobe > 0) nprobe else deriveNprobe(cents.length)
-    val probedCells = queries
-      .select(explode(nearestCellStructs(col(vecCol), cents, np))
-        .as("__c"))
-      .select(col("__c.centroid_id")).distinct()
-      .collect().map(_.getInt(0))
-    val cells = readProbedCells(spark, dir,
-        indexSegments(spark, dir, ver), probedCells)
-      .select(col(idCol).as("cand_id"), col(vecCol).as("c_vec2"),
-        col("centroid_id"))
-    rankProbed(cells, queries, k, cents, np, idCol, vecCol)
-  }
+                      vecCol: String = "embedding"): DataFrame =
+    SegmentedIndex.asOp(queries.sparkSession, "ivfProbeIndexed") {
+      val spark = queries.sparkSession
+      val ver = indexVersion(spark, dir)
+      val cents = readCentroids(spark, dir, ver)
+      val probed = assignCells(queries, cents, "query_id", "q_vec",
+        if (nprobe > 0) nprobe else deriveNprobe(cents.length),
+        idCol, vecCol)
+      val cells = probedCells(spark, dir, ver, probed)
+        .select(col(idCol).as("cand_id"), col(vecCol).as("c_vec2"),
+          col("centroid_id"))
+      rankProbed(cells, probed, k)
+    }
 
   /** Distinct ids of `train` rows whose cosine to ANY `evalSet` row
     * is ≥ `tau`, candidate pairs blocked by trained IVF cell: every
@@ -1614,7 +1566,9 @@ object Similarity {
     * The cells hold NO raw vectors — per-vector payload is the m
     * codes, the on-disk compression the spec measures — and the same
     * crash-safe version/pointer protocol as [[buildIvfIndex]] commits
-    * centroids, codebooks and cells atomically together.
+    * centroids, codebooks and cells atomically together. Precomputed
+    * coarse centroids (e.g. the beyond-cap sharded trainer) compose
+    * with PQ exactly as with the raw index.
     */
   def buildIvfPqIndex(corpus: DataFrame, dir: String,
                       m: Int = 0, ksub: Int = 64,
@@ -1622,46 +1576,25 @@ object Similarity {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding",
                       centroids: Option[Array[(Int, Array[Double])]] =
-                        None): Unit = {
-    val spark = corpus.sparkSession
-    // precomputed coarse centroids (e.g. the beyond-cap sharded
-    // trainer) compose with PQ exactly as with the raw index
-    val cents = centroids.getOrElse(
-      trainCentroids(corpus, nlist, sampleN, iters, idCol, vecCol))
-    val books = trainPqBooks(corpus, m, ksub, iters, sampleN,
-      idCol, vecCol)
-    import graft.sources.SegmentedIndex
-    val version = SegmentedIndex.newVersionName()
-    import spark.implicits._
-    cents.toSeq.map { case (i, v) => (i, v.toSeq) }
-      .toDF("centroid_id", "centroid")
-      // coalesce(1): driver-local centroid table (≤ nlist rows) — the
-      // collapsed upstream is a localSeqToDF, nothing to parallelize
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$version/centroids")
-    books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (cw, code) => (j, code, cw.toSeq) }
-    }.toSeq.toDF("j", "code", "codeword")
-      // coalesce(1): driver-local codebook table (m·ksub rows)
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$version/codebooks")
-    corpus.select(col(idCol).as("cand_id"),
-        element_at(nearestCellStructs(col(vecCol), cents, 1), 1)
-          .getField("centroid_id").as("centroid_id"),
-        pqCodes(col(vecCol), books).as("codes"))
-      .transform(clusterByCell) // one file per cell dir (r12)
-      .write.mode("errorifexists").partitionBy("centroid_id")
-      .parquet(s"$dir/$version/cells")
-    SegmentedIndex.commitBuild(spark, dir, version)
-  }
+                        None): Unit =
+    buildIvf(corpus, dir, "buildIvfPqIndex")(Trained(
+      centroids.getOrElse(
+        trainCentroids(corpus, nlist, sampleN, iters, idCol, vecCol)),
+      Some(trainPqBooks(corpus, m, ksub, iters, sampleN, idCol, vecCol))))(
+      pqCells(idCol, vecCol))
+
+  /** PQ cells: the m codes of each vector under the codebooks. */
+  private[sim] def pqCells(idCol: String, vecCol: String)(t: Trained)
+      : DataFrame => DataFrame =
+    withCell(_, t.cents, vecCol).select(col(idCol).as("cand_id"),
+      col("centroid_id"), pqCodes(col(vecCol), t.books.get).as("codes"))
 
   /** The trained PQ codebooks of one committed index version,
     * shape (m)(ksub)(dim/m).
     */
-  def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-                    dir: String, version: String)
+  def readCodebooks(spark: SparkSession, dir: String, version: String)
       : Array[Array[Array[Double]]] =
-    spark.read.parquet(s"$dir/$version/codebooks")
+    spark.read.schema(CodebookSchema).parquet(s"$dir/$version/codebooks")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toArray.sortBy(_._1)
@@ -1672,39 +1605,18 @@ object Similarity {
     * encoded with the FROZEN codebooks (the PQ analog of the standard
     * frozen-quantizer trade — drifted data degrades quantization
     * error, never correctness), then lands as a delta segment of
-    * codes-only cells + `segments` manifest + one atomic flip — I/O
-    * and encode work ∝ |delta|. Same tag protocol as
-    * [[appendIvfIndex]] for foreachBatch exactly-once.
+    * codes-only cells — I/O and encode work ∝ |delta|. Same segment
+    * path and tag protocol as [[appendIvfIndex]].
     */
   def appendIvfPqIndex(dir: String, incoming: DataFrame,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding",
-                       tag: Option[String] = None): Unit = {
-    import graft.sources.SegmentedIndex
-    val spark = incoming.sparkSession
-    val parent = indexVersion(spark, dir)
-    val parentSegs = indexSegments(spark, dir, parent)
-    if (SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag)) return
-    if (incoming.isEmpty) return
-    val cents = readCentroids(spark, dir, parent)
-    val books = readCodebooks(spark, dir, parent)
-    val version = SegmentedIndex.newVersionName()
-    copyTrainedState(spark, dir, parent, version)
-    incoming.select(col(idCol).as("cand_id"),
-        element_at(nearestCellStructs(col(vecCol), cents, 1), 1)
-          .getField("centroid_id").as("centroid_id"),
-        pqCodes(col(vecCol), books).as("codes"))
-      .transform(clusterByCell) // one file per cell dir (r12)
-      .write.mode("errorifexists").partitionBy("centroid_id")
-      .parquet(s"$dir/$version/cells")
-    SegmentedIndex.commitAppend(spark, dir, version, parent,
-      parentSegs, tag)
-  }
+                       tag: Option[String] = None): Unit =
+    appendIvf(dir, incoming, tag, "appendIvfPqIndex", books = true)(
+      pqCells(idCol, vecCol))
 
-  /** Probe a persisted IVF-PQ index. Same pruned-read shape as
-    * [[ivfProbeIndexed]] — the probed cell set becomes a static `isin`
-    * partition filter, applied to every segment the current version's
-    * manifest lists — but the scan reads only `(cand_id, codes)`:
+  /** Probe a persisted IVF-PQ index. Same pruned cells read as
+    * [[ivfProbeIndexed]], but the scan reads only `(cand_id, codes)`:
     * probe I/O per candidate is m codes, not dim floats (the ~32×
     * read-volume drop that makes a 100 TB corpus probe-able), and
     * ranking is ADC over the on-the-fly reconstruction. Approximate
@@ -1713,35 +1625,22 @@ object Similarity {
   def ivfPqProbeIndexed(dir: String, queries: DataFrame, k: Int,
                         nprobe: Int = 0,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    val spark = queries.sparkSession
-    val ver = indexVersion(spark, dir)
-    val cents = readCentroids(spark, dir, ver)
-    val books = readCodebooks(spark, dir, ver)
-    val np = if (nprobe > 0) nprobe else deriveNprobe(cents.length)
-    val probedCells = queries
-      .select(explode(nearestCellStructs(col(vecCol), cents, np))
-        .as("__c"))
-      .select(col("__c.centroid_id")).distinct()
-      .collect().map(_.getInt(0))
-    val cells = readProbedCells(spark, dir,
-        indexSegments(spark, dir, ver), probedCells)
-      .select(col("cand_id"), col("codes"), col("centroid_id"))
-    val probed = broadcast(
-      assignCells(queries, cents, "query_id", "q_vec", np,
-        idCol, vecCol))
-    val scored = probed.join(cells, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosine(col("q_vec"), pqRecon(col("codes"), books)).as("cos"))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("cand_id"),
-        round(col("cos"), 4).as("pq_cosine"))
-  }
+                        vecCol: String = "embedding"): DataFrame =
+    SegmentedIndex.asOp(queries.sparkSession, "ivfPqProbeIndexed") {
+      val spark = queries.sparkSession
+      val ver = indexVersion(spark, dir)
+      val t = readTrained(spark, dir, ver, books = true)
+      val probed = assignCells(queries, t.cents, "query_id", "q_vec",
+        if (nprobe > 0) nprobe else deriveNprobe(t.cents.length),
+        idCol, vecCol)
+      val cells = probedCells(spark, dir, ver, probed)
+        .select(col("cand_id"), col("codes"), col("centroid_id"))
+      rankTopK(broadcast(probed).join(cells, Seq("centroid_id"))
+        .filter(col("query_id") =!= col("cand_id"))
+        .select(col("query_id"), col("cand_id"),
+          cosine(col("q_vec"), pqRecon(col("codes"), t.books.get))
+            .as("cos")), k, "pq_cosine")
+    }
 
   /** Refined PQ probe — ADC retrieve, exact re-rank (the IVFPQ+R
     * construction of Jégou et al. 2011 §V, with the refinement read
@@ -1780,16 +1679,9 @@ object Similarity {
     val withQ = broadcast(cand.join(q, Seq("query_id")))
     val c = corpus.select(col(idCol).as("cand_id"),
       col(vecCol).as("c_vec"))
-    val scored = c.join(withQ, Seq("cand_id"))
+    rankTopK(c.join(withQ, Seq("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("cand_id"),
-        round(col("cos"), 4).as("cosine"))
+        cosine(col("q_vec"), col("c_vec")).as("cos")), k)
   }
 
   // ───────────────────────── IVF-SQ8 ─────────────────────────
@@ -1815,129 +1707,70 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding",
                        centroids: Option[Array[(Int, Array[Double])]] =
-                         None): Unit = {
-    val spark = corpus.sparkSession
-    val cents = centroids.getOrElse(
-      trainCentroids(corpus, nlist, sampleN, iters, idCol, vecCol))
-    import graft.sources.SegmentedIndex
-    val version = SegmentedIndex.newVersionName()
-    import spark.implicits._
-    cents.toSeq.map { case (i, v) => (i, v.toSeq) }
-      .toDF("centroid_id", "centroid")
-      // coalesce(1): driver-local centroid table (≤ nlist rows) — the
-      // collapsed upstream is a localSeqToDF, nothing to parallelize
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$version/centroids")
-    corpus.select(col(idCol).as("cand_id"),
-        element_at(nearestCellStructs(col(vecCol), cents, 1), 1)
-          .getField("centroid_id").as("centroid_id"),
-        org.apache.spark.sql.graft.Native.quantizeI8(col(vecCol))
-          .as("codes"))
-      .transform(clusterByCell) // one file per cell dir (r12)
-      .write.mode("errorifexists").partitionBy("centroid_id")
-      .parquet(s"$dir/$version/cells")
-    SegmentedIndex.commitBuild(spark, dir, version)
-  }
+                         None): Unit =
+    buildIvf(corpus, dir, "buildIvfSq8Index")(Trained(centroids.getOrElse(
+      trainCentroids(corpus, nlist, sampleN, iters, idCol, vecCol))))(
+      sq8Cells(idCol, vecCol))
+
+  /** SQ8 cells: one symmetric int8 code per dimension. */
+  private[sim] def sq8Cells(idCol: String, vecCol: String)(t: Trained)
+      : DataFrame => DataFrame =
+    withCell(_, t.cents, vecCol).select(col(idCol).as("cand_id"),
+      col("centroid_id"),
+      org.apache.spark.sql.graft.Native.quantizeI8(col(vecCol)).as("codes"))
 
   /** Append NEW vectors to a persisted IVF-SQ8 index WITHOUT rebuild —
     * the easiest member of the append family: the symmetric per-vector
     * int8 quantizer (scale = max|x|/127, derived per ROW) has no
     * trained state to freeze beyond the coarse centroids, so the delta
     * shard's codes are bit-identical to what a full rebuild would
-    * store. Assign to the FROZEN centroids, quantize, land as a
-    * codes-only delta segment + `segments` manifest + one atomic flip
-    * — I/O and encode work ∝ |delta|. Same tag protocol as
-    * [[appendIvfIndex]] for foreachBatch exactly-once.
+    * store. Same segment path and tag protocol as [[appendIvfIndex]].
     */
   def appendIvfSq8Index(dir: String, incoming: DataFrame,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding",
-                        tag: Option[String] = None): Unit = {
-    import graft.sources.SegmentedIndex
-    val spark = incoming.sparkSession
-    val parent = indexVersion(spark, dir)
-    val parentSegs = indexSegments(spark, dir, parent)
-    if (SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag)) return
-    if (incoming.isEmpty) return
-    val cents = readCentroids(spark, dir, parent)
-    val version = SegmentedIndex.newVersionName()
-    copyTrainedState(spark, dir, parent, version)
-    incoming.select(col(idCol).as("cand_id"),
-        element_at(nearestCellStructs(col(vecCol), cents, 1), 1)
-          .getField("centroid_id").as("centroid_id"),
-        org.apache.spark.sql.graft.Native.quantizeI8(col(vecCol))
-          .as("codes"))
-      .transform(clusterByCell) // one file per cell dir (r12)
-      .write.mode("errorifexists").partitionBy("centroid_id")
-      .parquet(s"$dir/$version/cells")
-    SegmentedIndex.commitAppend(spark, dir, version, parent,
-      parentSegs, tag)
-  }
+                        tag: Option[String] = None): Unit =
+    appendIvf(dir, incoming, tag, "appendIvfSq8Index", books = false)(
+      sq8Cells(idCol, vecCol))
 
   /** foreachBatch sink for streaming ingest into a persisted IVF-SQ8
-    * index — the SQ8 leg of the same `<streamId>#<batchId>` tag
-    * protocol [[ivfStreamSink]] documents (exactly-once under
-    * checkpoint replay, fresh namespace on a reset checkpoint). Each
-    * micro-batch lands via [[appendIvfSq8Index]]: assign to the frozen
-    * centroids, quantize per row, commit a codes-only delta segment.
+    * index: [[ivfStreamSink]] with [[appendIvfSq8Index]] as the append.
     */
   def sq8StreamSink(dir: String, checkpointDir: String,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     maxSegments: Int = 0)
       : (DataFrame, Long) => Unit =
-    graft.sources.SegmentedIndex.streamSink(checkpointDir) {
-      (batch, tag) =>
-        appendIvfSq8Index(dir, batch, idCol, vecCol, tag)
-        // same self-maintaining fold as ivfStreamSink — one
-        // compactIvfIndex serves raw/PQ/SQ8
-        graft.sources.SegmentedIndex.maintain(
-          batch.sparkSession, dir, maxSegments) {
-          compactIvfIndex(batch.sparkSession, dir)
-        }
-    }
+    SegmentedIndex.maintainedSink(dir, checkpointDir, maxSegments)(
+      appendIvfSq8Index(dir, _, idCol, vecCol, _))(compactIvfIndex(_, dir))
 
-  /** Structured Streaming foreachBatch sink over a persisted IVF-PQ
-    * index — completes the stream verb for the last index family that
-    * lacked it (shingle / IVF raw / SQ8 each have one). Identical tag
-    * protocol to [[ivfStreamSink]]; each micro-batch lands via
-    * [[appendIvfPqIndex]]: assign to the frozen centroids, encode with
-    * the FROZEN codebooks (deterministic per row, so streamed segments
-    * are bit-identical to a flat append's however the stream batched
-    * them), commit a codes-only delta segment.
+  /** foreachBatch sink for streaming ingest into a persisted IVF-PQ
+    * index: [[ivfStreamSink]] with [[appendIvfPqIndex]] as the append
+    * (deterministic per row, so streamed segments are bit-identical to
+    * a flat append's however the stream batched them).
     */
   def pqStreamSink(dir: String, checkpointDir: String,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding",
                    maxSegments: Int = 0)
       : (DataFrame, Long) => Unit =
-    graft.sources.SegmentedIndex.streamSink(checkpointDir) {
-      (batch, tag) =>
-        appendIvfPqIndex(dir, batch, idCol, vecCol, tag)
-        graft.sources.SegmentedIndex.maintain(
-          batch.sparkSession, dir, maxSegments) {
-          compactIvfIndex(batch.sparkSession, dir)
-        }
-    }
+    SegmentedIndex.maintainedSink(dir, checkpointDir, maxSegments)(
+      appendIvfPqIndex(dir, _, idCol, vecCol, _))(compactIvfIndex(_, dir))
 
-  /** COMPACT a persisted IVF-family index (raw [[buildIvfIndex]], PQ
-    * [[buildIvfPqIndex]], or SQ8 [[buildIvfSq8Index]] — the three
-    * share the version-dir shape, so one compaction serves all): fold
-    * the current version's segment chain into ONE fresh base segment,
-    * the third verb of the standing-index lifecycle and the mirror of
-    * `Dedup.compactShingleIndex`. Each streamed/batched append leaves
-    * a delta version whose hive cell dirs hold a few small files;
-    * after N appends a probed cell opens O(N) files and the probe's
-    * fixed per-file cost, not data volume, dominates. Compaction
-    * unions the cells of every segment (a vector lives wholly in one
-    * segment, so the union is exact) and rewrites them
-    * `repartition(centroid_id)`-clustered — each task holds whole
-    * cells, so every cell lands in ONE file — while the small trained
-    * state (centroids, PQ codebooks) is copied forward verbatim from
-    * the parent: quantizers are frozen across appends, so every
-    * segment carries identical copies and probes of the compacted
-    * index are bit-identical to segmented probes. Reads index files
-    * only — cost ∝ index size (codes for PQ/SQ8), never the corpus.
+  /** COMPACT a persisted IVF-family index (raw, PQ or SQ8 — one
+    * segment path serves all three): fold the current version's
+    * segment chain into ONE fresh base segment, the third verb of the
+    * standing-index lifecycle and the mirror of
+    * `Dedup.compactShingleIndex`. After N appends a probed cell opens
+    * O(N) files and the probe's fixed per-file cost, not data volume,
+    * dominates. Compaction reads the cells of every segment as one
+    * scan (a vector lives wholly in one segment, so it is exact) and
+    * rewrites them through [[writeCells]], one file per cell, while the
+    * small trained state is copied forward verbatim: quantizers are
+    * frozen across appends, so probes of the compacted index are
+    * bit-identical to segmented probes. Reads index files only — cost
+    * ∝ index size (codes for PQ/SQ8), never the corpus — and runs no
+    * metadata job, so its job count does not grow with the chain.
     *
     * Commits as a fresh BASE carrying the chain's exactly-once tags in
     * `_TAGS` ([[graft.sources.SegmentedIndex.commitCompact]]): a
@@ -1945,108 +1778,81 @@ object Similarity {
     * no-ops, and the keep-window GC retains the parent chain for
     * in-flight probes. No-op when already one segment.
     */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit = {
-    import graft.sources.SegmentedIndex
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val parent = indexVersion(spark, dir)
-    val segs = indexSegments(spark, dir, parent)
-    if (segs.size <= 1) return
-    val version = SegmentedIndex.newVersionName()
-    val fs = SegmentedIndex.fsFor(spark, dir)
-    // trained state (centroids; codebooks when the family has them) is
-    // frozen across appends — every segment holds an identical copy,
-    // so the parent's files ARE the compacted version's. Copying
-    // whatever non-cell payload the version carries keeps this one
-    // routine correct for raw, PQ, and SQ8 alike.
-    copyTrainedState(spark, dir, parent, version)
-    // cells: exact union across segments, re-clustered so each hive
-    // cell dir compacts to one file — the one shuffle this pays, and
-    // it moves codes (PQ/SQ8) or vectors, never recomputes them
-    segs.map(v => spark.read.parquet(s"$dir/$v/cells"))
-      .reduce(_ unionAll _)
-      .transform(clusterByCell)
-      .write.mode("errorifexists").partitionBy("centroid_id")
-      .parquet(s"$dir/$version/cells")
-    SegmentedIndex.commitCompact(spark, dir, version, parent,
-      SegmentedIndex.committedTags(fs, dir, segs))
-  }
+  def compactIvfIndex(spark: SparkSession, dir: String): Unit =
+    SegmentedIndex.asOp(spark, "compactIvfIndex") {
+      val parent = indexVersion(spark, dir)
+      val segs = indexSegments(spark, dir, parent)
+      if (segs.size > 1) {
+        val version = SegmentedIndex.newVersionName()
+        copyTrainedState(spark, dir, parent, version)
+        val dirs = cellDirs(spark, dir, segs)
+        writeCells(scanCells(spark, dirs, chainSchema(spark, dir, dirs)),
+          s"$dir/$version/cells")
+        SegmentedIndex.commitCompact(spark, dir, version, parent,
+          SegmentedIndex.committedTags(SegmentedIndex.fsFor(spark, dir),
+            dir, segs))
+      }
+    }
 
   /** DESCRIBE the standing IVF-family index: the per-(segment, cell)
-    * population histogram, in manifest order — the observability verb
-    * of the lifecycle. Cell balance is THE operational health signal
-    * for an IVF index (a skewed cell is a slow probe and a recall
-    * risk; nlist ∝ corpus only holds if the cells actually fill
-    * evenly), and segment fan-in per cell is what schedules
-    * compaction. Works on all three families — raw/PQ/SQ8 share the
-    * hive `cells/centroid_id=` layout — and reads no vector or code
-    * columns: the count aggregates over the partition column alone,
-    * so column pruning makes the scan footer-and-metadata work.
+    * population histogram `(seg_ord, centroid_id, n_vecs)`, seg_ord in
+    * manifest order — the observability verb of the lifecycle. Cell
+    * balance is THE operational health signal for an IVF index (a
+    * skewed cell is a slow probe and a recall risk; nlist ∝ corpus only
+    * holds if the cells actually fill evenly), and segment fan-in per
+    * cell is what schedules compaction. One scan of the chain's cells
+    * that reads no data column: the counts come from the partition
+    * column and the files' row counts, each file's segment from its
+    * path.
     */
-  def describeIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): DataFrame = {
-    import graft.sources.SegmentedIndex
-    val ver = indexVersion(spark, dir)
-    SegmentedIndex.segments(spark, dir, ver).zipWithIndex.map {
-      case (seg, i) =>
-        spark.read.parquet(s"$dir/$seg/cells")
-          .groupBy(col("centroid_id"))
-          .agg(count(lit(1)).as("n_vecs"))
-          .select(lit(i).as("seg_ord"), col("centroid_id"),
-            col("n_vecs"))
-    }.reduce(_ unionAll _)
-  }
+  def describeIvfIndex(spark: SparkSession, dir: String): DataFrame =
+    SegmentedIndex.asOp(spark, "describeIvfIndex") {
+      val segs = indexSegments(spark, dir, indexVersion(spark, dir))
+      val segOrd = element_at(typedlit(segs.zipWithIndex.toMap),
+        regexp_extract(col("_metadata.file_path"),
+          "([^/]+)/cells/centroid_id=", 1))
+      scanCells(spark, cellDirs(spark, dir, segs), new StructType())
+        .groupBy(segOrd.as("seg_ord"), col("centroid_id"))
+        .agg(count(lit(1)).as("n_vecs"))
+    }
 
-  /** Probe a persisted IVF-SQ8 index: the same pruned partition-read
-    * shape as [[ivfProbeIndexed]], but the scan moves int8 codes (1
-    * byte/dim) and ranking is the exact quantized-space cosine of
+  /** Probe a persisted IVF-SQ8 index: the same pruned cells read as
+    * [[ivfProbeIndexed]], but the scan moves int8 codes (1 byte/dim)
+    * and ranking is the exact quantized-space cosine of
     * [[quantizedTopK]] — integer dot over codes, norms recomputed
     * exactly, zero-norm codes ineligible on both sides. Queries
     * quantize at probe time with the same ⌊x/scale + 0.5⌋ rule, so
     * every compared value is bit-portable and the whole
-    * assign→prune→rank phase hash-verifies. The scan fans out across
-    * every SEGMENT the current version's manifest lists
-    * ([[appendIvfSq8Index]] deltas included), each partition-pruned to
-    * the probed cells.
+    * assign→prune→rank phase hash-verifies.
     */
   def ivfSq8ProbeIndexed(dir: String, queries: DataFrame, k: Int,
                          nprobe: Int = 0,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.graft.Native
-    val spark = queries.sparkSession
-    val ver = indexVersion(spark, dir)
-    val cents = readCentroids(spark, dir, ver)
-    val np = if (nprobe > 0) nprobe else deriveNprobe(cents.length)
-    val probed = broadcast(
-      assignCells(queries, cents, "query_id", "q_vec", np,
+                         vecCol: String = "embedding"): DataFrame =
+    SegmentedIndex.asOp(queries.sparkSession, "ivfSq8ProbeIndexed") {
+      import org.apache.spark.sql.graft.Native
+      val spark = queries.sparkSession
+      val ver = indexVersion(spark, dir)
+      val cents = readCentroids(spark, dir, ver)
+      val probed = assignCells(queries, cents, "query_id", "q_vec",
+          if (nprobe > 0) nprobe else deriveNprobe(cents.length),
           idCol, vecCol)
         .withColumn("q_code", Native.quantizeI8(col("q_vec")))
         .withColumn("q_norm",
           sqrt(Native.dotI8(col("q_code"), col("q_code")).cast("double")))
         .filter(col("q_norm") > 0)
         .select(col("centroid_id"), col("query_id"), col("q_code"),
-          col("q_norm")))
-    val probedCells = probed.select("centroid_id").distinct()
-      .collect().map(_.getInt(0))
-    val cells = readProbedCells(spark, dir,
-        indexSegments(spark, dir, ver), probedCells)
-      .withColumn("c_norm",
-        sqrt(Native.dotI8(col("codes"), col("codes")).cast("double")))
-      .filter(col("c_norm") > 0)
-    val scored = probed.join(cells, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        (Native.dotI8(col("q_code"), col("codes")).cast("double") /
-          (col("q_norm") * col("c_norm"))).as("cos"))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("cand_id"),
-        round(col("cos"), 4).as("cosine"))
-  }
+          col("q_norm"))
+      val cells = probedCells(spark, dir, ver, probed)
+        .withColumn("c_norm",
+          sqrt(Native.dotI8(col("codes"), col("codes")).cast("double")))
+        .filter(col("c_norm") > 0)
+      rankTopK(broadcast(probed).join(cells, Seq("centroid_id"))
+        .filter(col("query_id") =!= col("cand_id"))
+        .select(col("query_id"), col("cand_id"),
+          (Native.dotI8(col("q_code"), col("codes")).cast("double") /
+            (col("q_norm") * col("c_norm"))).as("cos")), k)
+    }
 
   /** Exact top-k over int8-QUANTIZED vectors — the memory-bandwidth
     * scale path: per-vector symmetric codes (scale = max|x|/127) are 8×

@@ -231,6 +231,39 @@ object SegmentedIndex {
         segments(spark, dir, currentVersion(spark, dir)).size
           > maxSegments) compact
 
+  /** The stream sink of every index family: [[streamSink]]'s tagged
+    * `append` of each micro-batch, then, with `maxSegments > 0`,
+    * [[maintain]]'s fold by the family's `compact` — self-maintaining
+    * ingest, whose `_TAGS` carry keeps checkpoint replays exactly-once
+    * across folds.
+    */
+  def maintainedSink(dir: String, checkpointDir: String, maxSegments: Int)(
+      append: (DataFrame, Option[String]) => Unit)(
+      compact: SparkSession => Unit): (DataFrame, Long) => Unit =
+    streamSink(checkpointDir) { (batch, tag) =>
+      append(batch, tag)
+      maintain(batch.sparkSession, dir, maxSegments)(
+        compact(batch.sparkSession))
+    }
+
+  /** Runs `body` with `op` as the call site of the Spark jobs it
+    * starts, then restores the caller's. The name is a local property,
+    * so the jobs other threads start for it — concurrent writes, AQE's
+    * and the broadcast pool's, all of which copy the caller's local
+    * properties — carry it too, instead of the pool frame
+    * (`CompletableFuture$AsyncSupply.run`) their stacks would name.
+    */
+  private[graft] def asOp[T](spark: SparkSession, op: String)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty(CallSiteShort)
+    sc.setCallSite(op)
+    try body finally sc.setLocalProperty(CallSiteShort, caller)
+  }
+
+  /** The local property `SparkContext.setCallSite` sets. */
+  private val CallSiteShort = "callSite.short"
+
   /** foreachBatch sink wrapper providing the exactly-once tag: each
     * micro-batch calls `append(batch, Some("<streamId>#<batchId>"))`,
     * where streamId is the query's stable id from the checkpoint's

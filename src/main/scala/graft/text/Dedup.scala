@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SegmentedIndex.asOp
+
 /** Document deduplication at corpus scale: exact, MinHash+LSH, SimHash,
   * and n-gram Jaccard. The scale discipline throughout: NEVER compare all
   * pairs — generate candidates through an inverted index (shared shingle,
@@ -407,24 +409,6 @@ object Dedup {
     SegmentedIndex.commitBuild(spark, dir, version)
   }
 
-  /** Runs `body` with `op` as the call site of the Spark jobs it
-    * starts, then restores the caller's. The name is a local property,
-    * so the jobs other threads start for it — [[concurrently]]'s writes,
-    * AQE's and the broadcast pool's, all of which copy the caller's
-    * local properties — carry it too, instead of the pool frame
-    * (`CompletableFuture$AsyncSupply.run`) their stacks would name.
-    */
-  private def asOp[T](spark: org.apache.spark.sql.SparkSession, op: String)(
-      body: => T): T = {
-    val sc = spark.sparkContext
-    val caller = sc.getLocalProperty(CallSiteShort)
-    sc.setCallSite(op)
-    try body finally sc.setLocalProperty(CallSiteShort, caller)
-  }
-
-  /** The local property `SparkContext.setCallSite` sets. */
-  private val CallSiteShort = "callSite.short"
-
   /** The (doc_id, sharr) kernel a build or append writes, with doc ids
     * cast to the side files' declared BIGINT. Integral ids (TINYINT to
     * BIGINT) widen losslessly, so probe values are unchanged; any other
@@ -624,14 +608,9 @@ object Dedup {
   def shingleStreamSink(dir: String, checkpointDir: String, k: Int = 3,
                         maxSegments: Int = 0)
       : (DataFrame, Long) => Unit =
-    graft.sources.SegmentedIndex.streamSink(checkpointDir) {
-      (batch, tag) =>
-        appendShingleIndex(dir, batch, k, tag)
-        graft.sources.SegmentedIndex.maintain(
-          batch.sparkSession, dir, maxSegments) {
-          compactShingleIndex(batch.sparkSession, dir)
-        }
-    }
+    graft.sources.SegmentedIndex.maintainedSink(dir, checkpointDir,
+      maxSegments)(appendShingleIndex(dir, _, k, _))(
+      compactShingleIndex(_, dir))
 
   /** COMPACT the standing shingle index: fold the current version's
     * whole segment chain back into ONE bucketed segment — the missing

@@ -197,123 +197,6 @@ class IvfSpec extends SparkSpec {
     Similarity.clearTrainingMemo()
   }
 
-  test("disk mirror: an artifact trained in one session is reused " +
-      "across a simulated JVM restart bit-identically, and a corrupt " +
-      "file degrades to a retrain, never an error") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_train_cache_spec").toFile
-    val saved = Similarity.trainingArtifactDir
-    try {
-      Similarity.setTrainingArtifactDir(Some(dir.getAbsolutePath))
-      Similarity.clearTrainingMemo()
-      val a = Similarity.trainCentroids(vecs, 8, 500, 2)
-      val (h0, w0) = Similarity.trainingDiskStats
-      assert(h0 == 0 && w0 == 1,
-        s"expected one disk write on first train, hits=$h0 writes=$w0")
-      // a fresh JVM has an empty memory memo but finds the mirror —
-      // this is the driver's Verify-then-Bench process pair
-      Similarity.dropMemoryMemo()
-      val b = Similarity.trainCentroids(
-        SimilarityQueries.doubleVecs(spark, sf), 8, 500, 2)
-      val (h1, w1) = Similarity.trainingDiskStats
-      assert(h1 == 1 && w1 == 1,
-        s"expected disk hit + no retrain write, hits=$h1 writes=$w1")
-      assert(a.length == b.length &&
-        a.zip(b).forall { case ((i1, v1), (i2, v2)) =>
-          i1 == i2 && java.util.Arrays.equals(v1, v2) },
-        "disk-mirrored artifact not bit-identical to the trained one")
-      // torn/corrupt artifact ⇒ miss ⇒ retrain ⇒ rewrite
-      val bins = dir.listFiles().filter(_.getName.endsWith(".bin"))
-      assert(bins.length == 1)
-      java.nio.file.Files.write(bins.head.toPath,
-        Array[Byte](1, 2, 3)): Unit
-      Similarity.dropMemoryMemo()
-      val c = Similarity.trainCentroids(vecs, 8, 500, 2)
-      val (h2, w2) = Similarity.trainingDiskStats
-      assert(h2 == 1 && w2 == 2,
-        s"corrupt file must retrain+rewrite, hits=$h2 writes=$w2")
-      assert(a.zip(c).forall { case ((i1, v1), (i2, v2)) =>
-        i1 == i2 && java.util.Arrays.equals(v1, v2) })
-      Similarity.clearTrainingMemo() // wipes the temp mirror
-      assert(dir.listFiles().forall(!_.getName.endsWith(".bin")))
-    } finally {
-      Similarity.setTrainingArtifactDir(saved)
-      Similarity.dropMemoryMemo()
-      dir.listFiles().foreach(_.delete())
-      dir.delete(): Unit
-    }
-  }
-
-  test("disk mirror hardening (ADVICE r13): a planted .bin holding a " +
-      "non-allowlisted class is REJECTED by the deserialization filter " +
-      "and degrades to a clean retrain; a store that cannot land is " +
-      "not counted as a write; the mirror prunes oldest beyond the cap") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_train_filter_spec").toFile
-    val saved = Similarity.trainingArtifactDir
-    try {
-      Similarity.setTrainingArtifactDir(Some(dir.getAbsolutePath))
-      Similarity.clearTrainingMemo()
-      val a = Similarity.trainCentroids(vecs, 8, 500, 2)
-      val bins = dir.listFiles().filter(_.getName.endsWith(".bin"))
-      assert(bins.length == 1)
-      // overwrite the artifact with a serialized object OUTSIDE the
-      // java.lang/scala allowlist. Without the ObjectInputFilter this
-      // would deserialize fine and surface later as a ClassCastException
-      // in the caller's .map (the erased cast can't catch it); with the
-      // filter it must read as a MISS and retrain the identical value.
-      val out = new java.io.ObjectOutputStream(
-        new java.io.FileOutputStream(bins.head))
-      try out.writeObject(new java.util.Date(0L)) finally out.close()
-      Similarity.dropMemoryMemo()
-      val (_, w0) = Similarity.trainingDiskStats
-      val b = Similarity.trainCentroids(vecs, 8, 500, 2)
-      val (_, w1) = Similarity.trainingDiskStats
-      assert(w1 == w0 + 1,
-        "rejected artifact must retrain and rewrite, not be served")
-      assert(a.zip(b).forall { case ((i1, v1), (i2, v2)) =>
-        i1 == i2 && java.util.Arrays.equals(v1, v2) })
-
-      // write-counter honesty: point the mirror at a path whose parent
-      // is a plain FILE — every store must fail, and the counter must
-      // NOT claim a write that never landed
-      val blocker = java.io.File.createTempFile("graft_not_a_dir", "")
-      Similarity.setTrainingArtifactDir(
-        Some(new java.io.File(blocker, "cache").getAbsolutePath))
-      Similarity.clearTrainingMemo()
-      Similarity.trainCentroids(vecs, 8, 500, 2): Unit
-      val (h2, w2) = Similarity.trainingDiskStats
-      assert(h2 == 0 && w2 == 0,
-        s"store cannot land but was counted: hits=$h2 writes=$w2")
-      blocker.delete(): Unit
-
-      // pruning: plant stale .bin files well beyond the cap with old
-      // mtimes; the next landed store keeps only the newest cap-many,
-      // and the artifact just written survives
-      Similarity.setTrainingArtifactDir(Some(dir.getAbsolutePath))
-      Similarity.clearTrainingMemo()
-      (0 until Similarity.DiskMirrorCap + 20).foreach { i =>
-        val f = new java.io.File(dir, f"stale_$i%04d.bin")
-        java.nio.file.Files.write(f.toPath, Array[Byte](0)): Unit
-        f.setLastModified(1000000L + i * 1000L): Unit
-      }
-      Similarity.trainCentroids(vecs, 8, 500, 2): Unit
-      val after = dir.listFiles().filter(_.getName.endsWith(".bin"))
-      assert(after.length == Similarity.DiskMirrorCap,
-        s"mirror not pruned to cap: ${after.length}")
-      assert(after.exists(!_.getName.startsWith("stale_")),
-        "pruning deleted the artifact it just stored")
-      // evicted = the OLDEST planted files
-      assert(!after.map(_.getName).contains("stale_0000.bin"))
-    } finally {
-      Similarity.setTrainingArtifactDir(saved)
-      Similarity.clearTrainingMemo()
-      Similarity.dropMemoryMemo()
-      dir.listFiles().foreach(_.delete())
-      dir.delete(): Unit
-    }
-  }
-
   test("deriveNlist holds cell population constant, floored and capped") {
     assert(Similarity.deriveNlist(500L) == 16)        // small-corpus floor
     assert(Similarity.deriveNlist(4096L) == 16)       // 4096/256 exactly

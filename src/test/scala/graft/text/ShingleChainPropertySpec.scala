@@ -115,23 +115,31 @@ class ShingleChainPropertySpec extends SparkSpec {
     // segment, each scan BUCKETED where the group is
     // (auto-disabling off, so a count reads by bucket id and would miss
     // a file whose bucket id is past its group's count), and its rows
-    // are exactly the segments' rows
+    // are exactly the segments' rows. Groups form in chain order, so a
+    // segment with no recorded postings count that sits between two
+    // segments of its bucket count also splits their group in two.
     val cut = legacy.filterNot(pre.contains)
-    val counts = segs.indices.filterNot(i => pre.contains(i) ||
-        cut.contains(i)).map(i =>
+    def bucketCount(i: Int) =
       PointerFile.read(fs, new Path(s"$dir/${segs(i)}/buckets"))
-        .linesIterator.next().toInt)
+        .linesIterator.next().toInt
+    val counted = segs.indices.filterNot(i => pre.contains(i) ||
+      cut.contains(i))
+    val counts = counted.map(bucketCount)
+    val splits = cut.count { l =>
+      val same = counted.filter(bucketCount(_) == bucketCount(l))
+      same.exists(_ < l) && same.exists(_ > l)
+    }
     val perSegment = segs.map(v =>
       spark.read.parquet(s"$dir/$v/postings").count()).sum
     withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled" ->
         "false") {
       val groups = Dedup.readPostingsGroups(spark, dir, segs)
-      assert(groups.size === counts.distinct.size + cut.size + pre.size,
-        what)
+      assert(groups.size ===
+        counts.distinct.size + cut.size + pre.size + splits, what)
       val bucketed = groups.flatMap(_.queryExecution.executedPlan
         .collect { case s: FileSourceScanExec => s.bucketedScan })
-      assert(bucketed.count(identity) === counts.distinct.size + cut.size,
-        what)
+      assert(bucketed.count(identity) ===
+        counts.distinct.size + cut.size + splits, what)
       // count(shingle), not count(): a scan that reads no column is
       // never bucketed
       assert(groups.map(_.agg(count(col("shingle"))).head().getLong(0))
@@ -158,6 +166,11 @@ class ShingleChainPropertySpec extends SparkSpec {
     assert(uncappedRef.nonEmpty && cappedRef.nonEmpty && phrases.nonEmpty)
     assert(uncappedRef !== cappedRef, "the cap dropped nothing")
     check(Seq(Dedup.BucketRows, 2500L, 6000L, 2500L), Some(2), Some(1))
+  }
+
+  test("a legacy-metadata segment between two segments of its bucket " +
+       "count") {
+    check(Seq(2500L, 2500L, 2500L, 2500L, Dedup.BucketRows), None, Some(2))
   }
 
   test("scan groups: one per bucket count, split in chain order where " +

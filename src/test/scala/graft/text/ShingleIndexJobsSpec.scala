@@ -1,15 +1,13 @@
 package graft.text
 
 import java.util.Properties
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 import graft.ops.TextQueries
 import graft.sources.{PointerFile, SegmentedIndex}
 
@@ -56,37 +54,10 @@ class ShingleIndexJobsSpec extends SparkSpec {
   private def assertSame(a: DataFrame, b: DataFrame, what: String): Unit =
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
 
-  private val Marker = "graft.spec.jobsBarrier"
+  private def jobsOf(body: => Unit): Seq[(Properties, String)] =
+    SparkJobs.of(spark)(body)
 
-  /** (local properties, first stage name) of every job `body` starts,
-    * in start order. Listener events arrive in order, so once a marker
-    * job run after `body` is seen, every job of `body` has been.
-    */
-  private def jobsOf(body: => Unit): Seq[(Properties, String)] = {
-    SegmentedIndex.awaitGc()
-    val seen = new LinkedBlockingQueue[(Properties, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put((e.properties,
-          e.stageInfos.headOption.map(_.name).getOrElse("")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty(Marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(Marker, null)
-      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
-        .takeWhile { j =>
-          assert(j != null, "listener barrier timed out")
-          j._1.getProperty(Marker) == null
-        }.toSeq
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def sites(jobs: Seq[(Properties, String)]) =
-    jobs.map(_._2).mkString("\n")
+  private def sites(jobs: Seq[(Properties, String)]) = SparkJobs.sites(jobs)
 
   test("the fold runs as many jobs on a 5-segment chain as on a " +
        "2-segment one") {
