@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions.{col, max, min}
 /** Sustained-ingest throughput for the CDC merge path (r9 verdict
   * item 4): replay the sf feed as N time-ordered micro-batches through
   * [[graft.streaming.CdcPipeline.mergeBatch]] and report events/s plus
-  * a PER-PHASE attribution of each commit's cost (via the pipeline's
-  * phaseRecorder hook) — where the fixed per-commit overhead actually
-  * goes: manifest resolve, batch materialization, the touched-bucket
+  * a PER-PHASE attribution of each commit's cost (the pipeline's
+  * `Trace.phase`s, read from an [[obs.Trace]]) — where the fixed
+  * per-commit overhead actually goes: manifest resolve, batch materialization, the touched-bucket
   * collect, the read-merge-write job, schema and manifest writes, GC.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.CdcMergeBench
@@ -34,26 +34,21 @@ object CdcMergeBench {
       keyCols = Seq("key"), orderCols = Seq("ts_us", "event_id"),
       opCol = "op")
 
-    val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
-    streaming.CdcPipeline.phaseRecorder = Some { (p, s) =>
-      phases(p) = phases.getOrElse(p, 0.0) + s
-    }
-
     def replay(nb: Int): (Double, Map[String, Double]) = {
-      phases.clear()
       val statePath = s"/tmp/graft_mergebench_state_$nb"
       val fs = new org.apache.hadoop.fs.Path(statePath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(statePath), true)
-      val t0 = System.nanoTime()
-      (0 until nb).foreach { i =>
-        val from = lo + (hi - lo + 1) * i / nb
-        val until = lo + (hi - lo + 1) * (i + 1) / nb
-        streaming.CdcPipeline.mergeBatch(
-          feed.filter(col("ts_us") >= from && col("ts_us") < until),
-          statePath, cfg, i)
+      val t = obs.Trace.of(spark) {
+        (0 until nb).foreach { i =>
+          val from = lo + (hi - lo + 1) * i / nb
+          val until = lo + (hi - lo + 1) * (i + 1) / nb
+          streaming.CdcPipeline.mergeBatch(
+            feed.filter(col("ts_us") >= from && col("ts_us") < until),
+            statePath, cfg, i)
+        }
       }
-      ((System.nanoTime() - t0) / 1e9, phases.toMap)
+      (t.seconds, t.phaseSeconds)
     }
 
     // wall and phases come from the SAME replay (the warm one) so the
@@ -82,7 +77,6 @@ object CdcMergeBench {
     }
     sb ++= "}"
     println(sb.toString)
-    streaming.CdcPipeline.phaseRecorder = None
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 /** Memory-pressure proof for the heavy aggregates (r9 verdict item 5):
   * run a named slice of the inventory under a DELIBERATELY starved
   * executor (small -Xmx from the caller + a small
@@ -43,60 +41,27 @@ object SpillProbe {
       .getOrCreate()
     new java.io.File(outDir).mkdirs()
 
-    @volatile var spilledMem = 0L
-    @volatile var spilledDisk = 0L
-    @volatile var stagesSeen = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted)
-          : Unit = {
-        spilledMem += s.stageInfo.taskMetrics.memoryBytesSpilled
-        spilledDisk += s.stageInfo.taskMetrics.diskBytesSpilled
-        stagesSeen += 1
-      }
-    })
-    // listener events post asynchronously; poll the completed-stage
-    // count until it is stable across two consecutive 200 ms windows
-    // (bounded at 5 s) instead of one fixed sleep — under a heavy sf
-    // run a fixed 500 ms let query N's late stage events land after
-    // the read and get credited to query N+1 (ADVICE r10)
-    def drainListenerBus(): Unit = {
-      var last = -1L
-      var waited = 0
-      while (waited < 5000 && stagesSeen != last) {
-        last = stagesSeen
-        Thread.sleep(200)
-        waited += 200
-      }
-    }
-
     val sb = new StringBuilder
     sb ++= s"""{"metric":"spill_probe","sf_dir":"$sfDir""""
     sb ++= s""","heap_mb":${Runtime.getRuntime.maxMemory() / 1048576}"""
     sb ++= s""","mem_fraction":"${spark.conf.get("spark.memory.fraction")}""""
     names.foreach { name =>
-      // drain BEFORE resetting: stragglers from the previous query are
-      // flushed out here, so the reset below starts this query's
-      // window clean instead of absorbing the tail of the last one
-      drainListenerBus()
-      spilledMem = 0L; spilledDisk = 0L
-      val t0 = System.nanoTime()
-      val outcome =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            // coalesce(1): same result-dump shape as Verify — only the
-            // final result stage collapses, probe measures the query
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          "ok"
-        } catch { case e: Throwable =>
+      var outcome = "ok"
+      val t = obs.Trace.of(spark) {
+        try SparkEntry.queries(name)(spark, sfDir)
+          // coalesce(1): same result-dump shape as Verify — only the
+          // final result stage collapses, probe measures the query
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
           System.err.println(s"[spill] $name FAILED: ${e.getMessage}")
-          "failed"
+          outcome = "failed"
         }
-      val wall = (System.nanoTime() - t0) / 1e9
-      drainListenerBus()
-      sb ++= f""","$name%s":{"outcome":"$outcome%s","wall_sec":$wall%.2f"""
-      sb ++= s""","spill_mem_bytes":$spilledMem"""
-      sb ++= s""","spill_disk_bytes":$spilledDisk}"""
+      }
+      val m = t.stages.map(_.taskMetrics)
+      sb ++= f""","$name%s":{"outcome":"$outcome%s","wall_sec":${t.seconds}%.2f"""
+      sb ++= s""","spill_mem_bytes":${m.map(_.memoryBytesSpilled).sum}"""
+      sb ++= s""","spill_disk_bytes":${m.map(_.diskBytesSpilled).sum}}"""
       spark.catalog.clearCache()
     }
     sb ++= "}"

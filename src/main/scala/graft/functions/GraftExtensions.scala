@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{AvroEncode, CosineSimilarity, CountMinSketchAgg, DotProduct, DotProductI8, FreqSketch, MinHashMd5, MinHashSig, MinShingleMd5, MortonInterleave, QuantizeI8, ShingleHashes, SimHash, SimHashMd5, TopKPairs, TopKRewriteRule, VectorSum}
+import org.apache.spark.sql.graft.{Native, TopKRewriteRule}
 
 /** Public extension injector: enable with
   * `spark.sql.extensions=graft.functions.GraftExtensions` to get the
@@ -12,106 +10,7 @@ import org.apache.spark.sql.graft.{AvroEncode, CosineSimilarity, CountMinSketchA
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "graft_topk"),
-      (args: Seq[Expression]) => TopKPairs(args(0), args(1),
-        args(2).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "graft_simhash"),
-      (args: Seq[Expression]) => SimHash(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (args: Seq[Expression]) => MinHashSig(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingles"),
-      (args: Seq[Expression]) => ShingleHashes(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_md5"),
-      new ExpressionInfo(classOf[MinHashMd5].getName, "graft_minhash_md5"),
-      (args: Seq[Expression]) => MinHashMd5(args(0),
-        args(1).eval().asInstanceOf[Number].intValue(),
-        args(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash_md5"),
-      new ExpressionInfo(classOf[SimHashMd5].getName, "graft_simhash_md5"),
-      (args: Seq[Expression]) => SimHashMd5(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_min_shingle_md5"),
-      new ExpressionInfo(classOf[MinShingleMd5].getName,
-        "graft_min_shingle_md5"),
-      (args: Seq[Expression]) => MinShingleMd5(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_quantize_i8"),
-      new ExpressionInfo(classOf[QuantizeI8].getName, "graft_quantize_i8"),
-      (args: Seq[Expression]) => QuantizeI8(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot_i8"),
-      new ExpressionInfo(classOf[DotProductI8].getName, "graft_dot_i8"),
-      (args: Seq[Expression]) => DotProductI8(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(classOf[MortonInterleave].getName, "graft_zorder"),
-      (args: Seq[Expression]) => MortonInterleave(args(0), args(1),
-        args(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq_sketch"),
-      new ExpressionInfo(classOf[FreqSketch].getName, "graft_freq_sketch"),
-      (args: Seq[Expression]) => FreqSketch(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_countmin"),
-      new ExpressionInfo(classOf[CountMinSketchAgg].getName,
-        "graft_countmin"),
-      (args: Seq[Expression]) => CountMinSketchAgg(args(0),
-        args(1).eval().asInstanceOf[Number].intValue(),
-        args(2).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_vecsum"),
-      new ExpressionInfo(classOf[VectorSum].getName, "graft_vecsum"),
-      (args: Seq[Expression]) => VectorSum(args(0))
-        .toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk_rows"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.graft.TopKRows].getName,
-        "graft_topk_rows"),
-      (args: Seq[Expression]) => org.apache.spark.sql.graft.TopKRows(
-        args(0), args(1), args(2),
-        args(3).eval().asInstanceOf[Number].intValue(),
-        args(4).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_to_avro"),
-      new ExpressionInfo(classOf[AvroEncode].getName, "graft_to_avro"),
-      (args: Seq[Expression]) => AvroEncode(args(0))))
-    // graft_from_avro needs a StructType argument — SQL callers pass a
-    // DDL string: graft_from_avro(value, 'a INT, b STRING')
-    ext.injectFunction((
-      FunctionIdentifier("graft_from_avro"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.graft.AvroDecode].getName,
-        "graft_from_avro"),
-      (args: Seq[Expression]) => org.apache.spark.sql.graft.AvroDecode(
-        args(0),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          args(1).eval().toString))))
+    Native.functions.foreach(ext.injectFunction)
     // window-top-k → graft_topk[_rows] partial aggregate (lossless
     // patterns only: row_number/rank/dense_rank, optional payload)
     ext.injectOptimizerRule(_ => TopKRewriteRule)

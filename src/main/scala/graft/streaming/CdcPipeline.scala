@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.cdc.{Materialize, SchemaEvolution}
+import graft.obs.Trace
 import graft.sources.PointerFile
 
 /** Streaming CDC materialization — the reference's deployed data plane
@@ -125,26 +126,6 @@ object CdcPipeline {
           s"batch carries ${incoming.simpleString}; only int→long, " +
           "float→double and decimal growth widen a stored column " +
           "(state untouched)")
-
-  /** Optional per-phase wall-clock recorder for [[mergeBatch]] — set
-    * by `graft.CdcMergeBench` to attribute where a commit's fixed cost
-    * goes, and by specs to kill a writer right after a phase (manifest resolve, batch materialization, merge write,
-    * schema/manifest/GC filesystem work). None in production: the
-    * `timed` wrapper is a nanoTime pair and a None check per PHASE (≤8
-    * per commit), not per row.
-    */
-  @volatile private[graft] var phaseRecorder
-      : Option[(String, Double) => Unit] = None
-
-  private def timed[T](phase: String)(f: => T): T =
-    phaseRecorder match {
-      case None => f
-      case Some(rec) =>
-        val t0 = System.nanoTime()
-        val r = f
-        rec(phase, (System.nanoTime() - t0) / 1e9)
-        r
-    }
 
   /** File-backed change-event stream over the landing dir `dir`
     * ([[org.apache.spark.sql.graft.CdcFeedSource]]: Spark's file-source
@@ -502,14 +483,14 @@ object CdcPipeline {
                           perBucket: Long): Unit = {
     val spark = latest.sparkSession
     val fs = fsOf(spark, statePath)
-    val head = timed("resolve")(newestManifest(fs, statePath))
+    val head = Trace.phase("resolve")(newestManifest(fs, statePath))
     head.foreach(requireLayout(statePath, _, cfg))
     val modulus = head.map(_.buckets).orElse(cfg.numBuckets).getOrElse(1)
     // per-bucket row counts of the batch under the CURRENT modulus: ≤
     // buckets rows, driver-side by design. The one job materializes the
     // cached `latest`, doubles as the empty-batch probe, and its total
     // sizes a fresh store — sizing adds no job.
-    val counts = timed("touched_collect")(
+    val counts = Trace.phase("touched_collect")(
       latest.groupBy(bucketOf(cfg.keyCols, modulus).as("b")).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
     if (counts.isEmpty) return
@@ -576,7 +557,7 @@ object CdcPipeline {
       if (readPaths.isEmpty) bucketed
       else Materialize.latest(bucketed, "__bucket" +: cfg.keyCols,
         cfg.orderCols.map(col))
-    timed("merge_write")(
+    Trace.phase("merge_write")(
       merged.observe(writeObs, count(lit(1)))
         .write
         .partitionBy("__bucket")
@@ -613,7 +594,7 @@ object CdcPipeline {
     // would be silently lost. One listStatus turns that into a loud
     // failure BEFORE the manifest: the crash leaves only an
     // unreferenced batch dir (GC'd later), state intact.
-    val written = timed("bucket_guard") {
+    val written = Trace.phase("bucket_guard") {
       val w = fs.listStatus(new Path(s"$statePath/batches/$outDir"))
         .map(_.getPath.getName)
         .filter(_.startsWith("__bucket="))
@@ -631,12 +612,12 @@ object CdcPipeline {
     // a crash between this and the manifest leaves meta a harmless
     // superset: readers null the extra columns and widen old files,
     // the same semantics the merge itself applies
-    newSchema.foreach(s => timed("meta_schema")(
+    newSchema.foreach(s => Trace.phase("meta_schema")(
       PointerFile.write(fs, new Path(s"$statePath/meta/schema"), s.json)))
     val m = Manifest(head.fold(0L)(_.seq + 1), batchId, buckets, rows,
       kept ++ written.map(_ -> outDir))
-    timed("manifest")(writeManifest(fs, statePath, m))
-    timed("gc")(gc(fs, statePath, cfg.retainVersions, head.toSeq :+ m))
+    Trace.phase("manifest")(writeManifest(fs, statePath, m))
+    Trace.phase("gc")(gc(fs, statePath, cfg.retainVersions, head.toSeq :+ m))
   }
 
   /** Read the current materialized state (live rows only — retained
@@ -687,7 +668,7 @@ object CdcPipeline {
     // never-reused dir: a retried compact (same id) or a later merge
     // batch must not overwrite a dir a retained manifest references
     val outDir = uniqueDir("c", batchId)
-    timed("compact_write")(
+    Trace.phase("compact_write")(
       kept.withColumn("__bucket", bucketOf(cfg.keyCols, buckets))
         .repartition(buckets, col("__bucket")).write
         .partitionBy("__bucket")

@@ -135,100 +135,64 @@ object Native {
                failOnError: Boolean = true): Column =
     c(AvroDecode(e(value), schema, failOnError))
 
-  /** Register `graft_dot` / `graft_cosine` as SQL functions on an
-    * existing session (idempotent).
+  /** The engine's SQL functions: the one table both registration
+    * routes read, [[install]] and [[graft.functions.GraftExtensions]].
+    * NearestCells and PqEncode are deliberately absent: they bind
+    * TRAINED ARTIFACTS (centroid / codebook arrays) as plan objects,
+    * which have no sane literal form in SQL text — the SQL route to the
+    * IVF/PQ families is the persisted index (build once, probe via the
+    * read API), not an inline expression.
     */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+                      Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: Class[_])(
+        build: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+    Seq(
+      fn("graft_dot", classOf[DotProduct])(a => DotProduct(a(0), a(1))),
+      fn("graft_cosine", classOf[CosineSimilarity])(a =>
+        CosineSimilarity(a(0), a(1))),
+      fn("graft_topk", classOf[TopKPairs])(a =>
+        TopKPairs(a(0), a(1), int(a(2))).toAggregateExpression()),
+      fn("graft_topk_rows", classOf[TopKRows])(a =>
+        TopKRows(a(0), a(1), a(2), int(a(3)), int(a(4)))
+          .toAggregateExpression()),
+      fn("graft_simhash", classOf[SimHash])(a => SimHash(a(0))),
+      fn("graft_minhash", classOf[MinHashSig])(a =>
+        MinHashSig(a(0), int(a(1)))),
+      fn("graft_shingles", classOf[ShingleHashes])(a =>
+        ShingleHashes(a(0), int(a(1)))),
+      fn("graft_minhash_md5", classOf[MinHashMd5])(a =>
+        MinHashMd5(a(0), int(a(1)), int(a(2)))),
+      fn("graft_simhash_md5", classOf[SimHashMd5])(a => SimHashMd5(a(0))),
+      fn("graft_min_shingle_md5", classOf[MinShingleMd5])(a =>
+        MinShingleMd5(a(0))),
+      fn("graft_quantize_i8", classOf[QuantizeI8])(a => QuantizeI8(a(0))),
+      fn("graft_dot_i8", classOf[DotProductI8])(a =>
+        DotProductI8(a(0), a(1))),
+      fn("graft_zorder", classOf[MortonInterleave])(a =>
+        MortonInterleave(a(0), a(1), int(a(2)))),
+      fn("graft_freq_sketch", classOf[FreqSketch])(a =>
+        FreqSketch(a(0), int(a(1))).toAggregateExpression()),
+      fn("graft_countmin", classOf[CountMinSketchAgg])(a =>
+        CountMinSketchAgg(a(0), int(a(1)), int(a(2)))
+          .toAggregateExpression()),
+      fn("graft_vecsum", classOf[VectorSum])(a =>
+        VectorSum(a(0)).toAggregateExpression()),
+      fn("graft_to_avro", classOf[AvroEncode])(a => AvroEncode(a(0))),
+      // the read schema is a DDL string:
+      // graft_from_avro(value, 'a INT, b STRING')
+      fn("graft_from_avro", classOf[AvroDecode])(a => AvroDecode(a(0),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          a(1).eval().toString))))
+  }
+
+  /** Register [[functions]] on an existing session (idempotent). */
   def install(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => DotProduct(args.head, args(1)))
-    reg.registerFunction(
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (args: Seq[Expression]) => CosineSimilarity(args.head, args(1)))
-    reg.registerFunction(
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "graft_topk"),
-      (args: Seq[Expression]) => TopKPairs(args.head, args(1),
-        args(2).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-    reg.registerFunction(
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "graft_simhash"),
-      (args: Seq[Expression]) => SimHash(args.head))
-    reg.registerFunction(
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (args: Seq[Expression]) => MinHashSig(args.head,
-        args(1).eval().asInstanceOf[Number].intValue()))
-    reg.registerFunction(
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingles"),
-      (args: Seq[Expression]) => ShingleHashes(args.head,
-        args(1).eval().asInstanceOf[Number].intValue()))
-    reg.registerFunction(
-      FunctionIdentifier("graft_quantize_i8"),
-      new ExpressionInfo(classOf[QuantizeI8].getName, "graft_quantize_i8"),
-      (args: Seq[Expression]) => QuantizeI8(args.head))
-    reg.registerFunction(
-      FunctionIdentifier("graft_dot_i8"),
-      new ExpressionInfo(classOf[DotProductI8].getName, "graft_dot_i8"),
-      (args: Seq[Expression]) => DotProductI8(args.head, args(1)))
-    reg.registerFunction(
-      FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(classOf[MortonInterleave].getName, "graft_zorder"),
-      (args: Seq[Expression]) => MortonInterleave(args.head, args(1),
-        args(2).eval().asInstanceOf[Number].intValue()))
-    reg.registerFunction(
-      FunctionIdentifier("graft_freq_sketch"),
-      new ExpressionInfo(classOf[FreqSketch].getName, "graft_freq_sketch"),
-      (args: Seq[Expression]) => FreqSketch(args.head,
-        args(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-    reg.registerFunction(
-      FunctionIdentifier("graft_countmin"),
-      new ExpressionInfo(classOf[CountMinSketchAgg].getName,
-        "graft_countmin"),
-      (args: Seq[Expression]) => CountMinSketchAgg(args.head,
-        args(1).eval().asInstanceOf[Number].intValue(),
-        args(2).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-    // r10 (SqlEntrySpec matrix): the remaining DATA-ONLY kernels, so a
-    // pure-SQL user reaches the same expression surface the DataFrame
-    // API does. NOT registered — and documented here as the boundary:
-    // NearestCells and PqEncode bind TRAINED ARTIFACTS (centroid /
-    // codebook arrays) as plan objects; from SQL text those artifacts
-    // have no sane literal form — the SQL route to the IVF/PQ families
-    // is the persisted index (build once, probe via the read API), not
-    // an inline expression.
-    reg.registerFunction(
-      FunctionIdentifier("graft_topk_rows"),
-      new ExpressionInfo(classOf[TopKRows].getName, "graft_topk_rows"),
-      (args: Seq[Expression]) => TopKRows(args.head, args(1), args(2),
-        args(3).eval().asInstanceOf[Number].intValue(),
-        args(4).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression())
-    reg.registerFunction(
-      FunctionIdentifier("graft_vecsum"),
-      new ExpressionInfo(classOf[VectorSum].getName, "graft_vecsum"),
-      (args: Seq[Expression]) => VectorSum(args.head)
-        .toAggregateExpression())
-    reg.registerFunction(
-      FunctionIdentifier("graft_min_shingle_md5"),
-      new ExpressionInfo(classOf[MinShingleMd5].getName,
-        "graft_min_shingle_md5"),
-      (args: Seq[Expression]) => MinShingleMd5(args.head))
-    reg.registerFunction(
-      FunctionIdentifier("graft_minhash_md5"),
-      new ExpressionInfo(classOf[MinHashMd5].getName, "graft_minhash_md5"),
-      (args: Seq[Expression]) => MinHashMd5(args.head,
-        args(1).eval().asInstanceOf[Number].intValue(),
-        args(2).eval().asInstanceOf[Number].intValue()))
-    reg.registerFunction(
-      FunctionIdentifier("graft_simhash_md5"),
-      new ExpressionInfo(classOf[SimHashMd5].getName, "graft_simhash_md5"),
-      (args: Seq[Expression]) => SimHashMd5(args.head))
+    functions.foreach { case (id, info, build) =>
+      reg.registerFunction(id, info, build)
+    }
   }
 }

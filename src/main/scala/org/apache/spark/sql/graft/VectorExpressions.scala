@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataType, DoubleType, LongType}
@@ -18,12 +18,14 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataTy
   * cosine denominator — so swapping implementations never changes a
   * single output bit.
   *
-  * Inputs must be `array<double>` with equal lengths and no null
-  * elements (the engine always casts embeddings up front; enforced by
-  * `ExpectsInputTypes`).
+  * Inputs are `array<double>` with equal lengths and no null
+  * elements. Every `array<double>` kernel here also takes an
+  * `array<float>` (the embeddings' stored type) through the analyzer's
+  * implicit cast, which widens each element exactly
+  * (`ImplicitCastInputTypes`).
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
@@ -65,7 +67,7 @@ case class DotProduct(left: Expression, right: Expression)
   * into one primitive loop.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+    extends BinaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
@@ -126,7 +128,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * precisely because `floor` is the portable primitive.
   */
 case class QuantizeI8(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType))
@@ -271,7 +273,7 @@ case class VectorSum(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends org.apache.spark.sql.catalyst.expressions.aggregate
-    .TypedImperativeAggregate[Array[Double]] with ExpectsInputTypes {
+    .TypedImperativeAggregate[Array[Double]] with ImplicitCastInputTypes {
 
   override def children: Seq[Expression] = Seq(child)
   override def inputTypes: Seq[AbstractDataType] =
@@ -356,7 +358,7 @@ case class VectorSum(
   */
 case class PqEncode(child: Expression,
                     books: Array[Array[Array[Double]]])
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType))
@@ -542,7 +544,7 @@ object NearestCellsKernel {
 case class NearestCells(child: Expression,
                         cents: Array[(Int, Array[Double])],
                         np: Int)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType))

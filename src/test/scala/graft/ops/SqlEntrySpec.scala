@@ -58,7 +58,7 @@ class SqlEntrySpec extends SparkSpec {
   //  - NearestCells / PqEncode bind TRAINED ARTIFACTS (centroid and
   //    codebook arrays) as plan objects — no sane SQL literal form;
   //    the SQL route to IVF/PQ is the persisted index (see
-  //    Native.install's registry note).
+  //    the note on Native.functions).
   // ------------------------------------------------------------------
 
   private lazy val sqlSess: org.apache.spark.sql.SparkSession = {

@@ -5,7 +5,8 @@ import java.util.Properties
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{SparkJobs, SparkSpec}
+import graft.SparkSpec
+import graft.obs.Trace
 import graft.ops.SimilarityQueries
 import graft.sources.SegmentedIndex
 
@@ -64,9 +65,12 @@ class IvfIndexJobsSpec extends SparkSpec {
     SegmentedIndex.segments(spark, dir,
       SegmentedIndex.currentVersion(spark, dir))
 
-  private def jobsOf(body: => Unit) = SparkJobs.of(spark)(body)
+  /** (local properties, first stage name) of every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[(Properties, String)] =
+    Trace.of(spark)(body).jobs.map(j => (j.properties, j.site))
 
-  private def sites(jobs: Seq[(Properties, String)]) = SparkJobs.sites(jobs)
+  private def sites(jobs: Seq[(Properties, String)]) =
+    jobs.map(_._2).mkString("\n")
 
   families.foreach { f =>
     test(s"${f.name}: the probe runs as many jobs at chain length 4 as " +

@@ -28,6 +28,38 @@ class IvfIndexSpec extends SparkSpec {
     assert(direct.count() > 0)
   }
 
+  test("an array<float> column builds, appends and probes a raw, PQ " +
+       "and SQ8 index row for row like its array<double> cast") {
+    val floats = graft.sources.Tables.embeddings(spark, sf)
+    assert(floats.schema("embedding").dataType.simpleString ===
+      "array<float>")
+    type V = org.apache.spark.sql.DataFrame
+    val families = Seq[(String, (V, String) => Unit, (String, V) => Unit,
+                         (String, V) => V)](
+      ("raw", Similarity.buildIvfIndex(_, _, nlist = 16),
+        Similarity.appendIvfIndex(_, _),
+        Similarity.ivfProbeIndexed(_, _, 5, nprobe = 4)),
+      ("pq", Similarity.buildIvfPqIndex(_, _, nlist = 16),
+        Similarity.appendIvfPqIndex(_, _),
+        Similarity.ivfPqProbeIndexed(_, _, 5, nprobe = 4)),
+      ("sq8", Similarity.buildIvfSq8Index(_, _, nlist = 16),
+        Similarity.appendIvfSq8Index(_, _),
+        Similarity.ivfSq8ProbeIndexed(_, _, 5, nprobe = 4)))
+    families.foreach { case (name, build, append, probe) =>
+      def run(v: V) = {
+        val d = java.nio.file.Files.createTempDirectory(s"ivf_$name")
+          .toString + "/idx"
+        build(v.filter(col("vec_id") % 2 === 0), d)
+        append(d, v.filter(col("vec_id") % 2 === 1))
+        probe(d, v.filter(col("vec_id") < 8)).collect().toSeq
+          .map(_.toSeq.mkString(",")).sorted
+      }
+      val got = run(floats)
+      assert(got.nonEmpty, name)
+      assert(got === run(vecs), name)
+    }
+  }
+
   test("the probe scan is partition-pruned to the probed cells") {
     Similarity.buildIvfIndex(vecs, dir, nlist = 16)
     val queries = vecs.filter(col("vec_id") < 8)

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSpec
+import graft.obs.Trace
 
 /** Top-level so Spark's encoder codegen sees a static case class. */
 case class LayoutEv(key: String, event_id: Long, ts_us: Long, op: String,
@@ -212,12 +213,9 @@ class CdcLayoutSpec extends SparkSpec {
   // "compact_write" land the data dir, "manifest" is the commit point
   private final class Killed extends RuntimeException("killed")
 
-  private def killedAfter(phase: String)(f: => Unit): Unit = {
-    CdcPipeline.phaseRecorder = Some((p, _) =>
-      if (p == phase) throw new Killed)
-    try intercept[Killed](f)
-    finally CdcPipeline.phaseRecorder = None
-  }
+  private def killedAfter(phase: String)(f: => Unit): Unit =
+    intercept[Killed](Trace.of(spark, p =>
+      if (p.name == phase) throw new Killed)(f))
 
   private case class KillCase(name: String, relayout: Boolean,
                               cfg: CdcPipeline.Config,

@@ -1,13 +1,11 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -15,10 +13,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.cdc.{EnvelopeCodec, SchemaRegistry}
+import graft.obs.Trace
 import graft.ops.CdcQueries
 
 /** How one CDC trigger runs on the cluster: the merge write's physical
@@ -31,29 +29,14 @@ class TriggerPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .withColumn("ts", timestamp_micros(col("ts_us")))
 
   /** Executed plans of the store writes `f` runs (writes under a
-    * `batches/` dir), as the listener bus delivers them.
+    * `batches/` dir).
     */
-  private def storeWrites(f: => Unit): Seq[SparkPlan] = {
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val l = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, d: Long): Unit =
-        collectFirst(qe.executedPlan) {
-          case w: DataWritingCommandExec
-              if w.cmd.toString.contains("/batches/") => w
-        }.foreach(plans.add)
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      val before = plans.size
-      f
-      val deadline = System.currentTimeMillis() + 10000
-      while (plans.size == before && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      Thread.sleep(200)
-    } finally spark.listenerManager.unregister(l)
-    plans.asScala.toSeq
-  }
+  private def storeWrites(f: => Unit): Seq[SparkPlan] =
+    Trace.of(spark)(f).queries.flatMap(qe =>
+      collectFirst(qe.executedPlan) {
+        case w: DataWritingCommandExec
+            if w.cmd.toString.contains("/batches/") => w
+      })
 
   test("the merge write shuffles once and sorts once, below its " +
        "aggregate: no exchange for the aggregate, no sort for the write") {
@@ -103,26 +86,17 @@ class TriggerPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * distinct state-store RDDs would not see a second run.)
     */
   private def stateStoreRuns(f: => StreamingQuery): (Int, StreamingQuery) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+    var q: StreamingQuery = null
+    val stages = Trace.of(spark) { q = f; q.awaitTermination() }.stages
     val filled = scala.collection.mutable.Set.empty[Int]
-    val l = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        filled.synchronized {
-          val rdds = e.stageInfo.rddInfos
-          val cached = rdds.filter(_.storageLevel.isValid).map(_.id)
-          if (rdds.exists(_.name == "StateStoreRDD") &&
-              (cached.isEmpty || !cached.forall(filled)))
-            n.incrementAndGet()
-          filled ++= cached
-        }
+    val runs = stages.count { s =>
+      val cached = s.rddInfos.filter(_.storageLevel.isValid).map(_.id)
+      val ran = s.rddInfos.exists(_.name == "StateStoreRDD") &&
+        (cached.isEmpty || !cached.forall(filled))
+      filled ++= cached
+      ran
     }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val q = f
-      q.awaitTermination()
-      Thread.sleep(500)
-      (n.get, q)
-    } finally spark.sparkContext.removeSparkListener(l)
+    (runs, q)
   }
 
   /** Every batch the query ran, data or no-data. */

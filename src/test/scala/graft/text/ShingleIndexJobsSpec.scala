@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{SparkJobs, SparkSpec}
+import graft.SparkSpec
+import graft.obs.Trace
 import graft.ops.TextQueries
 import graft.sources.{PointerFile, SegmentedIndex}
 
@@ -54,10 +55,12 @@ class ShingleIndexJobsSpec extends SparkSpec {
   private def assertSame(a: DataFrame, b: DataFrame, what: String): Unit =
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
 
+  /** (local properties, first stage name) of every job `body` starts. */
   private def jobsOf(body: => Unit): Seq[(Properties, String)] =
-    SparkJobs.of(spark)(body)
+    Trace.of(spark)(body).jobs.map(j => (j.properties, j.site))
 
-  private def sites(jobs: Seq[(Properties, String)]) = SparkJobs.sites(jobs)
+  private def sites(jobs: Seq[(Properties, String)]) =
+    jobs.map(_._2).mkString("\n")
 
   test("the fold runs as many jobs on a 5-segment chain as on a " +
        "2-segment one") {

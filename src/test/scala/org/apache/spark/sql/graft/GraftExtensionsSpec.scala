@@ -29,4 +29,18 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val rules = ext.buildOptimizerRules(SparkSpec.session)
     assert(rules.contains(TopKRewriteRule), "topk rewrite rule not injected")
   }
+
+  test("Native.install and the extension expose the same functions") {
+    def graftNames(reg: FunctionRegistry): Set[String] =
+      reg.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
+    val ext = new SparkSessionExtensions
+    new graft.functions.GraftExtensions().apply(ext)
+    val injected = graftNames(
+      ext.registerFunctions(FunctionRegistry.builtin.clone()))
+    val session = SparkSpec.session.newSession()
+    Native.install(session)
+    val installed = graftNames(session.sessionState.functionRegistry)
+    assert(installed === injected)
+    assert(Set("graft_to_avro", "graft_from_avro").subsetOf(installed))
+  }
 }
