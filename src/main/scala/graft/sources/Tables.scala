@@ -14,18 +14,43 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
   * doubles as the change-log feed (FIXTURES.md B.1).
   *
   * Every load is a plain `spark.read.parquet` so Catalyst pushes predicates
-  * and prunes columns into the scan. At 100 TB the scan is the dominant
-  * cost: callers must `select` only what they need and filter early so
-  * `PushedFilters`/`ReadSchema` show up in the physical plan — never
-  * pre-materialize a table driver-side.
+  * and prunes columns into the scan; it reads under the table's memoized
+  * schema ([[schemaOf]]), so building the DataFrame runs no Spark job.
+  * At 100 TB the scan is the dominant cost: callers must `select` only
+  * what they need and filter early so `PushedFilters`/`ReadSchema` show
+  * up in the physical plan — never pre-materialize a table driver-side.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** The inferred schema of the parquet table at `path`, MEMOIZED per
+    * (path, mtime): inference reads footers in a Spark job, which every
+    * load of the table would otherwise pay again at construction. The
+    * memo validates against the path's modification time (one
+    * `getFileStatus`), so a table REGENERATED at the same path with a
+    * different schema or encoding (GenScale write-then-read, test
+    * fixtures) is inferred again instead of read under a stale schema
+    * (ADVICE r6).
+    */
+  private def schemaOf(s: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    schemas.compute(path, (_, cached) => cached match {
+      case (`mtime`, _) => cached
+      case _ => (mtime, s.read.parquet(path).schema)
+    })._2
+  }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -48,35 +73,20 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame =
     eventsWindow(s, d, None, None)
 
-  /** The scanned type of `events.ts` for this directory, MEMOIZED per
-    * (dir, mtime): the sniff costs a file listing + footer read, and
-    * every events-based query construction would otherwise pay it a
-    * second time on top of its own scan — at lake scale, listing is a
-    * real cost. The cache validates against the path's modification
-    * time (one `getFileStatus`, far cheaper than the footer sniff), so
-    * a dataset REGENERATED at the same path with a different encoding
-    * (GenScale write-then-read, test fixtures) re-sniffs instead of
-    * producing a wrong-typed pushdown literal (ADVICE r6). Side effect
-    * on first sniff: enables the legacy nano-as-long read so
-    * TIMESTAMP(NANOS) files scan as LongType instead of failing (a
-    * no-op for µs files).
+  /** The scanned type of `events.ts` for this directory: a lookup in
+    * the (path, mtime) schema memo ([[schemaOf]]), so a dataset
+    * REGENERATED at the same path with a different encoding re-sniffs
+    * instead of producing a wrong-typed pushdown literal. Side effect:
+    * enables the legacy nano-as-long read so TIMESTAMP(NANOS) files
+    * scan as LongType instead of failing (a no-op for µs files).
     */
   def eventsTsType(s: SparkSession, d: String): DataType = {
-    // set on THIS session even on a cache hit — the cache is
+    // set on THIS session even on a memo hit — the memo is
     // JVM-global, the conf is per-session, and a nano file needs it
     // at actual read time, not just at sniff time
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val p = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-    val mtime = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
-    tsTypeCache.compute(d, (_, cached) => cached match {
-      case (`mtime`, _) => cached
-      case _ => (mtime, load(s, d, "events").schema("ts").dataType)
-    })._2
+    schemaOf(s, s"$d/events.parquet")("ts").dataType
   }
-
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataType)]()
 
   /** Events with an event-time window PUSHED INTO THE SCAN: the bounds
     * are applied to the raw scan column in ITS OWN type BEFORE any

@@ -385,28 +385,43 @@ object Dedup {
     import graft.sources.SegmentedIndex
     val spark = docs.sparkSession
     val version = SegmentedIndex.newVersionName()
-    // cache the PRE-explode kernel (doc_id, sharr): sizes then cost a
-    // narrow size(sharr) projection instead of a groupBy over the
-    // exploded set, and df comes zero-Exchange off the bucketed
-    // postings after they land — the r8 reduction pass that cut the
-    // segment write from three 4M-row shuffles to one (BASELINE.md
-    // round-8).
-    val arr = segmentKernel(docs, k).cache()
-    // one eager agg materializes the kernel cache AND sizes the
-    // segment's bucket count from its postings volume (r14,
-    // scale-adaptive layout — see BucketRows); the two concurrent
-    // writes then read the filled cache. Same job count as the old
-    // racing-writes shape (the cache fill moved from inside the first
-    // write into the agg), one number gained.
-    val nPost = arr.agg(coalesce(sum(size(col("sharr")).cast("long")),
-      lit(0L))).head().getLong(0)
-    writeKernelSegment(arr, dir, version, nPost, perBucket)
-    // all consumers are done — release the kernel cache rather than
-    // letting builds accumulate blocks for the session's lifetime
-    arr.unpersist(false)
+    withKernel(docs, k)(writeKernelSegment(_, dir, version, _, perBucket))
     // marker + flip + committed-version-counting GC: a crashed build's
     // partial dir can't evict the last committed version (PointerFile)
     SegmentedIndex.commitBuild(spark, dir, version)
+  }
+
+  /** Runs `body` over the (doc_id, sharr) kernel of `docs`
+    * ([[segmentKernel]]) and its postings count, then releases the
+    * kernel's blocks, also when `body` throws.
+    *
+    * The PRE-explode kernel is what is materialized: sizes then cost a
+    * narrow size(sharr) projection instead of a groupBy over the
+    * exploded set, and df comes zero-Exchange off the bucketed
+    * postings after they land — the r8 reduction pass that cut the
+    * segment write from three 4M-row shuffles to one (BASELINE.md
+    * round-8). It is an EAGER local checkpoint with the postings count
+    * observed on it, so ONE job computes the kernel, stores its blocks
+    * and counts its postings; the count sizes the segment's buckets
+    * (r14, scale-adaptive layout — see BucketRows) and tells a quiet
+    * append apart. With the round-robin spread that is 2 jobs under
+    * AQE (spread, checkpoint), where a cache sized by its own
+    * `agg(...).head()` takes 4 (spread, cache fill, partial and final
+    * agg). The checkpoint also truncates lineage, so the two concurrent
+    * writes never race past an unfilled cache and run the kernel twice
+    * (cf. ngramJaccardPairs). Its blocks are dropped on return: left to
+    * the ContextCleaner they wait for a GC, and streaming ingest runs
+    * this once per micro-batch.
+    */
+  private def withKernel[T](docs: DataFrame, k: Int)(
+      body: (DataFrame, Long) => T): T = {
+    val posts = org.apache.spark.sql.Observation()
+    val arr = segmentKernel(docs, k)
+      .observe(posts, coalesce(sum(size(col("sharr")).cast("long")),
+        lit(0L)).as("n"))
+      .localCheckpoint()
+    try body(arr, posts.get("n").asInstanceOf[Long])
+    finally org.apache.spark.sql.graft.LocalCheckpoint.release(arr)
   }
 
   /** The (doc_id, sharr) kernel a build or append writes, with doc ids
@@ -427,9 +442,9 @@ object Dedup {
   }
 
   /** One segment's files from the PRE-explode kernel `arr` =
-    * (doc_id, sharr), already materialized (cached + counted). sharr is
-    * the per-doc DISTINCT shingle set, so size(sharr) IS the exploded
-    * per-doc count — same n_sh, no shuffle.
+    * (doc_id, sharr), already materialized and counted ([[withKernel]]).
+    * sharr is the per-doc DISTINCT shingle set, so size(sharr) IS the
+    * exploded per-doc count — same n_sh, no shuffle.
     */
   private def writeKernelSegment(arr: DataFrame, dir: String,
                                  version: String, nPost: Long,
@@ -451,18 +466,23 @@ object Dedup {
     * later probe joins on shingle, and a bucketed scan gives that join
     * its postings side with ZERO Exchange — only the (small) incoming
     * shard shuffles, into the bucket partitioning (plan-asserted in
-    * DedupSpec). repartition to the bucket count on the same key first:
-    * repartition and the bucketed write share the Murmur3 partitioning,
-    * so each task holds exactly one bucket and each bucket lands in ONE
-    * file.
+    * DedupSpec). With 2 or more buckets, repartition to the bucket
+    * count on the same key first: repartition and the bucketed write
+    * share the Murmur3 partitioning, so each task holds exactly one
+    * bucket and each bucket lands in ONE file. One bucket needs no
+    * exchange for that: a narrow coalesce(1) puts every row in one
+    * task, which writes the same single file under the same writer
+    * sort.
     *
     * Write-cost shape (r8 reduction pass): the exploded set used to
     * feed THREE shuffled jobs (postings repartition, sizes groupBy
     * doc_id, df groupBy shingle). Off the array kernel, sizes are a
     * NARROW size(sharr) projection (runs concurrently with the
-    * postings shuffle), and df aggregates zero-Exchange off the
-    * just-written bucketed postings — the segment now pays exactly one
-    * row-level shuffle, the one that defines its layout.
+    * postings write), and df aggregates zero-Exchange off the
+    * just-written bucketed postings — the segment pays at most one
+    * row-level shuffle, the one that defines a multi-bucket layout,
+    * and a one-bucket segment none: its files cost 3 jobs (postings,
+    * sizes, df), plus the kernel's 2 in a build or append.
     *
     * The `buckets` file records the bucket count and `nPost` (see
     * [[metaPath]]): chain reads group segments by the count, and a
@@ -474,7 +494,8 @@ object Dedup {
     val spark = postings.sparkSession
     concurrently(spark)(
       () => org.apache.spark.sql.graft.ChainRelation.write(
-        postings.repartition(buckets, col("shingle")),
+        if (buckets == 1) postings.coalesce(1)
+        else postings.repartition(buckets, col("shingle")),
         s"$dir/$version/postings", postingsBuckets(buckets)),
       // coalesce (narrow) into bucket-count-order files: uncoalesced,
       // the write inherited the input's partitioning and a 400-doc
@@ -562,26 +583,16 @@ object Dedup {
     // exactly-once under foreachBatch replay (cf. appendIvfIndex)
     if (!SegmentedIndex.tagCommitted(spark, dir, parentSegs, tag)) {
       val version = SegmentedIndex.newVersionName()
-      val arr = segmentKernel(newDocs, k).cache()
-      // one eager job materializes the kernel, decides emptiness, AND
-      // sizes the delta segment's bucket count (r14): a quiet ingest
-      // tick (no docs, or none long enough to shingle) commits nothing
-      // — an empty segment would be a schema-less parquet dir later
-      // probes choke on. Folding the old separate newDocs.isEmpty scan
-      // into the agg saves one job per micro-batch; skipping the
-      // shingle-less case also skips the zero-row segment the old path
-      // would have committed.
-      val nPost = arr.agg(coalesce(sum(size(col("sharr")).cast("long")),
-        lit(0L))).head().getLong(0)
-      if (nPost == 0) arr.unpersist(false)
-      else {
-        writeKernelSegment(arr, dir, version, nPost, perBucket)
-        // delta kernel fully consumed — release (streaming ingest calls
-        // this once per micro-batch; leaked blocks would grow ∝ stream
-        // age)
-        arr.unpersist(false)
-        SegmentedIndex.commitAppend(spark, dir, version, parent,
-          parentSegs, tag)
+      // a quiet ingest tick (no docs, or none long enough to shingle)
+      // commits nothing — an empty segment would be a schema-less
+      // parquet dir later probes choke on. The kernel's postings count
+      // decides it, with no scan of its own.
+      withKernel(newDocs, k) { (arr, nPost) =>
+        if (nPost > 0) {
+          writeKernelSegment(arr, dir, version, nPost, perBucket)
+          SegmentedIndex.commitAppend(spark, dir, version, parent,
+            parentSegs, tag)
+        }
       }
     }
   }
@@ -621,11 +632,11 @@ object Dedup {
     * differs from the chain's, or that would take a probe task past
     * [[BucketRows]], adds a scan and a pair join of its own);
     * after N appends that per-segment fixed cost, not data volume,
-    * dominates probe latency. Compaction rewrites the
-    * union of all segment postings through the one layout-defining
-    * shuffle a base build pays (bucketed on shingle, one file per
-    * bucket), unions the per-doc sizes verbatim (a doc lives wholly in
-    * one segment), and recomputes df zero-Exchange off the freshly
+    * dominates probe latency. Compaction rewrites the union of all
+    * segment postings into the layout a base build writes (bucketed on
+    * shingle, one file per bucket: one layout-defining shuffle, none
+    * for one bucket), unions the per-doc sizes verbatim (a doc lives
+    * wholly in one segment), and recomputes df zero-Exchange off the freshly
     * bucketed postings — summed-across-segments df ≡ recomputed df for
     * disjoint docs, so a df-capped probe of the compacted index is
     * bit-identical to the segmented one. Reads index FILES only, never
@@ -679,10 +690,12 @@ object Dedup {
     // instead of per bucket, i.e. exactly the file population
     // compaction exists to collapse (and a chain of mixed bucket counts
     // has no one partitioning to claim). A plain scan carries no
-    // partitioning claim, so the layout-defining shuffle survives.
-    // Sizes carry over verbatim (a doc lives wholly in one segment); df
-    // is recomputed off the new bucketed postings, which equals the
-    // probe's summed-across-segments df.
+    // partitioning claim, so a multi-bucket fold keeps its
+    // layout-defining shuffle; a fold to one bucket coalesces every
+    // row into one writer task, with no shuffle (3 jobs: postings,
+    // sizes, df). Sizes carry over verbatim (a doc lives wholly in one
+    // segment); df is recomputed off the new bucketed postings, which
+    // equals the probe's summed-across-segments df.
     writeSegmentFiles(readChain(spark, dir, segs, "postings"),
       readChain(spark, dir, segs, "sizes"), dir, version, nPost,
       segmentBuckets(nPost))
@@ -698,25 +711,35 @@ object Dedup {
     * rows are one per doc and `dfreq` one per distinct shingle —
     * `sum(n_sh)` IS the postings row count by construction), so the
     * cost is ∝ metadata, never corpus or postings volume: the shape
-    * `DESCRIBE DETAIL` has in lakehouse tables.
+    * `DESCRIBE DETAIL` has in lakehouse tables. Each side file is ONE
+    * scan over the whole chain, each row tagged with the segment whose
+    * file holds it, and one aggregate over both scans and one row per
+    * segment counts every segment: 2 jobs at any chain length. The row
+    * per segment keeps a segment with no rows (a build over docs too
+    * short to shingle writes one) in the result.
     */
   def describeShingleIndex(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
     import graft.sources.SegmentedIndex
     val ver = SegmentedIndex.currentVersion(spark, dir)
-    SegmentedIndex.segments(spark, dir, ver).zipWithIndex.map {
-      case (seg, i) =>
-        readChain(spark, dir, Seq(seg), "sizes")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_sh")).as("n_postings"),
-            min(col("doc_id")).as("min_doc"),
-            max(col("doc_id")).as("max_doc"))
-          .crossJoin(readChain(spark, dir, Seq(seg), "dfreq")
-            .agg(count(lit(1)).as("n_shingles")))
-          .select(lit(i).as("seg_ord"), col("n_docs"),
-            col("n_postings"), col("n_shingles"),
-            col("min_doc"), col("max_doc"))
-    }.reduce(_ unionAll _)
+    val segs = SegmentedIndex.segments(spark, dir, ver)
+    val segOrd = typedlit(segs.zipWithIndex.toMap)
+    def tagged(file: String, cols: Column*) =
+      readChain(spark, dir, segs, file).select(element_at(segOrd,
+        regexp_extract(col("_metadata.file_path"), s"([^/]+)/$file/", 1))
+        .as("seg_ord") +: cols: _*)
+    val none = lit(null).cast("long")
+    spark.range(0, segs.size, 1, 1)
+      .select(col("id").cast("int").as("seg_ord"),
+        none.as("doc_id"), none.as("n_sh"), lit(0L).as("n_df"))
+      .unionAll(tagged("sizes", col("doc_id"), col("n_sh"), lit(0L)))
+      .unionAll(tagged("dfreq", none, none, lit(1L)))
+      .groupBy("seg_ord")
+      .agg(count(col("doc_id")).as("n_docs"),
+        sum(col("n_sh")).as("n_postings"),
+        sum(col("n_df")).as("n_shingles"),
+        min(col("doc_id")).as("min_doc"),
+        max(col("doc_id")).as("max_doc"))
   }
 
   /** The distinct k-shingle hashes of a phrase, computed by the SAME

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.obs.Trace
 
 /** Encoding armor for the events loader (VERDICT r5: ONE testdata
   * re-encode broke 56 driver queries and 46 tests through the single
@@ -124,6 +125,12 @@ class TablesSpec extends SparkSpec {
     assert(Tables.eventsTsType(spark, dir) === TimestampNTZType,
       "stale cached encoding survived the re-encode")
     assert(instants(Tables.events(spark, dir)) === usValues.sorted)
+  }
+
+  test("a second load of a table runs no Spark job") {
+    Tables.documents(spark, sf)
+    val again = Trace.of(spark) { Tables.documents(spark, sf); () }
+    assert(again.jobs.isEmpty, again.jobs.map(_.site).mkString("\n"))
   }
 
   test("window bounds cut identically and push into the scan in every encoding") {

@@ -14,8 +14,11 @@ import graft.sources.{PointerFile, SegmentedIndex}
 
 /** The shingle index's Spark jobs: maintenance and reads run no
   * metadata job (no footer inference, the fold sized from the
-  * segments' recorded postings counts), so the fold and the probe run
-  * the same number of jobs at any chain length; every job a call
+  * segments' recorded postings counts), so the fold, the probe and
+  * describe run the same number of jobs at any chain length; a
+  * one-bucket append runs 5 jobs and a fold to one bucket 3, while a
+  * segment of several buckets keeps one postings file per bucket; the
+  * segment writers release their kernel's blocks; every job a call
   * starts, also the concurrent writes, carries the caller's local
   * properties and the op's name as its call site; segments written
   * before the count line fold and probe as before; and doc ids are
@@ -71,6 +74,96 @@ class ShingleIndexJobsSpec extends SparkSpec {
     assert(segs(two).size === 1 && segs(five).size === 1)
     assert(j2.size === j5.size,
       s"2 segments:\n${sites(j2)}\n5 segments:\n${sites(j5)}")
+    // a fold to one bucket writes postings, sizes and df: no shuffle
+    assert(meta(two).head === "1" && meta(five).head === "1")
+    assert(j2.size === 3, sites(j2))
+  }
+
+  /** The lines of the `buckets` file of `dir`'s segment `i`. */
+  private def meta(dir: String, i: Int = 0): Seq[String] = PointerFile.read(
+    fs, new Path(s"$dir/${segs(dir)(i)}/buckets")).linesIterator.toSeq
+
+  test("a one-bucket append runs 5 jobs, and a build no more") {
+    val dir = chain(1, fresh("shbudget"))
+    val delta = incoming.filter(col("doc_id") % 2 === 0)
+    val append = jobsOf(Dedup.appendShingleIndex(dir, delta))
+    assert(meta(dir, 1).head === "1")
+    // the kernel's spread and checkpoint, then postings, sizes and df
+    assert(append.size === 5, sites(append))
+    val build = jobsOf(Dedup.buildShingleIndex(existing, fresh("shbudgetb")))
+    assert(build.size <= append.size, sites(build))
+  }
+
+  test("a segment of several buckets writes one postings file per " +
+       "bucket and records its bucket and postings counts") {
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    val one = fresh("shone")
+    Dedup.buildShingleIndex(existing, one)
+    val nPost = meta(one)(1).toLong
+    val many = fresh("shmany")
+    Dedup.buildShingleIndex(existing, many, 3, nPost / 3 + 1)
+    assert(meta(one) === Seq("1", s"$nPost"))
+    assert(meta(many) === Seq("3", s"$nPost"))
+    def bucketIds(dir: String) = fs.listStatus(
+        new Path(s"$dir/${segs(dir).head}/postings"))
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .map(n => BucketingUtils.getBucketId(n).get).toSeq.sorted
+    assert(bucketIds(one) === Seq(0))
+    assert(bucketIds(many) === Seq(0, 1, 2))
+    def postings(dir: String) =
+      spark.read.parquet(s"$dir/${segs(dir).head}/postings")
+    assert(postings(many).count() === nPost)
+    assertSame(postings(one), postings(many), "3-bucket postings")
+    assertSame(probe(one), probe(many), "3-bucket probe")
+  }
+
+  test("build, append and a quiet append release the kernel's blocks " +
+       "on return") {
+    val sc = spark.sparkContext
+    val dir = fresh("shrelease")
+    // docs too short to shingle: the append commits nothing
+    val quiet = incoming.select(col("doc_id"), lit("two tokens").as("text"))
+    val before = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet -- before
+    Dedup.buildShingleIndex(existing, dir)
+    assert(added.isEmpty, "build")
+    Dedup.appendShingleIndex(dir, incoming)
+    assert(added.isEmpty, "append")
+    val version = SegmentedIndex.currentVersion(spark, dir)
+    Dedup.appendShingleIndex(dir, quiet)
+    assert(added.isEmpty, "quiet append")
+    assert(SegmentedIndex.currentVersion(spark, dir) === version)
+  }
+
+  test("describe runs as many jobs at chain length 4 as at 1, a row " +
+       "per segment with that segment's counts") {
+    val one = chain(1, fresh("shdesc1"))
+    val four = chain(4, fresh("shdesc4"))
+    def describe(dir: String) =
+      Dedup.describeShingleIndex(spark, dir).collect().sortBy(_.getInt(0))
+    var d1, d4: Array[org.apache.spark.sql.Row] = null
+    val j1 = jobsOf { d1 = describe(one) }
+    val j4 = jobsOf { d4 = describe(four) }
+    assert(j1.size === j4.size,
+      s"1 segment:\n${sites(j1)}\n4 segments:\n${sites(j4)}")
+    assert(j4.size === 2, sites(j4))
+    assert(d1.length === 1)
+    val direct = segs(four).zipWithIndex.map { case (v, i) =>
+      val sizes = spark.read.parquet(s"$four/$v/sizes")
+        .agg(count(lit(1)), sum("n_sh"), min("doc_id"), max("doc_id"))
+        .head()
+      val shingles = spark.read.parquet(s"$four/$v/dfreq").count()
+      (i, sizes.getLong(0), sizes.getLong(1), shingles, sizes.getLong(2),
+        sizes.getLong(3))
+    }
+    assert(d4.toSeq.map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getLong(5))) === direct)
+    // a build over docs too short to shingle: one segment, no rows
+    val empty = fresh("shdesc0")
+    Dedup.buildShingleIndex(
+      existing.select(col("doc_id"), lit("two tokens").as("text")), empty)
+    assert(describe(empty).toSeq.map(_.toSeq) ===
+      Seq(Seq(0, 0L, null, 0L, null, null)))
   }
 
   test("the probe runs as many jobs at chain length 3 as at 1") {
@@ -161,8 +254,6 @@ class ShingleIndexJobsSpec extends SparkSpec {
     assertSame(probe(legacy), probe(rebuilt), "legacy chain probe")
     Dedup.compactShingleIndex(spark, counted)
     Dedup.compactShingleIndex(spark, legacy)
-    def meta(dir: String) = PointerFile.read(fs,
-      new Path(s"$dir/${segs(dir).head}/buckets")).linesIterator.toSeq
     val nPost =
       spark.read.parquet(s"$rebuilt/${segs(rebuilt).head}/postings").count()
     assert(meta(legacy) === meta(counted))

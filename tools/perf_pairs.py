@@ -3,11 +3,12 @@
 checkout this script lives in.
 
     python3 tools/perf_pairs.py PARENT_REV --workload cdc_trickle --pairs 10
+    python3 tools/perf_pairs.py PARENT_REV --workload index_stream --trace 1
 
 It exports PARENT_REV with `git archive` into a scratch directory (the
 repository itself is not touched; the export is deleted at the end),
 then runs N pairs of `perfbench/run.py --workload W --seed S --seconds T
---trace 0`, with T the `run_seconds` of BENCHMARK.json, one run on each
+--trace X`, with T the `run_seconds` of BENCHMARK.json, one run on each
 side per pair, on fresh seeds (one seed per pair, the same on both
 sides), alternating which side runs first. Each side builds into its
 own directory. Afterwards it prints each side's failed runs and failed
@@ -29,6 +30,12 @@ failed run: it loses its pair on every metric (a pair both sides fail
 is no win), and it has no values for the quartiles. No metric is called
 a gain while the change has more failed runs, or a larger share of
 failed operations, than the parent.
+
+With `--trace 1` the runs are traced, and it prints the same failure
+lines and, for every per-layer metric of BENCHMARK.json, each side's
+q1/median/q3 and the pairs the change won: a report that names the
+layer a change moved, with no verdict, since per-layer metrics carry no
+bound and tracing perturbs the end-to-end ones.
 """
 import argparse
 import json
@@ -59,7 +66,7 @@ def export(rev, dest):
     return dest
 
 
-def run(side_root, build, workload, seed, seconds, log):
+def run(side_root, build, workload, seed, seconds, trace, log):
     """One benchmark run: {"metrics": dict or None, "attempted": int,
     "failed": int}, and its wall seconds. A run with no result line
     counts as one attempted, failed operation."""
@@ -67,7 +74,8 @@ def run(side_root, build, workload, seed, seconds, log):
     t0 = time.time()
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload",
                         workload, "--seed", str(seed), "--seconds",
-                        str(seconds), "--trace", "0"], cwd=side_root, env=env,
+                        str(seconds), "--trace", str(trace)], cwd=side_root,
+                       env=env,
                        stdout=subprocess.PIPE, stderr=log, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     result = json.loads(lines[-1]) if lines else {}
@@ -88,12 +96,18 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def verdict(parent, change, better, bound, may_gain):
-    """(wins, verdict) of one metric over paired runs; None marks a
-    failed run, which loses its pair."""
+def pair_wins(parent, change, better):
+    """The pairs the change won on one metric; None marks a failed run,
+    which loses its pair."""
     sign = 1 if better == "lower" else -1
-    wins = sum(1 for p, c in zip(parent, change)
+    return sum(1 for p, c in zip(parent, change)
                if c is not None and (p is None or sign * (p - c) > 0))
+
+
+def verdict(parent, change, better, bound, may_gain):
+    """(wins, verdict) of one metric over paired runs."""
+    sign = 1 if better == "lower" else -1
+    wins = pair_wins(parent, change, better)
     pq = quartiles([p for p in parent if p is not None])
     cq = quartiles([c for c in change if c is not None])
     if pq is None or cq is None:
@@ -120,6 +134,8 @@ def main():
     ap.add_argument("parent_rev")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: traced runs, a per-layer report with no verdict")
     ap.add_argument("--seed0", type=int,
                     help="first seed (default: drawn at random)")
     ap.add_argument("--work", type=Path,
@@ -146,7 +162,7 @@ def main():
                 for side in order:
                     root, build = sides[side]
                     got, wall = run(root, build, a.workload, seed, seconds,
-                                    log)
+                                    a.trace, log)
                     runs[side].append(got)
                     print(f"pair {i + 1}/{a.pairs} seed {seed} {side}: "
                           f"{'ok' if got['metrics'] else 'FAILED'} "
@@ -155,7 +171,8 @@ def main():
         shutil.rmtree(parent_root, ignore_errors=True)
 
     print(f"{a.workload}: {a.pairs} pairs, seeds {seed0}..{seed0 + a.pairs - 1}"
-          f", {seconds:g} s runs, parent {sha[:12]}; log {log_path}")
+          f", {seconds:g} s runs{', traced' if a.trace else ''}, parent "
+          f"{sha[:12]}; log {log_path}")
     fails = {}
     for side, rs in runs.items():
         bad = sum(1 for r in rs if r["metrics"] is None)
@@ -166,21 +183,24 @@ def main():
               f"failed operations")
     may_gain = (fails["change"][0] <= fails["parent"][0]
                 and fails["change"][1] <= fails["parent"][1])
-    if not may_gain:
+    if not may_gain and not a.trace:
         print("the change fails more than the parent: no gain is counted")
-    print(f"{'metric':<22}{'parent q1/med/q3':>32}{'change q1/med/q3':>32}"
-          f"{'wins':>7}  verdict")
+    print(f"{'metric':<28}{'parent q1/med/q3':>32}{'change q1/med/q3':>32}"
+          f"{'wins':>7}{'' if a.trace else '  verdict'}")
     fmt = lambda q: "/".join(f"{x:.4g}" for x in q) if q else "-"
-    for m in spec["end_to_end"]:
+    for m in spec["per_layer" if a.trace else "end_to_end"]:
         k = m["name"]
         p = [r["metrics"].get(k) if r["metrics"] else None
              for r in runs["parent"]]
         c = [r["metrics"].get(k) if r["metrics"] else None
              for r in runs["change"]]
-        wins, v = verdict(p, c, m["better"], m["bound"], may_gain)
-        print(f"{k:<22}{fmt(quartiles([x for x in p if x is not None])):>32}"
+        if a.trace:
+            wins, v = pair_wins(p, c, m["better"]), ""
+        else:
+            wins, v = verdict(p, c, m["better"], m["bound"], may_gain)
+        print(f"{k:<28}{fmt(quartiles([x for x in p if x is not None])):>32}"
               f"{fmt(quartiles([x for x in c if x is not None])):>32}"
-              f"{wins:>4}/{a.pairs}  {v}")
+              f"{wins:>4}/{a.pairs}  {v}".rstrip())
 
 
 if __name__ == "__main__":
