@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions.{col, max, min}
   * [[graft.streaming.CdcPipeline.mergeBatch]] and report events/s plus
   * a PER-PHASE attribution of each commit's cost (the pipeline's
   * `Trace.phase`s, read from an [[obs.Trace]]) — where the fixed
-  * per-commit overhead actually goes: manifest resolve, batch materialization, the touched-bucket
-  * collect, the read-merge-write job, schema and manifest writes, GC.
+  * per-commit overhead actually goes: head resolve, batch materialization, the touched-bucket
+  * collect, the read-merge-write job, the schema write, and the commit (`manifest`: bucket map,
+  * header and the fenced flip, whose GC decision it includes — the deletes run on the version
+  * vacuum, so `gc_sec` is gone).
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.CdcMergeBench
   *

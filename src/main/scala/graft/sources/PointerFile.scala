@@ -1,12 +1,12 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem,
-  Options, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus,
+  FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
 
-/** Tiny atomic pointer files — the shared primitive under every
-  * crash-safe commit protocol in the engine (the CDC store's commit
-  * manifests, the persisted IVF index's `_CURRENT`): write a
-  * uniquely-named tmp sibling, then ONE `FileContext` rename with
+/** Tiny atomic pointer files — the shared primitive under the ONE
+  * crash-safe commit protocol ([[SegmentedIndex]]: every index family's
+  * `_CURRENT`, and the CDC store's): write a uniquely-named tmp
+  * sibling, then ONE `FileContext` rename with
   * `Options.Rename.OVERWRITE`. A delete-then-rename pair would leave a
   * no-pointer window that a crash could turn into data loss; the
   * unique tmp suffix means concurrent writers never collide on the tmp
@@ -16,8 +16,8 @@ object PointerFile {
 
   /** One cached FileContext per (scheme#authority, Configuration
     * instance): `getFileContext` constructs a fresh AbstractFileSystem
-    * per call, measurable per-commit overhead when a merge flips dozens
-    * of pointers. The Configuration is part of the IDENTITY of the key
+    * per call, measurable overhead on every non-local commit. The
+    * Configuration is part of the IDENTITY of the key
     * (ADVICE r10): keying on scheme#authority alone bound the
     * first-seen conf forever, so a later caller with different settings
     * (kerberos tokens, fs impl overrides) silently reused a stale
@@ -87,8 +87,15 @@ object PointerFile {
     }
   }
 
+  /** A pointer file's value, read past any checksum layer: pointer
+    * files carry no checksum (the local [[write]] drops it), so one raw
+    * open replaces a status call, an open and a failed `.crc` open.
+    */
   def read(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
+    val in = (fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case _ => fs
+    }).open(p)
     try scala.io.Source.fromInputStream(in).mkString.trim
     finally in.close()
   }
@@ -96,19 +103,20 @@ object PointerFile {
   /** Crash leftovers of [[write]] targeting `dst`: tmp siblings never
     * renamed. Age-gated (default 1 h) so a CONCURRENT writer's
     * seconds-old in-flight tmp is never deleted out from under its
-    * rename — only genuinely orphaned files go.
+    * rename — only genuinely orphaned files go. `listing`: the
+    * parent's, if the caller has listed it already.
     */
-  def cleanStaleTmp(fs: FileSystem, dst: Path,
-                    maxAgeMs: Long = 3600000L): Unit =
-    if (fs.exists(dst.getParent)) {
-      val cutoff = System.currentTimeMillis() - maxAgeMs
-      fs.listStatus(dst.getParent).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(dst.getName + ".") && n.endsWith(".tmp") &&
-            st.getModificationTime < cutoff)
-          fs.delete(st.getPath, false)
-      }
+  def cleanStaleTmp(fs: FileSystem, dst: Path, maxAgeMs: Long = 3600000L,
+                    listing: Option[Array[FileStatus]] = None): Unit = {
+    val cutoff = System.currentTimeMillis() - maxAgeMs
+    listing.orElse(Option.when(fs.exists(dst.getParent))(
+      fs.listStatus(dst.getParent))).getOrElse(Array.empty).foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith(dst.getName + ".") && n.endsWith(".tmp") &&
+          st.getModificationTime < cutoff)
+        fs.delete(st.getPath, false)
     }
+  }
 
   /** Name of the per-version commit marker [[commitVersion]] writes. */
   val CommittedMarker = "_COMMITTED"
@@ -130,20 +138,23 @@ object PointerFile {
     * build's start time) is left alone.
     *
     * Segment manifests: a version dir may carry a `segments` text file
-    * (one version name per line) declaring that its data LIVES partly
-    * in older segment dirs (the IVF append path). GC here reads the
-    * manifests of every version it KEEPS and pins the referenced
-    * segments — computed at collection time by the collector itself,
-    * so any committer (a later rebuild included) is safe without
-    * having to know whether earlier versions were segmented.
+    * declaring that its data LIVES partly in older dirs: one line per
+    * whole segment dir (the index append chains) or per pinned child,
+    * `<dir>/<child>` (the CDC store's buckets). GC here reads the
+    * manifests of every version it KEEPS and pins what they name —
+    * computed at collection time by the collector itself, so any
+    * committer (a later rebuild included) is safe without having to
+    * know whether earlier versions were segmented. An old dir pinned in
+    * part loses its other children.
     */
   def commitVersion(fs: FileSystem, base: Path, version: String,
                     keep: Int = 2): Unit = {
-    fs.create(new Path(base, s"$version/$CommittedMarker"), true).close()
+    write(fs, new Path(base, s"$version/$CommittedMarker"), "")
     val cur = new Path(base, "_CURRENT")
     write(fs, cur, version)
-    cleanStaleTmp(fs, cur)
-    val dirs = fs.listStatus(base)
+    val listing = fs.listStatus(base)
+    cleanStaleTmp(fs, cur, listing = Some(listing))
+    val dirs = listing
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v-"))
       .map(_.getPath)
     val committed = dirs
@@ -151,17 +162,23 @@ object PointerFile {
       .map(_.getName).sorted.reverse
     if (committed.length >= keep) {
       val cutoff = committed(keep - 1)
-      val pinned = committed.take(keep).flatMap { v =>
-        val m = new Path(base, s"$v/segments")
-        if (!fs.exists(m)) Nil
-        else {
-          val in = fs.open(m)
-          try scala.io.Source.fromInputStream(in).getLines()
-            .map(_.trim).filter(_.nonEmpty).toList
-          finally in.close()
+      val pins = committed.take(keep).flatMap { v =>
+        try read(fs, new Path(base, s"$v/segments")).linesIterator
+          .map(_.trim).filter(_.nonEmpty).toList
+        catch { case _: java.io.FileNotFoundException => Nil }
+      }
+      val (whole, parts) = pins.partition(!_.contains('/'))
+      val children = parts.map(_.split("/", 2)).groupBy(_(0))
+        .map { case (d, ls) => d -> ls.map(_(1)).toSet }
+      val doomed = dirs.filter(p => p.getName < cutoff &&
+          !whole.contains(p.getName))
+        .flatMap { p =>
+          children.get(p.getName) match {
+            case None => Seq(p)
+            case Some(kept) => fs.listStatus(p).map(_.getPath)
+              .filterNot(c => kept(c.getName)).toSeq
+          }
         }
-      }.toSet
-      val doomed = dirs.filter(p => p.getName < cutoff && !pinned(p.getName))
       // The KEEP decision (list + manifest pinning) runs synchronously
       // under this commit's view; only the physical deletes are
       // deferred to the vacuum thread (r14: a superseded version is

@@ -3,23 +3,21 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE segmented-index commit protocol every persisted standing
-  * artifact in the engine rides — the shingle dedup index
-  * (`graft.text.Dedup`) and the IVF family's raw / PQ / SQ8 indexes
-  * (`graft.sim.Similarity`). Before round 8 each family carried its
-  * own copy of the segments-manifest + `_CURRENT`-flip + tag plumbing;
-  * drift between the copies was the likeliest future correctness bug,
-  * so the protocol now lives here and the families keep only their
-  * domain payload writes (postings/sizes/df vs centroids/cells).
+/** The ONE commit protocol every persisted standing artifact in the
+  * engine rides — the shingle dedup index (`graft.text.Dedup`), the IVF
+  * family's raw / PQ / SQ8 indexes (`graft.sim.Similarity`) and the
+  * CDC state store (`graft.streaming.CdcPipeline`, whose version dirs
+  * hold its buckets). The protocol lives here; the clients keep only
+  * their domain payload writes.
   *
   * Layout under an index root `dir`:
   *   - `v-<millis>-<uuid8>/` immutable version dirs holding the data
   *     files a build or append wrote, plus:
   *     - `_COMMITTED`   marker dropped by [[PointerFile.commitVersion]]
-  *     - `segments`     text manifest (one version name per line) —
-  *       present on APPEND versions; the version's data lives in every
-  *       listed segment dir. Absent on base builds (the version IS its
-  *       only segment — backward compatible with pre-append indexes).
+  *     - `segments`     text manifest (one segment dir, or one pinned
+  *       child `<dir>/<child>`, per line) — present on APPEND versions
+  *       and CDC commits; the version's data lives in every listed
+  *       entry. Absent on base builds (the version IS its only segment).
   *     - `_APPEND_TAG`  opaque idempotency tag (streaming exactly-once)
   *   - `_CURRENT` atomic pointer file naming the committed version.
   *
@@ -28,18 +26,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `_CURRENT` on the parent — a partial dir has no `_COMMITTED` marker,
   * never consumes a GC keep slot, and is eventually collected as
   * litter. GC is manifest-aware ([[PointerFile.commitVersion]] pins
-  * every segment a KEPT version's manifest references).
+  * everything a KEPT version's manifest references).
   *
-  * Concurrency: the append protocol is SINGLE-WRITER (the streaming
-  * sinks run one foreachBatch at a time; batch appends are operator
-  * actions). Two concurrent appends would both chain off the same
-  * parent manifest and the second flip would silently drop the first
-  * append's segment — so [[commitAppend]] re-reads `_CURRENT`
-  * immediately before committing and fails loudly if another writer
-  * moved it. That fence turns the silent-loss race into an error with
-  * a retry instruction; it is conflict DETECTION on a narrow window,
-  * not a lock — serialize writers externally if an index has more
-  * than one.
+  * Concurrency: the protocol is SINGLE-WRITER (the streaming sinks run
+  * one foreachBatch at a time; batch appends, compactions and merges
+  * are operator actions). Two concurrent writers would both chain off
+  * the same parent and the second flip would silently drop the first
+  * one's commit — so every commit re-reads `_CURRENT` immediately
+  * before its flip ([[fenceAndFlip]]) and fails loudly if another
+  * writer moved it. That fence turns the silent-loss race into an
+  * error with a retry instruction; it is conflict DETECTION on a
+  * narrow window, not a lock — serialize writers externally if an
+  * index has more than one.
   */
 object SegmentedIndex {
 
@@ -130,15 +128,11 @@ object SegmentedIndex {
                    parent: String, parentSegs: Seq[String],
                    tag: Option[String], keep: Int = 2): Unit = {
     val fs = fsFor(spark, dir)
-    val segFile = fs.create(new Path(s"$dir/$version/segments"), true)
-    try segFile.write((parentSegs :+ version).mkString("\n")
-      .getBytes("UTF-8"))
-    finally segFile.close()
-    tag.foreach { t =>
-      val tf = fs.create(new Path(s"$dir/$version/$AppendTag"), true)
-      try tf.write(t.getBytes("UTF-8")) finally tf.close()
-    }
-    fenceAndFlip(fs, dir, version, parent, keep)
+    PointerFile.write(fs, new Path(s"$dir/$version/segments"),
+      (parentSegs :+ version).mkString("\n"))
+    tag.foreach(
+      PointerFile.write(fs, new Path(s"$dir/$version/$AppendTag"), _))
+    fenceAndFlip(fs, dir, version, Some(parent), keep)
   }
 
   /** Commit a freshly-written COMPACTED base version: the new dir
@@ -160,24 +154,22 @@ object SegmentedIndex {
                     parent: String, chainTags: Set[String],
                     keep: Int = 2): Unit = {
     val fs = fsFor(spark, dir)
-    if (chainTags.nonEmpty) {
-      val tf = fs.create(new Path(s"$dir/$version/$MultiTags"), true)
-      try tf.write(chainTags.toSeq.sorted.mkString("\n")
-        .getBytes("UTF-8"))
-      finally tf.close()
-    }
-    fenceAndFlip(fs, dir, version, parent, keep)
+    if (chainTags.nonEmpty) PointerFile.write(fs,
+      new Path(s"$dir/$version/$MultiTags"),
+      chainTags.toSeq.sorted.mkString("\n"))
+    fenceAndFlip(fs, dir, version, Some(parent), keep)
   }
 
-  /** The shared commit tail of [[commitAppend]]/[[commitCompact]]:
-    * single-writer fence (if another writer moved `_CURRENT` since
-    * this one read its parent, flipping now would silently drop that
-    * writer's segment from the chain — fail loudly instead;
-    * narrow-window detection, not a lock, see the object doc), then
-    * the atomic pointer flip + keep-window GC.
+  /** The commit tail of [[commitAppend]], [[commitCompact]] and the
+    * CDC store: single-writer fence (if another writer moved
+    * `_CURRENT` since this one read its `parent` — None for a first
+    * commit — flipping now would silently drop that writer's commit;
+    * fail loudly instead; narrow-window detection, not a lock, see the
+    * object doc), then the atomic pointer flip + keep-window GC.
     */
-  private def fenceAndFlip(fs: FileSystem, dir: String, version: String,
-                           parent: String, keep: Int): Unit =
+  private[graft] def fenceAndFlip(fs: FileSystem, dir: String,
+                                  version: String, parent: Option[String],
+                                  keep: Int): Unit =
     // the fence is only loud-or-clean if no other writer flips INSIDE
     // the read→flip window: un-serialized, two same-JVM writers can
     // both read `parent`, both pass the require, and the second flip
@@ -197,12 +189,15 @@ object SegmentedIndex {
     flipLocks.computeIfAbsent(
       fs.makeQualified(new Path(dir)).toUri.normalize().toString,
       _ => new Object).synchronized {
-      val cur = PointerFile.read(fs, new Path(dir, CurrentPointer))
+      val cur =
+        try Some(PointerFile.read(fs, new Path(dir, CurrentPointer)))
+        catch { case _: java.io.FileNotFoundException => None }
       require(cur == parent,
         s"concurrent writer detected on $dir: _CURRENT moved " +
-          s"$parent -> $cur while this commit was prepared; the " +
-          "segmented-index protocol is single-writer — serialize " +
-          "writers and retry against the new current version")
+          s"${parent.getOrElse("(none)")} -> ${cur.getOrElse("(none)")} " +
+          "while this commit was prepared; the segmented-index protocol " +
+          "is single-writer — serialize writers and retry against the " +
+          "new current version")
       PointerFile.commitVersion(fs, new Path(dir), version, keep)
     }
 

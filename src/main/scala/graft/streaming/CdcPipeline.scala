@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.cdc.{Materialize, SchemaEvolution}
 import graft.obs.Trace
-import graft.sources.PointerFile
+import graft.sources.{PointerFile, SegmentedIndex}
 
 /** Streaming CDC materialization — the reference's deployed data plane
   * (Debezium topic → Hudi upsert, `/root/reference/README.md:22`)
@@ -39,14 +39,22 @@ import graft.sources.PointerFile
   * ordered output is what the partitioned write consumes, one file per
   * written bucket.
   *
-  * LAYOUT. The state store is a parquet table HASH-BUCKETED on the key:
+  * LAYOUT. The state store is a parquet table HASH-BUCKETED on the key,
+  * versioned under the shared [[graft.sources.SegmentedIndex]] protocol
+  * rooted at `batches/`:
   *
-  *   batches/<dir>/__bucket=<b>/  immutable data, one dir per commit,
-  *                                never reused (id + time + uuid)
+  *   batches/_CURRENT             the committed version's name
+  *   batches/<v>/__bucket=<b>/    immutable data, the buckets commit
+  *                                `v` wrote (`v-<millis>-<uuid>`,
+  *                                never reused)
+  *   batches/<v>/segments         v's bucket map: one
+  *                                `<dir>/__bucket=<b>` line per bucket
+  *                                holding data, in v or an older dir
+  *   batches/<v>/header           the retained timeline: seq, batch
+  *                                id, bucket count and row count of
+  *                                each retained commit, v last
   *   meta/schema                  the running union schema (grow-only,
   *                                types widened, never narrowed)
-  *   manifests/<seq>              one per commit: batch id, bucket
-  *                                count, row count, bucket → dir map
   *
   * A merge rewrites only the buckets its batch's keys hash into;
   * untouched buckets are not read, not rewritten, not even listed — the
@@ -61,22 +69,23 @@ import graft.sources.PointerFile
   * (the hysteresis keeps a store from flapping). `Config.numBuckets`
   * pins the count instead.
   *
-  * COMMIT PROTOCOL (single writer): (1) write the data to a never-reused
-  * dir; (2) grow `meta/schema` if the batch added or widened a column;
-  * (3) write the next manifest with ONE atomic
-  * [[graft.sources.PointerFile]] write — the commit point; (4) GC.
-  * Readers resolve the newest manifest. A
-  * crash before (3) leaves only an unreferenced dir (collected by the
-  * next commit's GC) and a harmless superset schema; a crash after (3)
-  * leaves the new version committed with its garbage uncollected. Since
-  * one manifest carries the whole layout, a layout change is exactly
-  * as atomic as an upsert.
+  * COMMIT PROTOCOL — the one all persisted artifacts share: (1) write
+  * the data to a fresh version dir; (2) grow `meta/schema` if the batch
+  * added or widened a column; (3) write the version's `segments` and
+  * `header`; (4) [[graft.sources.SegmentedIndex]]'s fenced `_CURRENT`
+  * flip — the commit point: a writer whose parent moved (a merge
+  * racing a [[compact]]) fails loudly instead of dropping the other's
+  * commit — and its keep-window GC (`keep` = [[Config.retainVersions]]),
+  * which keeps exactly the bucket dirs the retained versions name. A
+  * crash before (4) leaves an uncommitted dir (collected once it ages
+  * out) and a harmless superset schema; a crash after (4) leaves the
+  * new version committed. One bucket map carries the whole layout, so
+  * a layout change is exactly as atomic as an upsert.
   *
-  * The manifests are also the store's timeline: [[stateAsOf]] reads any
-  * commit inside the retention window ([[Config.retainVersions]]), GC
-  * deletes only dirs outside it — which also keeps the version a
-  * concurrent reader resolved just before a commit — and [[describe]]
-  * lists the retained commits as a DataFrame.
+  * The header is also the store's timeline: [[stateAsOf]] reads any
+  * retained commit, and the version a concurrent reader resolved just
+  * before a commit stays on disk (retention ≥ 2); [[describe]] lists the
+  * retained commits as a DataFrame.
   */
 object CdcPipeline {
 
@@ -90,11 +99,11 @@ object CdcPipeline {
       // Some(n) pins it — a store laid out under another count fails
       // loudly instead of splitting keys across two layouts
       numBuckets: Option[Int] = None,
-      // how many recent COMMITS stay fully readable: every bucket dir
-      // referenced by the last `retainVersions` manifests survives GC,
-      // giving bounded TIME TRAVEL ([[stateAsOf]]) and the
-      // concurrent-reader guard in one policy (≥ 2 keeps the version a
-      // reader resolved just before a commit)
+      // how many recent COMMITS stay fully readable: the keep window of
+      // the version GC — every bucket dir the last `retainVersions`
+      // versions reference survives — giving bounded TIME TRAVEL
+      // ([[stateAsOf]]) and the concurrent-reader guard in one policy
+      // (≥ 2 keeps the version a reader resolved just before a commit)
       retainVersions: Int = 2)
 
   /** Rows per bucket: ~1M CDC rows make a parquet file of tens to a
@@ -433,7 +442,7 @@ object CdcPipeline {
   /** One micro-batch, partition-scoped: reduce the batch to
     * latest-per-key, read ONLY the state buckets the batch's keys hash
     * into (pure path selection), merge LATEST-WINS BY EVENT TIME, and
-    * commit ONLY those buckets (a new data dir + one manifest) — or,
+    * commit ONLY those buckets (a new version dir + one flip) — or,
     * when the batch rewrites every data bucket anyway and the store
     * has outgrown its bucket count, all of it under the re-sized count.
     *
@@ -483,9 +492,10 @@ object CdcPipeline {
                           perBucket: Long): Unit = {
     val spark = latest.sparkSession
     val fs = fsOf(spark, statePath)
-    val head = Trace.phase("resolve")(newestManifest(fs, statePath))
-    head.foreach(requireLayout(statePath, _, cfg))
-    val modulus = head.map(_.buckets).orElse(cfg.numBuckets).getOrElse(1)
+    val head = Trace.phase("resolve")(resolve(fs, statePath))
+    head.foreach(h => requireLayout(statePath, h.top, cfg))
+    val modulus =
+      head.map(_.top.buckets).orElse(cfg.numBuckets).getOrElse(1)
     // per-bucket row counts of the batch under the CURRENT modulus: ≤
     // buckets rows, driver-side by design. The one job materializes the
     // cached `latest`, doubles as the empty-batch probe, and its total
@@ -497,15 +507,16 @@ object CdcPipeline {
     val touched = counts.keys.toSeq.sorted
     val buckets = cfg.numBuckets.getOrElse(head match {
       case None => bucketsFor(counts.values.sum, perBucket)
-      case Some(m) if m.dirs.keySet.subsetOf(counts.keySet) =>
+      case Some(h) if h.dirs.keySet.subsetOf(counts.keySet) =>
         // every bucket holding data is rewritten anyway, so re-sizing
         // costs nothing extra — but only when ≥ 2× off, so a store
         // near a size boundary keeps its layout. The row estimate
         // assumes every batch key is new (an upper bound).
-        val target = bucketsFor(m.rows + counts.values.sum, perBucket)
-        if (target >= 2 * m.buckets || 2 * target <= m.buckets) target
-        else m.buckets
-      case Some(m) => m.buckets
+        val target = bucketsFor(h.top.rows + counts.values.sum, perBucket)
+        if (target >= 2 * h.top.buckets || 2 * target <= h.top.buckets)
+          target
+        else h.top.buckets
+      case Some(h) => h.top.buckets
     })
     // a new modulus rewrites every bucket: all of state is read (the
     // batch covered every data bucket) and no old dir stays referenced
@@ -518,8 +529,8 @@ object CdcPipeline {
     // schema is stable and reads never assert a non-null a drifted file
     // can't honor
     val schema = grow(stored.getOrElse(new StructType()), latest.schema)
-    val readPaths = head.toSeq.flatMap(m =>
-      touched.flatMap(b => m.dirs.get(b).map(bucketPath(statePath, _, b))))
+    val readPaths = head.toSeq.flatMap(h =>
+      touched.flatMap(b => h.dirs.get(b).map(bucketPath(statePath, _, b))))
     val readObs = Observation()
     val writeObs = Observation()
     // state's bucket is recomputed from the key (deterministic) — files
@@ -535,7 +546,7 @@ object CdcPipeline {
       else spark.read.schema(schema).parquet(readPaths: _*)
         .observe(readObs, count(lit(1)))
         .unionByName(latest, allowMissingColumns = true)
-    val outDir = uniqueDir("b", batchId)
+    val version = SegmentedIndex.newVersionName()
     val (parts, allowed) =
       if (relayout) (buckets, 0 until buckets) else (touched.size, touched)
     // ONE SHUFFLE, ONE SORT. The input is hash-partitioned on its
@@ -562,40 +573,43 @@ object CdcPipeline {
         .write
         .partitionBy("__bucket")
         .mode("overwrite")
-        .parquet(s"$statePath/batches/$outDir"))
+        .parquet(s"$statePath/batches/$version"))
     // rows after = rows before − rows read + rows written
     val rowsRead = if (readPaths.isEmpty) 0L else observed(readObs)
     val kept =
       if (relayout) Map.empty[Int, String]
       else head.map(_.dirs).getOrElse(Map.empty[Int, String])
-    commit(fs, statePath, cfg, head, outDir, allowed.toSet, kept,
+    commit(fs, statePath, cfg, head, version, allowed.toSet, kept,
       batchId = batchId, buckets = buckets,
-      rows = head.fold(0L)(_.rows) - rowsRead + observed(writeObs),
+      rows = head.fold(0L)(_.top.rows) - rowsRead + observed(writeObs),
       newSchema = Some(schema).filterNot(stored.contains))
   }
 
-  /** Steps 2–4 of the commit protocol, once the data dir has landed:
-    * guard, grow `meta/schema`, write the manifest (the commit point),
-    * GC. `kept` is the part of the previous layout this commit leaves
-    * in place; the buckets written to `outDir` replace their entries.
+  /** Steps 2–4 of the commit protocol, once the version's data has
+    * landed: guard, grow `meta/schema`, write the version's bucket map
+    * and header, then the fenced `_CURRENT` flip (the commit point)
+    * with its keep-window GC. `kept` is the part of the previous
+    * layout this commit leaves in place; the buckets written to
+    * `version` replace their entries.
     */
   private def commit(fs: FileSystem, statePath: String, cfg: Config,
-                     head: Option[Manifest], outDir: String,
+                     head: Option[Head], version: String,
                      allowed: Set[Int], kept: Map[Int, String],
                      batchId: Long, buckets: Int, rows: Long,
                      newSchema: Option[StructType]): Unit = {
+    val dir = new Path(s"$statePath/batches/$version")
     // DETERMINISM GUARD (ADVICE r10): `latest` is cache()d, not
     // checkpointed — an eviction-forced recompute between the
     // touched-bucket collect and the write is only safe if the input
     // batch is replayable (foreachBatch sources are offset-pinned;
     // mergeBatch is also a public API callers can feed anything). If a
     // nondeterministic recompute emitted rows in buckets ABSENT from
-    // the touched set, no manifest would reference them and the rows
+    // the touched set, no bucket map would reference them and the rows
     // would be silently lost. One listStatus turns that into a loud
-    // failure BEFORE the manifest: the crash leaves only an
-    // unreferenced batch dir (GC'd later), state intact.
+    // failure BEFORE the flip: the crash leaves only an uncommitted
+    // version dir (GC'd later), state intact.
     val written = Trace.phase("bucket_guard") {
-      val w = fs.listStatus(new Path(s"$statePath/batches/$outDir"))
+      val w = fs.listStatus(dir)
         .map(_.getPath.getName)
         .filter(_.startsWith("__bucket="))
         .map(_.stripPrefix("__bucket=").toInt).toSeq
@@ -606,30 +620,43 @@ object CdcPipeline {
           s"${allowed.toSeq.sorted.mkString(",")} — the input to " +
           "mergeBatch must be replayable (offset-pinned source or " +
           "checkpointed DataFrame); state is untouched, the orphan " +
-          "batch dir will be GC'd")
+          "version dir will be GC'd")
       w
     }
-    // a crash between this and the manifest leaves meta a harmless
+    // a crash between this and the flip leaves meta a harmless
     // superset: readers null the extra columns and widen old files,
     // the same semantics the merge itself applies
     newSchema.foreach(s => Trace.phase("meta_schema")(
       PointerFile.write(fs, new Path(s"$statePath/meta/schema"), s.json)))
-    val m = Manifest(head.fold(0L)(_.seq + 1), batchId, buckets, rows,
-      kept ++ written.map(_ -> outDir))
-    Trace.phase("manifest")(writeManifest(fs, statePath, m))
-    Trace.phase("gc")(gc(fs, statePath, cfg.retainVersions, head.toSeq :+ m))
+    val keep = math.max(cfg.retainVersions, 1)
+    val timeline = (head.fold(Seq.empty[Commit])(_.timeline) :+
+      Commit(version, head.fold(0L)(_.top.seq + 1), batchId, buckets,
+        rows)).takeRight(keep)
+    val dirs = kept ++ written.map(_ -> version)
+    Trace.phase("manifest") {
+      PointerFile.write(fs, new Path(dir, "segments"),
+        dirs.toSeq.sorted.map { case (b, d) => s"$d/__bucket=$b" }
+          .mkString("\n"))
+      PointerFile.write(fs, new Path(dir, "header"),
+        timeline.map(c =>
+          s"${c.version} ${c.seq} ${c.batchId} ${c.buckets} ${c.rows}")
+          .mkString("\n"))
+      SegmentedIndex.fenceAndFlip(fs, s"$statePath/batches", version,
+        head.map(_.top.version), keep)
+    }
   }
 
   /** Read the current materialized state (live rows only — retained
     * tombstones are internal merge state), if any batch has committed.
-    * Resolves the newest manifest eagerly and scans lazily: the dirs it
+    * Resolves `_CURRENT` eagerly and scans lazily: the buckets it
     * resolved stay on disk for `retainVersions` commits.
     */
   def currentState(spark: SparkSession, statePath: String,
                    opCol: String = "op"): Option[DataFrame] = {
     val fs = fsOf(spark, statePath)
-    newestManifest(fs, statePath).filter(_.dirs.nonEmpty)
-      .map(m => live(scan(spark, fs, statePath, m.dirs), opCol))
+    current(fs, statePath).map(bucketMap(fs, statePath, _))
+      .filter(_.nonEmpty)
+      .map(dirs => live(scan(spark, fs, statePath, dirs), opCol))
   }
 
   /** Compaction: rewrite every bucket, dropping tombstones whose event
@@ -639,8 +666,10 @@ object CdcPipeline {
     * re-sizes the bucket count from the exact surviving row count (one
     * count job, a columnar scan of the op and order columns) and
     * commits through the SAME protocol as [[mergeBatch]], so it is
-    * crash-safe and can run between any two merges. Live rows and
-    * still-needed tombstones are re-laid-out unchanged.
+    * crash-safe and can run between any two merges; a merge that
+    * commits while it writes makes its flip fail with the
+    * concurrent-writer error, and a re-run compacts the new head.
+    * Live rows and still-needed tombstones are re-laid-out unchanged.
     */
   def compact(spark: SparkSession, statePath: String, cfg: Config,
               horizonUs: Long, batchId: Long): Unit =
@@ -650,11 +679,11 @@ object CdcPipeline {
                                  cfg: Config, horizonUs: Long,
                                  batchId: Long, perBucket: Long): Unit = {
     val fs = fsOf(spark, statePath)
-    val head = newestManifest(fs, statePath) match {
-      case Some(m) if m.dirs.nonEmpty => m
+    val head = resolve(fs, statePath) match {
+      case Some(h) if h.dirs.nonEmpty => h
       case _ => return
     }
-    requireLayout(statePath, head, cfg)
+    requireLayout(statePath, head.top, cfg)
     val tsCol = col(cfg.orderCols.head)
     // null-safe retention: a tombstone with UNKNOWN event time (null
     // ts) must be kept — a three-valued `op != d || ts >= horizon`
@@ -665,49 +694,44 @@ object CdcPipeline {
         coalesce(tsCol < horizonUs, lit(false))))
     val rows = kept.count()
     val buckets = cfg.numBuckets.getOrElse(bucketsFor(rows, perBucket))
-    // never-reused dir: a retried compact (same id) or a later merge
-    // batch must not overwrite a dir a retained manifest references
-    val outDir = uniqueDir("c", batchId)
+    val version = SegmentedIndex.newVersionName()
     Trace.phase("compact_write")(
       kept.withColumn("__bucket", bucketOf(cfg.keyCols, buckets))
         .repartition(buckets, col("__bucket")).write
         .partitionBy("__bucket")
         .mode("overwrite")
-        .parquet(s"$statePath/batches/$outDir"))
-    // a bucket left with no rows writes no dir and leaves the manifest
-    commit(fs, statePath, cfg, Some(head), outDir, (0 until buckets).toSet,
-      kept = Map.empty, batchId = batchId, buckets = buckets, rows = rows,
-      newSchema = None)
+        .parquet(s"$statePath/batches/$version"))
+    // a bucket left with no rows writes no dir and leaves the map
+    commit(fs, statePath, cfg, Some(head), version,
+      (0 until buckets).toSet, kept = Map.empty, batchId = batchId,
+      buckets = buckets, rows = rows, newSchema = None)
   }
 
-  /** The commit timeline: (commit sequence, batch id), oldest first. */
+  /** The commit timeline: (commit sequence, batch id) of the retained
+    * commits — the last `retainVersions` — oldest first.
+    */
   def commits(spark: SparkSession, statePath: String): Seq[(Long, Long)] =
-    manifests(fsOf(spark, statePath), statePath).map(m => m.seq -> m.batchId)
+    timeline(fsOf(spark, statePath), statePath).map(c => c.seq -> c.batchId)
 
   /** TIME TRAVEL: the materialized state as of the commit for
     * `batchId` (its most recent commit, if ids recur). Readable for
-    * the last `retainVersions` commits; older versions' bucket dirs
-    * are GC'd and the read fails fast with the missing paths rather
-    * than silently returning partial state.
+    * the last `retainVersions` commits; an older commit's buckets may
+    * be GC'd, so a read of one fails fast, naming the retained commits,
+    * rather than returning partial state.
     */
   def stateAsOf(spark: SparkSession, statePath: String, batchId: Long,
                 opCol: String = "op"): Option[DataFrame] = {
     val fs = fsOf(spark, statePath)
-    val all = manifests(fs, statePath)
+    val all = timeline(fs, statePath)
     val hit = all.reverse.find(_.batchId == batchId)
     require(hit.nonEmpty,
-      s"no commit for batchId=$batchId at $statePath " +
-        s"(commits: ${all.map(_.batchId).mkString(",")})")
-    val dirs = hit.get.dirs
+      s"no commit for batchId=$batchId at $statePath among the retained " +
+        s"commits (batch ids ${all.map(_.batchId).mkString(",")}): a " +
+        "store keeps its last retainVersions commits readable, older " +
+        "ones are beyond the retention window")
+    val dirs = bucketMap(fs, statePath, hit.get.version)
     if (dirs.isEmpty) None
-    else {
-      val missing = dataPaths(statePath, dirs)
-        .filterNot(p => fs.exists(new Path(p)))
-      require(missing.isEmpty,
-        s"state version for batchId=$batchId is beyond the retention " +
-          s"window (retainVersions) — GC removed: ${missing.mkString(", ")}")
-      Some(live(scan(spark, fs, statePath, dirs), opCol))
-    }
+    else Some(live(scan(spark, fs, statePath, dirs), opCol))
   }
 
   /** STATE DIFF between two commits — CDC on the materialized state:
@@ -747,105 +771,101 @@ object CdcPipeline {
         bVer.zip(cfg.orderCols).map { case (c, n) => c.as(s"to_$n") }: _*)
   }
 
-  /** What is in the store: one row per retained commit — every commit
-    * whose data dirs all still exist; the aged-out manifest GC keeps
-    * for diagnostics is left out — with its bucket count, row count
-    * (tombstones included), and the data files and bytes its version is
-    * made of. Built from the manifests plus one recursive listing.
+  /** What is in the store: one row per retained commit with its
+    * bucket count, row count (tombstones included), and the data files
+    * and bytes its version is made of — one listing per bucket dir.
     */
   def describe(spark: SparkSession, statePath: String): DataFrame = {
     val fs = fsOf(spark, statePath)
-    // (dir, bucket) → (files, bytes) of the parquet data under it
-    val sizes = scala.collection.mutable.Map.empty[(String, Int), (Long, Long)]
-    val batches = new Path(s"$statePath/batches")
-    if (fs.exists(batches)) {
-      val it = fs.listFiles(batches, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val bucketDir = f.getPath.getParent
-        if (!f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".") &&
-            bucketDir.getName.startsWith("__bucket=")) {
-          val key = (bucketDir.getParent.getName,
-            bucketDir.getName.stripPrefix("__bucket=").toInt)
-          val (n, b) = sizes.getOrElse(key, (0L, 0L))
-          sizes(key) = (n + 1, b + f.getLen)
-        }
-      }
+    val rows = timeline(fs, statePath).map { c =>
+      val files = dataPaths(statePath, bucketMap(fs, statePath, c.version))
+        .flatMap(p => fs.listStatus(new Path(p)))
+        .filter(f => !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+      (c.seq, c.batchId, c.buckets, c.rows, files.size.toLong,
+        files.map(_.getLen).sum)
     }
-    val rows = manifests(fs, statePath)
-      .filter(_.dirs.forall { case (b, d) => sizes.contains((d, b)) })
-      .map { m =>
-        val fb = m.dirs.toSeq.map { case (b, d) => sizes((d, b)) }
-        (m.seq, m.batchId, m.buckets, m.rows, fb.map(_._1).sum,
-          fb.map(_._2).sum)
-      }
     import spark.implicits._
     rows.toDF("seq", "batch_id", "buckets", "rows", "files", "bytes")
   }
 
-  /** One commit: the full bucket → data-dir map under modulus
-    * `buckets`, and the store's row count, tombstones included.
-    */
-  private final case class Manifest(seq: Long, batchId: Long, buckets: Int,
-                                    rows: Long, dirs: Map[Int, String])
+  /** Each retained version's bucket data paths, oldest first. */
+  private[streaming] def retainedBuckets(spark: SparkSession,
+                                         statePath: String)
+      : Seq[Seq[String]] = {
+    val fs = fsOf(spark, statePath)
+    timeline(fs, statePath).map(c =>
+      dataPaths(statePath, bucketMap(fs, statePath, c.version)))
+  }
 
-  private def requireLayout(statePath: String, m: Manifest,
+  /** One retained commit, as the head's header records it. */
+  private final case class Commit(version: String, seq: Long,
+                                  batchId: Long, buckets: Int, rows: Long)
+
+  /** The head's retained timeline (ending with it) and bucket map. */
+  private final case class Head(timeline: Seq[Commit],
+                                dirs: Map[Int, String]) {
+    def top: Commit = timeline.last
+  }
+
+  private def requireLayout(statePath: String, c: Commit,
                             cfg: Config): Unit =
-    cfg.numBuckets.foreach(n => require(n == m.buckets,
-      s"state at $statePath is laid out in ${m.buckets} buckets; " +
+    cfg.numBuckets.foreach(n => require(n == c.buckets,
+      s"state at $statePath is laid out in ${c.buckets} buckets; " +
         s"merging with numBuckets=$n would split keys across " +
         "incompatible bucket layouts"))
 
   private def fsOf(spark: SparkSession, statePath: String): FileSystem =
     new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** (seq, manifest path), ascending. */
-  private def listManifests(fs: FileSystem,
-                            statePath: String): Seq[(Long, Path)] =
-    try fs.listStatus(new Path(s"$statePath/manifests")).toSeq
-      .filter(s => s.getPath.getName.forall(_.isDigit))
-      .map(s => s.getPath.getName.toLong -> s.getPath)
-      .sortBy(_._1)
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  /** The version `_CURRENT` names, None before the first commit. A
+    * state dir in the previous layout (its own `manifests` dir, no
+    * `_CURRENT`) is refused, never read as empty.
+    */
+  private def current(fs: FileSystem, statePath: String): Option[String] =
+    try Some(PointerFile.read(fs,
+      new Path(s"$statePath/batches/${SegmentedIndex.CurrentPointer}")))
+    catch {
+      case _: java.io.FileNotFoundException =>
+        require(!fs.exists(new Path(statePath, "manifests")),
+          s"state at $statePath predates the versioned layout (commit " +
+            "manifests, no batches/_CURRENT); rebuild the store")
+        None
+    }
 
-  private def readManifest(fs: FileSystem, seq: Long, p: Path): Manifest = {
-    val (header, body) = PointerFile.read(fs, p).split("\n").toSeq
-      .partition(_.contains("="))
-    val h = header.map { l =>
-      val Array(k, v) = l.split("=", 2)
-      k -> v
-    }.toMap
-    require(h.contains("buckets") && h.contains("rows"),
-      s"manifest $p predates the sized bucket layout (no buckets/rows " +
-        "header); rebuild the store")
-    Manifest(seq, h("batchId").toLong, h("buckets").toInt, h("rows").toLong,
-      body.filter(_.nonEmpty).map { l =>
-        val Array(b, d) = l.split(" ", 2)
+  private def resolve(fs: FileSystem, statePath: String): Option[Head] =
+    current(fs, statePath).map(v =>
+      Head(header(fs, statePath, v), bucketMap(fs, statePath, v)))
+
+  /** The retained timeline, oldest first; empty before the first commit. */
+  private def timeline(fs: FileSystem, statePath: String): Seq[Commit] =
+    current(fs, statePath).fold(Seq.empty[Commit])(header(fs, statePath, _))
+
+  /** A version's `header`: one `<version> <seq> <batchId> <buckets>
+    * <rows>` line per retained commit, oldest first.
+    */
+  private def header(fs: FileSystem, statePath: String,
+                     version: String): Seq[Commit] =
+    PointerFile.read(fs, new Path(s"$statePath/batches/$version/header"))
+      .linesIterator.map { l =>
+        val Array(v, seq, id, b, rows) = l.split(" ")
+        Commit(v, seq.toLong, id.toLong, b.toInt, rows.toLong)
+      }.toSeq
+
+  /** A version's bucket → data-dir map: its `segments` file, one
+    * `<dir>/__bucket=<b>` line per bucket holding data.
+    */
+  private def bucketMap(fs: FileSystem, statePath: String,
+                        version: String): Map[Int, String] =
+    PointerFile.read(fs, new Path(s"$statePath/batches/$version/segments"))
+      .linesIterator.filter(_.nonEmpty).map { l =>
+        val Array(d, b) = l.split("/__bucket=")
         b.toInt -> d
-      }.toMap)
-  }
-
-  private def writeManifest(fs: FileSystem, statePath: String,
-                            m: Manifest): Unit =
-    PointerFile.write(fs, new Path(f"$statePath/manifests/${m.seq}%09d"),
-      (Seq(s"batchId=${m.batchId}", s"buckets=${m.buckets}",
-        s"rows=${m.rows}") ++
-        m.dirs.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" })
-        .mkString("\n"))
-
-  private def newestManifest(fs: FileSystem,
-                             statePath: String): Option[Manifest] =
-    listManifests(fs, statePath).lastOption
-      .map { case (s, p) => readManifest(fs, s, p) }
-
-  /** Every manifest still on disk, oldest first. */
-  private def manifests(fs: FileSystem, statePath: String): Seq[Manifest] =
-    listManifests(fs, statePath).map { case (s, p) => readManifest(fs, s, p) }
+      }.toMap
 
   /** The store's running-union schema (`meta/schema`, StructType JSON,
     * nullable), grown by every commit that widens it and written before
-    * the first manifest — the explicit read schema of every version.
+    * the first flip — the explicit read schema of every version.
     */
   private def metaSchema(fs: FileSystem, statePath: String): StructType =
     DataType.fromJson(PointerFile.read(fs,
@@ -894,11 +914,6 @@ object CdcPipeline {
     scala.concurrent.Await.result(o.future,
       scala.concurrent.duration.Duration(1, "minute")).getLong(0)
 
-  /** Never-reused output dir name: id + monotonic attempt stamp. */
-  private def uniqueDir(prefix: String, batchId: Long): String =
-    s"$prefix$batchId-${System.currentTimeMillis()}-${
-      java.util.UUID.randomUUID().toString.take(8)}"
-
   /** The state-layout path of one bucket's current data. */
   private def bucketPath(statePath: String, version: String,
                          bucket: Int): String =
@@ -907,40 +922,4 @@ object CdcPipeline {
   private def dataPaths(statePath: String,
                         dirs: Map[Int, String]): Seq[String] =
     dirs.toSeq.sortBy(_._1).map { case (b, d) => bucketPath(statePath, d, b) }
-
-  /** Delete data outside the retention window: every (bucket, dir)
-    * referenced by the LAST `retain` manifests survives; everything
-    * older goes — a dir nothing references in one delete, without
-    * listing it. Retention ≥ 2 also covers the concurrent-reader race
-    * ([[currentState]] resolves eagerly, scans lazily — the version a
-    * reader resolved just before a commit is still referenced by the
-    * previous manifest). `known` holds manifests already parsed.
-    */
-  private def gc(fs: FileSystem, statePath: String, retain: Int,
-                 known: Seq[Manifest]): Unit = {
-    val keepN = math.max(retain, 1)
-    val listed = listManifests(fs, statePath)
-    val parsed = known.map(m => m.seq -> m).toMap
-    val refs: Map[String, Set[Int]] = listed.takeRight(keepN)
-      .flatMap { case (s, p) =>
-        parsed.getOrElse(s, readManifest(fs, s, p)).dirs.toSeq
-      }
-      .groupBy(_._2).map { case (d, bs) => d -> bs.map(_._1).toSet }
-    // the commit just wrote under batches/, so it exists
-    fs.listStatus(new Path(s"$statePath/batches")).foreach { bd =>
-      refs.get(bd.getPath.getName) match {
-        case None => fs.delete(bd.getPath, true)
-        case Some(bs) => fs.listStatus(bd.getPath)
-          .filter(s => s.getPath.getName.startsWith("__bucket=") &&
-            !bs(s.getPath.getName.stripPrefix("__bucket=").toInt))
-          .foreach(s => fs.delete(s.getPath, true))
-      }
-    }
-    // MANIFEST GC: keep retain + 1 — the last `retain` readable commits
-    // PLUS the most recently aged-out one, whose manifest is what lets
-    // stateAsOf fail with the precise "beyond the retention window"
-    // diagnostic instead of a bare "no commit". The next sequence
-    // number derives from the NEWEST manifest, which is always kept.
-    listed.dropRight(keepN + 1).foreach { case (_, p) => fs.delete(p, false) }
-  }
 }

@@ -7,12 +7,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ops.SimilarityQueries
 import graft.sim.Similarity
+import graft.streaming.CdcPipeline
 import graft.text.Dedup
 
 /** Chaos + concurrency pass over the ONE segmented-index commit
   * protocol (r8 verdict items 5 and 7). All four persisted-index
-  * families ride [[SegmentedIndex]], so the whole matrix is one
-  * parameterized spec:
+  * families and the CDC state store ride [[SegmentedIndex]], so the
+  * whole matrix is one spec, parameterized over the index families,
+  * plus the CDC store's take on its two scenarios:
   *
   *  - KILLED WRITER (failure injected between data-file land and the
   *    `_CURRENT` flip): the index stays readable at the parent
@@ -212,6 +214,76 @@ class ProtocolChaosSpec extends SparkSpec {
         s"${f.name}: post-compact probe diverged")
       truth.unpersist()
     }
+  }
+
+  /** The CDC store's versions live under `<state>/batches`. One change
+    * batch: keys k0..k39 over ids [from, until), every 7th a delete.
+    */
+  private def cdcBatch(from: Long, until: Long, ts: Long): DataFrame =
+    spark.range(from, until).select(
+      concat(lit("k"), (col("id") % 40).cast("string")).as("key"),
+      col("id").as("event_id"), (col("id") + ts).as("ts_us"),
+      when(col("id") % 7 === 0, "d").otherwise("u").as("op"),
+      col("id").as("value"))
+
+  private val cdcCfg = CdcPipeline.Config(numBuckets = Some(4))
+
+  private def cdcState(state: String): DataFrame =
+    CdcPipeline.currentState(spark, state).get
+
+  test("cdc: a writer killed before the flip leaves the store readable " +
+       "at the parent; GC collects the litter, never a referenced bucket") {
+    val state = fresh("/tmp/graft_chaos_cdc") + "/s"
+    val twin = fresh("/tmp/graft_chaos_cdc_twin") + "/s"
+    val batches = s"$state/batches"
+    Seq(state, twin).foreach(s =>
+      CdcPipeline.mergeBatch(cdcBatch(0, 200, 0), s, cdcCfg, 0L))
+    val before = cdcState(state).cache()
+    assert(before.count() > 0)
+    val curBefore = SegmentedIndex.currentVersion(spark, batches)
+    val litter = plantKilledWriter(batches)
+    assert(SegmentedIndex.currentVersion(spark, batches) === curBefore)
+    assert(!chain(batches).exists(_.startsWith(litter)))
+    assertSame(before, cdcState(state),
+      "cdc: state diverged with killed-writer litter present")
+    // two one-key merges: each keeps 3 of the 4 buckets of the first
+    // version, which ages out pinned in part, and the litter ages out
+    Seq(state, twin).foreach { s =>
+      CdcPipeline.mergeBatch(cdcBatch(1000, 1001, 1000000), s, cdcCfg, 1L)
+      CdcPipeline.mergeBatch(cdcBatch(2001, 2002, 1000000), s, cdcCfg, 2L)
+    }
+    val fs = fsOf(batches)
+    SegmentedIndex.awaitGc()
+    assert(!fs.exists(new Path(s"$batches/$litter")),
+      "cdc: killed-writer litter survived GC")
+    val committed = fs.listStatus(new Path(batches)).map(_.getPath.getName)
+      .filter(v => v.startsWith("v-") &&
+        fs.exists(new Path(s"$batches/$v/${PointerFile.CommittedMarker}")))
+    assert(committed.length === 2)
+    committed.flatMap(SegmentedIndex.segments(spark, batches, _))
+      .foreach(b => assert(fs.exists(new Path(s"$batches/$b")),
+        s"cdc: GC collected referenced bucket $b"))
+    assertSame(cdcState(twin), cdcState(state),
+      "cdc: state diverged from the litter-free twin")
+    before.unpersist()
+  }
+
+  test("cdc: a currentState plan resolved before a compaction flip " +
+       "reads the pre-compaction rows after the flip and GC") {
+    val state = fresh("/tmp/graft_chaos_cdc") + "/s"
+    CdcPipeline.mergeBatch(cdcBatch(0, 200, 0), state, cdcCfg, 0L)
+    // one key: the head keeps 3 of the first version's 4 buckets
+    CdcPipeline.mergeBatch(cdcBatch(1000, 1001, 1000000), state, cdcCfg, 1L)
+    val truth = cdcState(state).cache()
+    assert(truth.count() > 0)
+    // the RACED plan: resolves _CURRENT and lists its files now,
+    // executes only after the flip + GC below
+    val inFlight = cdcState(state)
+    CdcPipeline.compact(spark, state, cdcCfg, Long.MaxValue, 2L)
+    SegmentedIndex.awaitGc()
+    assertSame(truth, inFlight, "cdc: in-flight read torn by the compaction")
+    assertSame(truth, cdcState(state), "cdc: post-compact read diverged")
+    truth.unpersist()
   }
 
   test("TWO live streaming sinks racing on one shingle index: any loser " +

@@ -11,15 +11,17 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSpec
 import graft.obs.Trace
+import graft.sources.SegmentedIndex
 
 /** Top-level so Spark's encoder codegen sees a static case class. */
 case class LayoutEv(key: String, event_id: Long, ts_us: Long, op: String,
                     value: Long)
 
-/** The CDC store's data-sized bucket layout and its one-manifest commit
-  * protocol: growth and shrink against a SQL replay, time travel and
-  * diffs across a layout change, a writer killed at each commit point,
-  * retention GC, `describe`, and type drift in the stored schema.
+/** The CDC store's data-sized bucket layout and its commit through the
+  * shared versioned protocol: growth and shrink against a SQL replay,
+  * time travel and diffs across a layout change, a writer killed at
+  * each commit point, a merge racing a compaction, retention GC,
+  * `describe`, and type drift in the stored schema.
   *
   * Stores here size with 4 rows per bucket (the package-private
   * `perBucket` argument) so splits happen at test sizes.
@@ -63,34 +65,27 @@ class CdcLayoutSpec extends SparkSpec {
     CdcPipeline.describe(spark, state).orderBy(desc("seq")).head()
       .getAs[Int]("buckets")
 
-  /** (seq, {(dir, bucket)}) of every manifest on disk. */
-  private def manifestRefs(state: String): Seq[(Long, Set[(String, Int)])] =
-    new java.io.File(s"$state/manifests").listFiles().toSeq
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-      .map { f =>
-        f.getName.toLong -> scala.io.Source.fromFile(f).getLines()
-          .filter(l => l.nonEmpty && !l.contains("="))
-          .map { l =>
-            val Array(b, d) = l.split(" ", 2)
-            (d, b.toInt)
-          }.toSet
-      }
+  /** The bucket data paths of every retained version, oldest first. */
+  private def refs(state: String): Seq[Set[String]] =
+    CdcPipeline.retainedBuckets(spark, state).map(_.toSet)
 
   /** Every row of the newest version, tombstones included. */
   private def everything(state: String): Set[(String, Long, String, Long)] =
-    spark.read.parquet(manifestRefs(state).last._2.toSeq.map {
-      case (d, b) => s"$state/batches/$d/__bucket=$b"
-    }: _*).select("key", "event_id", "op", "value").collect()
+    spark.read.parquet(refs(state).last.toSeq: _*)
+      .select("key", "event_id", "op", "value").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
       .toSet
 
-  /** Every (dir, bucket) data dir on disk. */
-  private def onDisk(state: String): Set[(String, Int)] =
+  /** Every bucket data dir on disk, once the version vacuum is idle. */
+  private def onDisk(state: String): Set[String] = {
+    SegmentedIndex.awaitGc()
     Option(new java.io.File(s"$state/batches").listFiles()).toSeq.flatten
+      .filter(_.isDirectory)
       .flatMap(d => d.listFiles().toSeq
         .filter(_.getName.startsWith("__bucket="))
-        .map(b => (d.getName, b.getName.stripPrefix("__bucket=").toInt)))
+        .map(b => s"$state/batches/${d.getName}/${b.getName}"))
       .toSet
+  }
 
   /** Events covering every key in [0, keys) once, plus `extra` random
     * ones, with ids from `id0` and timestamps in [t0, t0 + span).
@@ -264,24 +259,56 @@ class CdcLayoutSpec extends SparkSpec {
         if (phase == "manifest") {
           assert(everything(state) === after)
           assert(buckets(state) === buckets(twin))
-          assert(CdcPipeline.commits(spark, state).size ===
-            commitsBefore.size + 1)
+          // one commit more, within the retention window
+          assert(CdcPipeline.commits(spark, state) ===
+            (commitsBefore :+ (commitsBefore.last._1 + 1, 5L))
+              .takeRight(k.cfg.retainVersions))
         } else {
           assert(everything(state) === before)
           assert(buckets(state) === bucketsBefore)
           assert(CdcPipeline.commits(spark, state) === commitsBefore)
           // the orphaned data dir is the only trace
-          assert(onDisk(state).exists(_._1.drop(1).startsWith("5-")))
+          val orphans = onDisk(state) -- refs(state).flatten
+          assert(orphans.nonEmpty &&
+            orphans.map(p => new java.io.File(p).getParent).size === 1)
           // the re-delivered commit lands
           k.commit(state, 5L)
           assert(everything(state) === after)
         }
         // one more commit: GC leaves exactly what the retained
-        // manifests reference
+        // versions reference
         merge(Seq(LayoutEv("k1", 950L, 6000L, "u", 8L)), state, 6L, k.cfg)
-        val refs = manifestRefs(state).takeRight(2).flatMap(_._2).toSet
-        assert(onDisk(state) === refs)
+        assert(onDisk(state) === refs(state).takeRight(2).flatten.toSet)
       }
+    }
+  }
+
+  // a merge commits from inside a compaction: after its data write, and
+  // after its bucket guard, the last phase before its flip
+  Seq("compact_write", "bucket_guard").foreach { phase =>
+    test(s"a merge that commits after compact's $phase fails the " +
+         "compaction with the concurrent-writer error, never losing the " +
+         "merged row") {
+      val state = fresh("cdc_race")
+      merge(b0, state, 0L)
+      merge(grow, state, 1L)
+      val row = LayoutEv("k2", 990L, 9000L, "u", 42L)
+      var raced = false
+      val e = intercept[IllegalArgumentException](Trace.of(spark, p =>
+        if (p.name == phase && !raced) {
+          raced = true
+          merge(Seq(row), state, 2L)
+        })(CdcPipeline.compact(spark, state, CdcPipeline.Config(),
+          Long.MaxValue, 3L, PerBucket)))
+      assert(raced)
+      assert(e.getMessage.contains("concurrent writer detected"))
+      assert(current(state) === replay(b0 ++ grow :+ row))
+      assert(CdcPipeline.commits(spark, state).map(_._2) === Seq(1L, 2L))
+      // re-run against the new head: it commits and keeps the row
+      CdcPipeline.compact(spark, state, CdcPipeline.Config(),
+        Long.MaxValue, 3L, PerBucket)
+      assert(current(state) === replay(b0 ++ grow :+ row))
+      assert(CdcPipeline.commits(spark, state).map(_._2) === Seq(2L, 3L))
     }
   }
 
@@ -305,28 +332,34 @@ class CdcLayoutSpec extends SparkSpec {
     assert(rowsOf(CdcPipeline.stateAsOf(spark, state, 1L)) ===
       replay(b0 ++ grow))
     assert(current(state) === replay(b0 ++ grow ++ b2))
-    assert(onDisk(state) ===
-      manifestRefs(state).takeRight(2).flatMap(_._2).toSet)
+    assert(onDisk(state) === refs(state).takeRight(2).flatten.toSet)
     // a shrinking compaction ages the split commit out in turn
     CdcPipeline.compact(spark, state, cfg, Long.MaxValue, 3L, PerBucket)
     assert(!readable(1L) && readable(2L) && readable(3L))
     assert(current(state) === replay(b0 ++ grow ++ b2))
-    assert(onDisk(state) ===
-      manifestRefs(state).takeRight(2).flatMap(_._2).toSet)
-    // manifests: the retained two plus the aged-out one
-    assert(manifestRefs(state).size === 3)
+    assert(onDisk(state) === refs(state).takeRight(2).flatten.toSet)
+    // versions: the retained two; the aged-out one left no metadata
+    assert(refs(state).size === 2)
   }
 
   test("a store in the per-bucket-pointer format is refused with a " +
        "rebuild message, not read as empty or partial") {
     val state = fresh("cdc_legacy")
-    merge(b0, state, 0L)
-    // the previous format: manifests held only the batch id and the map
-    val m = Paths.get(s"$state/manifests/000000000")
-    val dir = onDisk(state).head
-    Files.writeString(m, s"batchId=0\n${dir._2} ${dir._1}")
+    // the manifest layout, in its per-bucket-pointer format: data under
+    // batches/<dir>/__bucket=<b>, a manifest holding only the batch id
+    // and the map, no batches/_CURRENT
+    import spark.implicits._
+    b0.toDF().write.parquet(s"$state/batches/b0-legacy/__bucket=0")
+    Files.createDirectories(Paths.get(s"$state/manifests"))
+    Files.writeString(Paths.get(s"$state/manifests/000000000"),
+      "batchId=0\n0 b0-legacy")
     Seq(() => CdcPipeline.currentState(spark, state),
-        () => merge(b0, state, 1L)).foreach { op =>
+        () => merge(b0, state, 1L),
+        () => CdcPipeline.compact(spark, state, CdcPipeline.Config(),
+          Long.MaxValue, 1L, PerBucket),
+        () => CdcPipeline.commits(spark, state),
+        () => CdcPipeline.stateAsOf(spark, state, 0L),
+        () => CdcPipeline.describe(spark, state)).foreach { op =>
       val e = intercept[IllegalArgumentException](op())
       assert(e.getMessage.contains("rebuild"))
     }
@@ -350,9 +383,8 @@ class CdcLayoutSpec extends SparkSpec {
     assert(rows.last.getAs[Long]("rows") ===
       (b0 ++ grow).map(_.key).distinct.size)
     // the newest version's files and bytes, by an independent walk
-    val newest = manifestRefs(state).last._2
-    val files = newest.toSeq.flatMap { case (dir, b) =>
-      Files.list(Paths.get(s"$state/batches/$dir/__bucket=$b")).iterator()
+    val files = refs(state).last.toSeq.flatMap { dir =>
+      Files.list(Paths.get(dir)).iterator()
         .asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     }
     assert(rows.last.getAs[Long]("files") === files.size)

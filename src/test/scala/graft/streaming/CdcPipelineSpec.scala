@@ -302,19 +302,10 @@ class CdcPipelineSpec extends SparkSpec {
     val liveBefore = CdcPipeline.currentState(spark, state).get
       .select("key", "event_id", "ts_us", "value", "props")
       .collect().map(_.toString).toSet
-    def tombstones(): Long = {
-      // internal state view: every bucket dir the newest manifest maps
-      val manifests = new java.io.File(s"$state/manifests").listFiles()
-        .filter(_.getName.forall(_.isDigit))
-      val newest = manifests.maxBy(_.getName.toLong)
-      val paths = scala.io.Source.fromFile(newest).getLines()
-        .filter(l => l.nonEmpty && !l.contains("="))
-        .map { l =>
-          val Array(b, v) = l.split(" ", 2)
-          s"$state/batches/$v/__bucket=$b"
-        }.toSeq
-      spark.read.parquet(paths: _*).filter(col("op") === "d").count()
-    }
+    // internal state view: every bucket dir the newest version maps
+    def tombstones(): Long =
+      spark.read.parquet(CdcPipeline.retainedBuckets(spark, state).last: _*)
+        .filter(col("op") === "d").count()
     val tombsBefore = tombstones()
     assert(tombsBefore > 0, "fixture needs at least one tombstone")
 
